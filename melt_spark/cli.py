@@ -58,8 +58,6 @@ def cmd_load(args) -> int:
     if args.broker:
         from .sources import mock_broker as mb
 
-        mb.register(spark)
-
         def send(msgs: DataFrame) -> None:
             mb.write_messages(msgs, args.broker)
     else:

@@ -1014,7 +1014,6 @@ def q_broker_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources import mock_broker as mb
 
-    mb.register(spark)
     root = tempfile.mkdtemp(prefix="melt_broker_q_")
     topic = "melt.main.nation"
     mb.create_topic(root, topic, partitions=3)

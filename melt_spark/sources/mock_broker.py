@@ -1,4 +1,5 @@
-"""File-backed mock message broker as a Spark 4 Python DataSource.
+"""File-backed mock message broker: native Parquet batch I/O, Python
+DataSource streaming.
 
 The sandbox has no Kafka broker or spark-sql-kafka jar, so the reference's
 core I/O boundary (consumer melt.clj:239-299, producer melt.clj:431-443)
@@ -10,24 +11,37 @@ surfaces Spark's Kafka connector has —
   * batch read with atomically-resolved starting/ending offsets (S8/T1),
   * incremental refresh from saved offset watermarks (T5),
   * a producer sink with key-hash partitioning and tombstones (S14/S15),
-  * a streaming tail (readStream) and a streaming sink (writeStream, T3),
+  * a streaming tail (readStream) and a streaming sink (writeStream, T3).
 
-all via ``spark.read/readStream/write/writeStream.format("melt_broker")``.
+Layout (mirrors a real broker's log, scaled down):
+  <root>/<topic>/.meta.json              {"partitions": N}
+  <root>/<topic>/p<k>/seg-<uuid>.parquet one producer task's records,
+                                         columns k string, v string, ts bigint
+  <root>/<topic>/p<k>/manifest.json      {"segments": [{file, base, count}],
+                                          "end": next_offset,
+                                          "batches": [stream batch ids]}
 
-Design (mirrors a real broker's log, scaled down):
-  <root>/<topic>/.meta.json            {"partitions": N}
-  <root>/<topic>/p<k>/seg-<uuid>.jsonl one producer-task's records
-  <root>/<topic>/p<k>/manifest.json    {"segments": [{file, base, count}],
-                                        "end": next_offset,
-                                        "batches": [stream batch ids]}
-
-Segments are written by executor tasks (invisible until committed); the
-driver-side ``commit`` assigns base offsets and atomically replaces the
-manifest (os.replace), so readers always see a consistent prefix of the log
-— the same visibility contract as Kafka's high watermark. Offsets are dense
-per partition; a key is hashed (crc32, stand-in for Kafka's murmur2) to a
-fixed partition, so per-key order within a producer task is preserved —
+A segment's records hold offsets base .. base+count-1 in file row order.
+Segments are invisible until committed: the driver-side commit assigns base
+offsets in producer-task order and atomically replaces the manifest
+(os.replace), so readers always see a consistent prefix of the log — the
+same visibility contract as Kafka's high watermark. Offsets are dense per
+partition from 0; a key is hashed (crc32, stand-in for Kafka's murmur2) to
+a fixed partition, so per-key order within a producer task is preserved —
 Kafka's per-producer guarantee.
+
+Batch I/O is Spark's own Parquet I/O, with no Python worker on the data
+path. ``read_topics`` resolves the offset ranges from the manifests on the
+driver, then runs one Parquet scan and derives each record's offset from
+``_metadata.row_index``. ``write_messages`` hashes keys to partitions in
+SQL, writes the rows partitioned by (topic, partition) into a staging
+directory and publishes the files as segments from the driver. There is no
+batch ``format("melt_broker")``.
+
+Streaming goes through a Spark 4 Python DataSource, because a custom
+streaming source needs one: ``readStream``/``writeStream.format(
+"melt_broker")`` after ``register(spark)``. It reads and writes the same
+Parquet segments through pyarrow.
 
 On a real cluster the root must be shared storage; this is a test double
 for CI and local development, not a Kafka replacement. The production path
@@ -39,22 +53,34 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 import uuid
 import zlib
 from dataclasses import dataclass
 from typing import Iterator, Sequence
+from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import (DataSource, DataSourceReader,
-                                    DataSourceStreamWriter, DataSourceWriter,
-                                    InputPartition,
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.datasource import (DataSource, DataSourceStreamWriter,
                                     SimpleDataSourceStreamReader,
                                     WriterCommitMessage)
 
 ENVELOPE_SCHEMA = ("topic string, partition int, offset bigint,"
                    " timestamp bigint, key string, value string")
 
-WRITE_COLS = ("topic", "key", "value")
+SEGMENT_SCHEMA = "k string, v string, ts bigint"
+_ARROW_SEGMENT = pa.schema([("k", pa.string()), ("v", pa.string()),
+                            ("ts", pa.int64())])
+
+# write_messages' staging layout, as Spark's partitioned write lays it out:
+# topic=<topic>/__p=<partition>/part-<task>-<job uuid>.c<file>.<codec>.parquet
+_TOPIC_DIR = re.compile(r"topic=(.+)")
+_PART_DIR = re.compile(r"__p=(\d+)")
+_PART_FILE = re.compile(r"part-(\d+)-.*\.c(\d+)\..*parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -115,32 +141,35 @@ def end_offsets(root: str, topic: str) -> dict[int, int]:
             for p in range(topic_partitions(root, topic))}
 
 
+def _overlaps(man: dict, start: int, end: int) -> Iterator[tuple]:
+    """(file, base, lo, hi) for each segment of a manifest holding offsets
+    in [start, end); [lo, hi) is the part of the segment inside it."""
+    for seg in man["segments"]:
+        base = seg["base"]
+        lo, hi = max(start, base), min(end, base + seg["count"])
+        if lo < hi:
+            yield seg["file"], base, lo, hi
+
+
 def _scan_segments(root: str, topic: str, part: int, start: int,
                    end: int) -> Iterator[tuple]:
     """Yield envelope tuples for offsets in [start, end)."""
     man = _load_manifest(root, topic, part)
-    for seg in man["segments"]:
-        base, count = seg["base"], seg["count"]
-        if base + count <= start or base >= end:
-            continue
-        path = os.path.join(_part_dir(root, topic, part), seg["file"])
-        with open(path) as f:
-            for i, line in enumerate(f):
-                off = base + i
-                if off < start or off >= end:
-                    continue
-                rec = json.loads(line)
-                yield (topic, part, off, rec["ts"], rec["k"], rec["v"])
+    for fname, base, lo, hi in _overlaps(man, start, end):
+        path = os.path.join(_part_dir(root, topic, part), fname)
+        cols = (pq.read_table(path, schema=_ARROW_SEGMENT)
+                .slice(lo - base, hi - lo).to_pydict())
+        for off, k, v, ts in zip(range(lo, hi), cols["k"], cols["v"],
+                                 cols["ts"]):
+            yield (topic, part, off, ts, k, v)
 
 
 # ---------------------------------------------------------------------------
 # offset-range resolution (driver side — the atomic snapshot that lets the
 # batch source drop the reference's "read twice" workaround, melt.clj:342-351)
 
-def _resolve_range(root: str, topic: str, part: int, starting, ending,
+def _resolve_range(man_end: int, topic: str, part: int, starting, ending,
                    ) -> tuple[int, int]:
-    man_end = _load_manifest(root, topic, part)["end"]
-
     def side(spec, default_earliest: bool) -> int:
         if spec == "earliest":
             return 0
@@ -161,22 +190,20 @@ def _parse_offsets_spec(spec: str):
     return json.loads(spec)  # Kafka JSON form {"topic": {"0": off}}
 
 
+def _sql_str(s: str) -> str:
+    """A Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 # ---------------------------------------------------------------------------
-# the DataSource
-
-@dataclass
-class _ScanPart(InputPartition):
-    topic: str
-    part: int
-    start: int
-    end: int
-
+# streaming surfaces (Python DataSource)
 
 class MeltBrokerDataSource(DataSource):
-    """format("melt_broker") — options:
-    path (broker root), subscribe (comma-separated topics; readers),
-    startingOffsets / endingOffsets ('earliest'|'latest'|Kafka JSON form;
-    batch reader), partitions (writer topic auto-create, default 4)."""
+    """readStream/writeStream.format("melt_broker") — options:
+    path (broker root), subscribe (comma-separated topics; stream reader),
+    startingOffsets ('earliest'|'latest'; stream reader), partitions
+    (stream writer topic auto-create, default 4). Batch reads and writes
+    go through read_topics/write_messages, not this source."""
 
     @classmethod
     def name(cls) -> str:
@@ -185,50 +212,11 @@ class MeltBrokerDataSource(DataSource):
     def schema(self) -> str:
         return ENVELOPE_SCHEMA
 
-    def reader(self, schema) -> "MeltBrokerReader":
-        return MeltBrokerReader(self.options)
-
     def simpleStreamReader(self, schema) -> "MeltBrokerStreamReader":
         return MeltBrokerStreamReader(self.options)
 
-    def writer(self, schema, overwrite: bool) -> "MeltBrokerWriter":
-        if overwrite:
-            raise ValueError("melt_broker is append-only (a commit log); "
-                             "overwrite/truncate is not supported")
-        return MeltBrokerWriter(self.options)
-
     def streamWriter(self, schema, overwrite: bool) -> "MeltBrokerStreamWriter":
         return MeltBrokerStreamWriter(self.options)
-
-
-class MeltBrokerReader(DataSourceReader):
-    """Bounded snapshot read (S8/T1). Offset ranges are resolved ONCE at
-    planning time from the manifests — concurrent producers don't move the
-    goalposts mid-read."""
-
-    def __init__(self, options):
-        self.root = options["path"]
-        self.topics = [t for t in options.get("subscribe", "").split(",") if t]
-        starting = _parse_offsets_spec(options.get("startingoffsets",
-                                                   "earliest"))
-        ending = _parse_offsets_spec(options.get("endingoffsets", "latest"))
-        self.ranges: list[_ScanPart] = []
-        for topic in self.topics:
-            for p in range(topic_partitions(self.root, topic)):
-                s, e = _resolve_range(self.root, topic, p, starting, ending)
-                if e > s:
-                    self.ranges.append(_ScanPart(topic, p, s, e))
-
-    def partitions(self):
-        # one Spark input partition per broker partition slice — the same
-        # parallelism contract as the Kafka connector
-        return self.ranges or [_ScanPart("", -1, 0, 0)]
-
-    def read(self, partition: _ScanPart):
-        if partition.part < 0:
-            return iter(())
-        return _scan_segments(self.root, partition.topic, partition.part,
-                              partition.start, partition.end)
 
 
 class MeltBrokerStreamReader(SimpleDataSourceStreamReader):
@@ -283,10 +271,10 @@ class _SegmentMsg(WriterCommitMessage):
 
 def _write_segments(root: str, default_partitions: int,
                     iterator: Iterator) -> _SegmentMsg:
-    """Executor side: bucket rows by (topic, key-hash partition), append one
+    """Executor side: bucket rows by (topic, key-hash partition), write one
     segment file per bucket. Files are invisible until the driver commits
     them into the manifest."""
-    buckets: dict[tuple[str, int], list[dict]] = {}
+    buckets: dict[tuple[str, int], dict[str, list]] = {}
     nparts: dict[str, int] = {}
     for row in iterator:
         topic = row["topic"]
@@ -300,16 +288,17 @@ def _write_segments(root: str, default_partitions: int,
                 nparts[topic] = topic_partitions(root, topic)
         part = key_partition(row["key"], nparts[topic])
         ts = row["timestamp"] if "timestamp" in row.__fields__ else None
-        buckets.setdefault((topic, part), []).append(
-            {"k": row["key"], "v": row["value"], "ts": ts})
+        cols = buckets.setdefault((topic, part),
+                                  {"k": [], "v": [], "ts": []})
+        cols["k"].append(row["key"])
+        cols["v"].append(row["value"])
+        cols["ts"].append(ts)
     segments = []
-    for (topic, part), recs in sorted(buckets.items()):
-        fname = f"seg-{uuid.uuid4().hex}.jsonl"
-        path = os.path.join(_part_dir(root, topic, part), fname)
-        with open(path, "w") as f:
-            for r in recs:
-                f.write(json.dumps(r) + "\n")
-        segments.append((topic, part, fname, len(recs)))
+    for (topic, part), cols in sorted(buckets.items()):
+        fname = f"seg-{uuid.uuid4().hex}.parquet"
+        pq.write_table(pa.table(cols, schema=_ARROW_SEGMENT),
+                       os.path.join(_part_dir(root, topic, part), fname))
+        segments.append((topic, part, fname, len(cols["k"])))
     return _SegmentMsg(segments=segments)
 
 
@@ -364,28 +353,11 @@ def _abort_segments(root: str, messages) -> None:
                 pass
 
 
-class MeltBrokerWriter(DataSourceWriter):
-    """Producer sink (S14): at-least-once per save() call, per-key ordering
-    within a task (Kafka's per-producer contract). NULL value = tombstone
-    (S15) — stored, not dropped; compaction interprets it."""
-
-    def __init__(self, options):
-        self.root = options["path"]
-        self.default_partitions = int(options.get("partitions", 4))
-
-    def write(self, iterator):
-        return _write_segments(self.root, self.default_partitions, iterator)
-
-    def commit(self, messages):
-        _commit_segments(self.root, messages, None)
-
-    def abort(self, messages):
-        _abort_segments(self.root, messages)
-
-
 class MeltBrokerStreamWriter(DataSourceStreamWriter):
     """writeStream sink (T3): per-micro-batch commit with batch-id dedup, so
-    a restarted query that replays its last batch appends nothing twice."""
+    a restarted query that replays its last batch appends nothing twice.
+    NULL value = tombstone (S15) — stored, not dropped; compaction
+    interprets it."""
 
     def __init__(self, options):
         self.root = options["path"]
@@ -402,44 +374,168 @@ class MeltBrokerStreamWriter(DataSourceStreamWriter):
 
 
 def register(spark: SparkSession) -> None:
+    """Register the streaming source and sink (readStream/writeStream
+    .format("melt_broker")); batch I/O needs no registration."""
     spark.dataSource.register(MeltBrokerDataSource)
 
 
 # ---------------------------------------------------------------------------
-# kafka.py-mirroring convenience API (swap module, keep call sites)
+# batch surfaces: Spark's native Parquet I/O (kafka.py-mirroring API —
+# swap module, keep call sites)
 
 def read_topics(spark: SparkSession, broker_path: str, topics: Sequence[str],
                 starting_offsets: str = "earliest",
                 ending_offsets: str = "latest") -> DataFrame:
-    """Bounded snapshot (mirrors kafka.read_topics; S8/T1)."""
-    return (spark.read.format("melt_broker")
-            .option("path", broker_path)
-            .option("subscribe", ",".join(topics))
-            .option("startingOffsets", starting_offsets)
-            .option("endingOffsets", ending_offsets)
-            .load())
+    """Bounded snapshot (mirrors kafka.read_topics; S8/T1). Offset ranges
+    are resolved ONCE, here, from the manifests — concurrent producers
+    don't move the goalposts mid-read. One Parquet scan reads every segment
+    that overlaps a range; a record's offset is its segment's base plus its
+    row index in the file."""
+    starting = _parse_offsets_spec(starting_offsets)
+    ending = _parse_offsets_spec(ending_offsets)
+    segs = []  # (dir, file, topic, part, base, lo, hi)
+    for topic in topics:
+        for p in range(topic_partitions(broker_path, topic)):
+            man = _load_manifest(broker_path, topic, p)
+            start, end = _resolve_range(man["end"], topic, p, starting,
+                                        ending)
+            segs.extend((_part_dir(broker_path, topic, p), fname, topic, p,
+                         base, lo, hi)
+                        for fname, base, lo, hi in _overlaps(man, start, end))
+    if not segs:
+        return spark.createDataFrame([], ENVELOPE_SCHEMA)
+    # one map literal, file name -> segment: a single parsed expression
+    # keeps planning flat in the number of segments
+    seg_map = F.expr("map(" + ", ".join(
+        f"{_sql_str(f)}, named_struct('topic', {_sql_str(t)},"
+        f" 'partition', {p}, 'base', {base}L, 'lo', {lo}L, 'hi', {hi}L)"
+        for _d, f, t, p, base, lo, hi in segs) + ")")
+    seg = seg_map[F.col("_metadata.file_name")]
+    offset = seg["base"] + F.col("_metadata.row_index")
+    # Scan the partition directories, not the files: listing a few
+    # directories needs no Spark job however many segments they hold. The
+    # filter on the file name alone is evaluated per file at planning, so
+    # files no range names (segments outside it, uncommitted files) are
+    # never opened.
+    return (spark.read.schema(SEGMENT_SCHEMA)
+            .option("pathGlobFilter", "seg-*.parquet")
+            .parquet(*sorted({s[0] for s in segs}))
+            .where(seg.isNotNull())
+            .where((offset >= seg["lo"]) & (offset < seg["hi"]))
+            .select(seg["topic"].alias("topic"),
+                    seg["partition"].alias("partition"),
+                    offset.alias("offset"),
+                    F.col("ts").alias("timestamp"),
+                    F.col("k").alias("key"),
+                    F.col("v").alias("value")))
+
+
+def _topic_counts(root: str) -> dict[str, int]:
+    """Partition count of every topic under the root."""
+    return {t: topic_partitions(root, t) for t in os.listdir(root)
+            if os.path.exists(_meta_path(root, t))}
+
+
+def _key_partition_col(counts: dict[str, int], default: int) -> Column:
+    """key_partition as a SQL expression: pmod(crc32(utf-8 key), n), where
+    n is the topic's partition count (`default` for a topic not yet
+    created); NULL keys go to partition 0."""
+    n = F.lit(default)
+    if counts:
+        n = F.coalesce(F.expr("map(" + ", ".join(
+            f"{_sql_str(t)}, {c}" for t, c in counts.items())
+            + ")")[F.col("topic")], n)
+    return (F.when(F.col("key").isNull(), F.lit(0))
+            .otherwise(F.pmod(F.crc32(F.encode("key", "UTF-8")), n)))
+
+
+def _staged(path: str, pattern: re.Pattern) -> list[tuple]:
+    """(path, match) for each entry of a staging directory whose name
+    matches `pattern`. Hidden names (a leading '.' or '_', as on Spark's
+    .crc sidecars and _SUCCESS marker) are skipped, as Spark's own reader
+    skips them; any other name stops the publish, so no staged row is
+    dropped silently."""
+    out = []
+    for name in os.listdir(path):
+        m = pattern.fullmatch(name)
+        if m:
+            out.append((os.path.join(path, name), m))
+        elif not name.startswith((".", "_")):
+            raise RuntimeError(f"melt_broker: unexpected staged file "
+                               f"{os.path.join(path, name)!r}")
+    return out
+
+
+def _publish_stage(root: str, stage: str, counts: dict[str, int],
+                   default: int) -> None:
+    """Driver side: move the staged files into their partition directories
+    as segments and commit them, in producer-task order."""
+    staged = []  # ((task, file), topic, part, path)
+    for tdir, t in _staged(stage, _TOPIC_DIR):
+        topic = unquote(t[1])
+        if topic == "__HIVE_DEFAULT_PARTITION__":
+            raise ValueError("melt_broker: a message has a NULL or "
+                             "empty topic")
+        for pdir, p in _staged(tdir, _PART_DIR):
+            for path, f in _staged(pdir, _PART_FILE):
+                staged.append(((int(f[1]), int(f[2])), topic, int(p[1]),
+                               path))
+    staged.sort(key=lambda s: s[0])
+    for topic in {s[1] for s in staged}:
+        create_topic(root, topic, default)
+        if topic_partitions(root, topic) != counts.get(topic, default):
+            raise RuntimeError(f"melt_broker: topic {topic!r} changed its "
+                               "partition count during the write")
+    msg = _SegmentMsg(segments=[])
+    try:
+        for _order, topic, part, path in staged:
+            count = pq.read_metadata(path).num_rows
+            fname = f"seg-{uuid.uuid4().hex}.parquet"
+            os.replace(path, os.path.join(_part_dir(root, topic, part),
+                                          fname))
+            msg.segments.append((topic, part, fname, count))
+    except BaseException:
+        _abort_segments(root, [msg])
+        raise
+    _commit_segments(root, [msg], None)
 
 
 def write_messages(messages: DataFrame, broker_path: str,
                    partitions: int = 4) -> None:
-    """Producer sink (mirrors kafka.write_messages; S14/S15)."""
-    (messages.select(*WRITE_COLS)
-     .write.format("melt_broker")
-     .option("path", broker_path)
-     .option("partitions", partitions)
-     .mode("append")
-     .save())
+    """Producer sink (mirrors kafka.write_messages; S14/S15): at-least-once
+    per call, per-key ordering within a producer task (Kafka's
+    per-producer contract). NULL value = tombstone (S15) — stored, not
+    dropped; compaction interprets it. New topics are created with
+    `partitions` partitions. A failed job publishes nothing."""
+    os.makedirs(broker_path, exist_ok=True)
+    counts = _topic_counts(broker_path)
+    stage = os.path.join(broker_path, f".stage-{uuid.uuid4().hex}")
+    try:
+        (messages
+         .select("topic",
+                 _key_partition_col(counts, partitions).alias("__p"),
+                 F.col("key").alias("k"), F.col("value").alias("v"),
+                 F.lit(None).cast("bigint").alias("ts"))
+         # keep each task's row order inside its (topic, partition) files
+         .sortWithinPartitions("topic", "__p",
+                               F.monotonically_increasing_id())
+         .write.partitionBy("topic", "__p").parquet(stage))
+        _publish_stage(broker_path, stage, counts, partitions)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
 
 
 def count_topic(spark: SparkSession, broker_path: str, topic: str) -> int:
-    """S10: message count currently in a topic."""
-    return read_topics(spark, broker_path, [topic]).count()
+    """S10: message count currently in a topic. Offsets are dense from 0
+    and nothing is deleted, so it is the sum of the end offsets."""
+    return sum(end_offsets(broker_path, topic).values())
 
 
 def tail_topics(spark: SparkSession, broker_path: str,
                 topics: Sequence[str],
                 starting_offsets: str = "earliest") -> DataFrame:
-    """Continuous tail (S9): a streaming DataFrame of the record envelope."""
+    """Continuous tail (S9): a streaming DataFrame of the record envelope.
+    Needs register(spark)."""
     return (spark.readStream.format("melt_broker")
             .option("path", broker_path)
             .option("subscribe", ",".join(topics))

@@ -6,7 +6,10 @@ Covers SURVEY §2 S8/S10/S14/S15/T1/T3/T5 as *running* code (round 1 could
 only restate them — no broker in the sandbox)."""
 
 import json
+import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -166,3 +169,168 @@ def test_stream_writer_idempotent_batches(spark, broker, tmp_path):
         Row(topic="melt.sink", key="s0", value="dup")]))
     mb._commit_segments(broker, [msg], 0)  # batch 0 already in ledger
     assert mb.end_offsets(broker, "melt.sink") == man_before
+
+
+def _envelope(spark, root, topic, **kw):
+    return sorted(tuple(r) for r in mb.read_topics(spark, root, [topic],
+                                                   **kw).collect())
+
+
+def test_count_topic_is_the_manifest_sum(spark, broker):
+    """count_topic answers from the end offsets; offsets are dense from 0
+    and nothing is deleted, so it equals the records a full read returns."""
+    for t in ("melt.t1", "melt.t2", "melt.t3"):
+        assert (mb.count_topic(spark, broker, t)
+                == mb.read_topics(spark, broker, [t]).count())
+
+
+def test_versions_of_a_key_keep_input_order(spark, broker):
+    """Three versions of one key in ONE producer task get increasing
+    offsets, in input order."""
+    mb.create_topic(broker, "melt.order", partitions=2)
+    rows = [("melt.order", "a", str(v)) for v in (3, 1, 2)]
+    mb.write_messages(_msgs(spark, rows).coalesce(1), broker)
+    got = (mb.read_topics(spark, broker, ["melt.order"])
+           .orderBy("offset").collect())
+    assert [r.value for r in got] == ["3", "1", "2"]
+    assert [r.offset for r in got] == [0, 1, 2]
+
+
+def test_write_spans_existing_and_new_topic(spark, broker):
+    """One write into an existing 2-partition topic and a topic it creates
+    with partitions=4: every row lands on key_partition(key, that topic's
+    count); NULL keys land on partition 0; offsets stay dense."""
+    mb.create_topic(broker, "melt.old2", partitions=2)
+    rows = [(t, None if i % 10 == 0 else f"k{i}", str(i))
+            for t in ("melt.old2", "melt.new4") for i in range(40)]
+    mb.write_messages(_msgs(spark, rows), broker, partitions=4)
+    assert mb.topic_partitions(broker, "melt.new4") == 4
+    for topic, n in (("melt.old2", 2), ("melt.new4", 4)):
+        env = mb.read_topics(spark, broker, [topic]).collect()
+        assert len(env) == 40
+        by_part: dict = {}
+        for r in env:
+            assert r.partition == mb.key_partition(r.key, n)
+            if r.key is None:
+                assert r.partition == 0
+            by_part.setdefault(r.partition, []).append(r.offset)
+        for p, offs in by_part.items():
+            assert sorted(offs) == list(range(mb.end_offsets(broker,
+                                                             topic)[p]))
+
+
+def test_failed_write_publishes_nothing(spark, broker):
+    """A job that fails mid-write leaves the manifests and the broker root
+    as they were: no new offsets, no staging directory."""
+    before = mb.end_offsets(broker, "melt.t1")
+    rows = [("melt.t1", f"f{i}", str(i)) for i in range(50)]
+    bad = _msgs(spark, rows).withColumn(
+        "value", F.when(F.col("key") == "f25", F.raise_error(F.lit("boom")))
+        .otherwise(F.col("value")))
+    with pytest.raises(Exception, match="boom"):
+        mb.write_messages(bad, broker)
+    assert mb.end_offsets(broker, "melt.t1") == before
+    assert not [d for d in os.listdir(broker) if d.startswith(".stage-")]
+
+
+def test_read_window_inside_a_segment(spark, broker):
+    """startingOffsets/endingOffsets that cut through one segment return
+    exactly the rows _scan_segments yields for that window."""
+    mb.create_topic(broker, "melt.win", partitions=1)
+    mb.write_messages(_msgs(spark, [("melt.win", f"w{i}", str(i))
+                                    for i in range(10)]).coalesce(1), broker)
+    assert len(mb._load_manifest(broker, "melt.win", 0)["segments"]) == 1
+    got = _envelope(spark, broker, "melt.win",
+                    starting_offsets=json.dumps({"melt.win": {"0": 3}}),
+                    ending_offsets=json.dumps({"melt.win": {"0": 7}}))
+    want = sorted(mb._scan_segments(broker, "melt.win", 0, 3, 7))
+    assert got == want
+    assert [r[2] for r in got] == [3, 4, 5, 6]
+
+
+def test_partial_read_opens_only_overlapping_segments(spark, broker):
+    """A window over a topic with many segments opens only the segments
+    that overlap it. Every other file in the partition directory, and one
+    written but never committed, is overwritten with bytes that are not
+    Parquet; the read still returns exactly the window's records."""
+    mb.create_topic(broker, "melt.many", partitions=1)
+    for i in range(40):
+        msg = mb._write_segments(broker, 1, iter([
+            Row(topic="melt.many", key=f"m{j}", value=f"{i}:{j}")
+            for j in range(3)]))
+        mb._commit_segments(broker, [msg], None)
+    mb._write_segments(broker, 1, iter([   # written, never committed
+        Row(topic="melt.many", key="ghost", value="x")]))
+    want = sorted(mb._scan_segments(broker, "melt.many", 0, 100, 107))
+    man = mb._load_manifest(broker, "melt.many", 0)
+    keep = {f for f, *_ in mb._overlaps(man, 100, 107)}
+    assert len(keep) == 3
+    pdir = mb._part_dir(broker, "melt.many", 0)
+    for name in os.listdir(pdir):
+        if name.startswith("seg-") and name not in keep:
+            with open(os.path.join(pdir, name), "wb") as f:
+                f.write(b"not parquet")
+    got = _envelope(spark, broker, "melt.many",
+                    starting_offsets=json.dumps({"melt.many": {"0": 100}}),
+                    ending_offsets=json.dumps({"melt.many": {"0": 107}}))
+    assert got == want
+    assert [r[2] for r in got] == list(range(100, 107))
+
+
+ODD_VALUES = ['{"q":"say \\"hi\\""}', "back\\slash", "two\nlines\r\n",
+              "ctl\x00\x01\x1f\x7f", "tab\there", "naïve Ωμέγα 中文",
+              "emoji 😀👍🏽", "'single'", ""]
+
+
+def test_odd_values_round_trip_byte_identical(spark, broker, tmp_path):
+    """Quotes, backslashes, newlines, control characters, non-ASCII text
+    and emoji come back byte-identical through read_topics and through
+    the streaming tail."""
+    rows = [("melt.odd", f"o{i}", v) for i, v in enumerate(ODD_VALUES)]
+    mb.write_messages(_msgs(spark, rows), broker, partitions=2)
+    want = {f"o{i}": v.encode("utf-8") for i, v in enumerate(ODD_VALUES)}
+
+    batch = mb.read_topics(spark, broker, ["melt.odd"]).collect()
+    assert {r.key: r.value.encode("utf-8") for r in batch} == want
+
+    q = (mb.tail_topics(spark, broker, ["melt.odd"])
+         .writeStream.format("memory").queryName("melt_odd_tail")
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    streamed = spark.table("melt_odd_tail").collect()
+    assert {r.key: r.value.encode("utf-8") for r in streamed} == want
+
+
+def test_staged_files_publish_in_numeric_task_order(broker, tmp_path):
+    """Staged files commit in task-id order parsed from part-NNNNN, not in
+    name order: task 100000 follows task 99999."""
+    mb.create_topic(broker, "melt.tasks", partitions=1)
+    stage = tmp_path / "stage"
+    pdir = stage / "topic=melt.tasks" / "__p=0"
+    pdir.mkdir(parents=True)
+    for task in (100000, 99999, 2):
+        pq.write_table(pa.table({"k": [f"t{task}"], "v": ["x"], "ts": [None]},
+                                schema=mb._ARROW_SEGMENT),
+                       str(pdir / f"part-{task:05d}-u.c000.snappy.parquet"))
+    # Spark's bookkeeping files are skipped
+    (pdir / ".part-00002-u.c000.snappy.parquet.crc").write_bytes(b"")
+    (stage / "_SUCCESS").write_bytes(b"")
+    mb._publish_stage(broker, str(stage), {"melt.tasks": 1}, 1)
+    got = [r[4] for r in mb._scan_segments(broker, "melt.tasks", 0, 0, 3)]
+    assert got == ["t2", "t99999", "t100000"]
+
+
+def test_unknown_staged_file_publishes_nothing(broker, tmp_path):
+    """A staged file under a name the publish does not know stops it:
+    nothing is committed, rather than that file's rows being dropped."""
+    mb.create_topic(broker, "melt.stray", partitions=1)
+    pdir = tmp_path / "stage" / "topic=melt.stray" / "__p=0"
+    pdir.mkdir(parents=True)
+    for name in ("part-00000-u.c000.snappy.parquet", "data-00001.parquet"):
+        pq.write_table(pa.table({"k": ["a"], "v": ["x"], "ts": [None]},
+                                schema=mb._ARROW_SEGMENT), str(pdir / name))
+    with pytest.raises(RuntimeError, match="data-00001"):
+        mb._publish_stage(broker, str(tmp_path / "stage"),
+                          {"melt.stray": 1}, 1)
+    assert mb.end_offsets(broker, "melt.stray") == {0: 0}

@@ -103,7 +103,7 @@ def cmd_sync(args) -> int:
     semantics: exit 1 when out of sync, repair nothing."""
     from pyspark.sql import functions as F
 
-    from .operators.diff import SIDE, diff
+    from .operators.diff import SIDE, TABLE_ONLY, TOPIC_ONLY, diff
     from .operators.outbox import latest_outbox_state, write_outbox
     from .operators.sync import sync_plan
 
@@ -128,14 +128,18 @@ def cmd_sync(args) -> int:
     report, total = {}, 0
     for src in sources:
         msgs = src.messages(read(src))
-        d = diff(msgs, state.filter(F.col("topic") == src.default_topic))
-        sides = {r[SIDE]: r["n"] for r in
-                 d.groupBy(SIDE).agg(F.count(F.lit(1)).alias("n")).collect()}
+        # the pinned repair batch: the report counts the rows it sends
+        repair = sync_plan(diff(
+            msgs, state.filter(F.col("topic") == src.default_topic)))
+        side = F.when(F.col("value").isNull(), F.lit(TOPIC_ONLY)) \
+            .otherwise(F.lit(TABLE_ONLY))  # tombstones carry value=NULL
+        sides = {r[SIDE]: r["n"] for r in repair.groupBy(side.alias(SIDE))
+                 .agg(F.count(F.lit(1)).alias("n")).collect()}
         n = sum(sides.values())
         total += n
         report[src.default_topic] = {"out_of_sync": n, **sides}
         if n and not args.check_only:
-            write_outbox(sync_plan(d), args.outbox, batch_id=batch_id)
+            write_outbox(repair, args.outbox, batch_id=batch_id)
     print(json.dumps({"topics": report, "total_out_of_sync": total,
                       "repaired": not args.check_only and total > 0}))
     return 1 if (args.check_only and total) else 0

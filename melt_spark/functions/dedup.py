@@ -656,9 +656,8 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
                                 F.coalesce("ll", F.col("mid")))
                         < F.col("old")).alias("chg"))
                .localCheckpoint(eager=True))
-        changed = two.filter(F.col("chg")).limit(1).count()
         labels = two.select("node", "label")
-        if changed == 0:
+        if two.filter(F.col("chg")).isEmpty():
             converged = True
             break
     if not converged:

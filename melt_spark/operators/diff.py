@@ -70,5 +70,6 @@ def deleted_keys(diff_df: DataFrame,
 
 def diff_matches(diff_df: DataFrame) -> bool:
     """Reference diff-matches? (melt.clj:532-533): both sides empty.
-    Cheap check: LIMIT 1 — stops at the first out-of-sync row."""
-    return diff_df.limit(1).count() == 0
+    Dataset.isEmpty takes one row and stops; a count over a LIMIT would
+    add two single-partition exchanges for the same answer."""
+    return diff_df.isEmpty()

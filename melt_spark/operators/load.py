@@ -41,8 +41,7 @@ def load_sources(sources: Iterable["Source"],
             # after transforms EVERY message needs topic+key (keyless
             # sources must have supplied one via a transform — the
             # reference's spec-assert fails there too, melt.clj:28)
-            bad = validate_messages(msgs, keyed=True).limit(1).count()
-            if bad:
+            if not validate_messages(msgs, keyed=True).isEmpty():
                 raise ValueError(
                     f"{source.full_name}: message constraint violated "
                     f"(null topic/key) — reference spec-assert, melt.clj:28")

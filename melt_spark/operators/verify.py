@@ -57,7 +57,8 @@ def verify_sync(source_fn: Callable[[], DataFrame],
                 retry_delay_sec: float = 1.0,
                 sleep: Callable[[float], None] = time.sleep) -> VerifyResult:
     """verify-sync (melt.clj:548-571): on verify failure, send the repair
-    batch (upserts + tombstones) once, then ONE post-sync re-verify."""
+    batch (upserts + tombstones) once, then ONE post-sync re-verify. The
+    reported count and send_fn read the same pinned batch (sync_plan)."""
     res = verify(source_fn, topic_fn, retries, retry_delay_sec, sleep)
     if res.matches:
         return res

@@ -10,9 +10,12 @@ partitioning sized by env so the same code runs local[32] here and on a
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger("melt_spark.session")
 
 # Defaults chosen for the local[$SPARK_GRAFT_CPUS] test/bench environment.
 # On a real cluster, leave shuffle partitions to AQE coalescing: we set an
@@ -59,7 +62,21 @@ _DEFAULTS = {
     # instead of a silent timeout.
     "spark.python.authenticate.socketTimeout": "2m",
     "spark.python.worker.faulthandler.enabled": "true",
+    # PySpark's DataFrame debugging records the Python call site of every
+    # Column/F.* call (Spark 4.1.2's SQLConf: "non-trivial performance
+    # overhead because of the stack trace collection"), about five extra
+    # py4j round-trips per call: building one diff plan takes ~265 ms with
+    # it on, ~180 ms off (4-core VM). The trade-off: runtime errors lose
+    # the Python call-site "query context"; Python tracebacks and the JVM
+    # messages stay.
+    # PySpark reads the flag once, on first use, so it must be set when
+    # the session is built (here), not later in tune_session.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
+
+# conf key -> error text for every default tune_session could not apply
+# (immutable at runtime, or unknown to the session's Spark build).
+FAILED_CONFS: dict[str, str] = {}
 
 
 def get_spark(app_name: str = "melt_spark", master: str | None = None,
@@ -80,11 +97,16 @@ def get_spark(app_name: str = "melt_spark", master: str | None = None,
 
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable melt_spark defaults to an externally-built
-    session (the driver hands us one; master/memory are fixed by then)."""
+    session (the driver hands us one; master/memory are fixed by then).
+    A key that fails to apply is logged and kept in FAILED_CONFS, and the
+    rest still apply."""
     for k, v in _DEFAULTS.items():
         if k.startswith("spark.sql."):
             try:
                 spark.conf.set(k, v)
-            except Exception:
-                pass  # immutable at runtime in this Spark build — keep going
+            except Exception as e:
+                log.warning("tune_session: %s=%s not applied: %s", k, v, e)
+                FAILED_CONFS[k] = str(e)
+            else:
+                FAILED_CONFS.pop(k, None)
     return spark

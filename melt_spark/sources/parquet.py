@@ -15,6 +15,7 @@ import os
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -49,7 +50,45 @@ def normalize_timestamps(df: DataFrame) -> DataFrame:
     return df
 
 
+# realpath -> ((st_size, st_mtime_ns), the schema Spark inferred)
+_SCHEMAS: dict[str, tuple[tuple[int, int], StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """spark.read.parquet without the schema-inference job on a re-read.
+
+    Inference opens the footer in a 1-task Spark job (~75 ms) on every
+    call. For a regular file, the schema Spark inferred is kept with the
+    file's size and mtime, and later reads of the unchanged file pass it
+    back through spark.read.schema: Spark's own answer, so exact. A
+    rewrite changes the stamp and re-infers (a same-size rewrite within
+    one mtime tick would not: the limit of any stat-based cache). The
+    parquet inference confs read_table does not set (binaryAsString,
+    int96AsTimestamp) are taken as fixed for the process. Directories, the
+    layout of large tables, always infer: files can change inside them
+    without the directory's own stat changing. Two threads reading one
+    file for the first time may both infer; they store the same answer."""
+    if not os.path.isfile(path):  # a directory, or Spark's own error
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    real, stamp = os.path.realpath(path), (st.st_size, st.st_mtime_ns)
+    hit = _SCHEMAS.get(real)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[real] = (stamp, df.schema)
+    return df
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read `<sf_dir>/<name>.parquet` with timestamps normalized to
+    session-TZ TIMESTAMP (ns truncated to µs, NTZ cast).
+
+    Scale note: for a single file the inferred schema is reused across
+    calls (_read_parquet), so a repeat read starts no Spark job; a
+    directory (the layout a large table has) is inferred on every call,
+    which reads one footer (mergeSchema is off), not the data. Nothing
+    here materializes rows in the driver."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # prefer the reader-level fix: un-adjusted parquet timestamps arrive as
@@ -58,7 +97,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     except Exception:
         pass  # unknown conf in some future build — the cast below still fixes it
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     for c in _ns_timestamp_cols(path):
         df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
     return normalize_timestamps(df)

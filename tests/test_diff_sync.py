@@ -4,6 +4,8 @@ both sides → sync → verify clean → delete → tombstone → key gone. The 
 is simulated as an in-test changelog compacted by latest_state — exactly the
 invariant a compacted Kafka topic provides."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from melt_spark.model import Source
@@ -124,3 +126,38 @@ def test_keyless_source_value_as_key(spark):
     topic = TopicSim(spark)
     topic.produce(msgs)
     assert topic.state().count() == 1
+
+
+def test_sync_plan_pins_the_batch(spark, tmp_path):
+    """sync_plan runs the diff once and pins the rows: with the source file
+    deleted afterwards, sync_count and the rows write_messages publishes
+    still agree with the drift that existed when the batch was built."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from melt_spark.sources import mock_broker as mb
+    from melt_spark.sources.parquet import read_table
+
+    rows = [(1, "ann", 10.0), (2, "bob", 20.0), (3, "cyd", 30.0),
+            (4, "dee", 40.0)]
+    pq.write_table(pa.table({"id": [r[0] for r in rows],
+                             "name": [r[1] for r in rows],
+                             "bal": [r[2] for r in rows]}),
+                   str(tmp_path / "users.parquet"))
+    src = SRC.messages(read_table(spark, str(tmp_path), "users"))
+    want = {(r["key"], r["value"]) for r in src.collect()
+            if r["key"] in ('{"id":2}', '{"id":3}', '{"id":4}')}
+    want.add(('{"id":9}', None))  # only in the topic: tombstone
+    # topic: id 1 in sync, id 2 stale, ids 3 and 4 missing, id 9 extra
+    topic = _msgs(spark, [(1, "ann", 10.0), (2, "bob", 99.0),
+                          (9, "zed", 90.0)]).select("topic", "key", "value")
+
+    repair = sync_plan(diff(src, topic))
+    os.remove(tmp_path / "users.parquet")
+
+    assert sync_count(repair) == len(want) == 4
+    broker = str(tmp_path / "broker")
+    mb.write_messages(repair, broker, partitions=2)
+    sent = [(r["key"], r["value"]) for r in
+            mb.read_topics(spark, broker, [SRC.default_topic]).collect()]
+    assert len(sent) == len(want) and set(sent) == want

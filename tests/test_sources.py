@@ -3,6 +3,7 @@ bookkeeping, sampling."""
 
 import json
 import os
+import uuid
 
 from melt_spark.model import Source
 from melt_spark.operators.sample import sample_db, sample_table
@@ -68,3 +69,39 @@ def test_sample_table_and_db(spark, sf_dir, tmp_path):
     with open(paths[0]) as f:
         doc = json.load(f)
     assert doc["count"] == 3 and len(doc["sample"]) == 2
+
+
+def _jobs_during(spark, fn):
+    """Spark job ids started while fn() runs (status store, UI off)."""
+    sc = spark.sparkContext
+    group = f"jobs-during-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_table_reuses_schema_without_a_job(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"a": [1, 2, 3]}), str(tmp_path / "t.parquet"))
+    first = _jobs_during(spark, lambda: read_table(spark, str(tmp_path), "t"))
+    again = _jobs_during(spark, lambda: read_table(spark, str(tmp_path), "t"))
+    assert len(first) == 1 and again == []  # the inference job, once
+    assert read_table(spark, str(tmp_path), "t").count() == 3
+
+
+def test_read_table_schema_follows_a_rewrite(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert read_table(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"b": ["x"], "c": [1.5]}), path)
+    df = read_table(spark, str(tmp_path), "t")
+    assert df.dtypes == [("b", "string"), ("c", "double")]
+    assert [tuple(r) for r in df.collect()] == [("x", 1.5)]

@@ -160,3 +160,20 @@ def test_iso_seconds_matches_reference_golden(spark):
     msg = src.messages(df).collect()[0]
     assert msg["value"] == '{"id":42,"starttime":"2007-08-01T00:00:00Z"}'
     assert msg["key"] == '{"id":42}'
+
+
+@pytest.mark.parametrize("unit,tz", [("ns", None), ("us", None)])
+def test_cached_schema_read_equals_inferred_read(spark, variant_dirs, unit,
+                                                 tz):
+    """read_table reuses Spark's inferred schema for an unchanged file; on
+    the ns (nanosAsLong) and NTZ fixtures the reuse must be exact."""
+    from melt_spark.sources import parquet
+
+    d = variant_dirs[(unit, tz)]
+    real = os.path.realpath(os.path.join(d, "events.parquet"))
+    parquet._SCHEMAS.pop(real, None)
+    inferred = read_table(spark, d, "events")
+    assert real in parquet._SCHEMAS
+    cached = read_table(spark, d, "events")
+    assert cached.schema == inferred.schema
+    assert cached.collect() == inferred.collect()

@@ -62,9 +62,12 @@ HEAVY_CONSTITUENTS = [
 def _pinned_queries() -> list[tuple[str, object]]:
     import bench
     from melt_spark.plans.registry import constituents
+    from melt_spark.plans.suite import q_diff_sides
 
     reg = constituents()
-    return list(bench.BENCH_QUERIES) + [
+    # sync_plan's batch is materialized (a checkpoint scan), so the lazy
+    # diff_sides keeps the diff's own shuffle skeleton pinned
+    return list(bench.BENCH_QUERIES) + [("diff_sides", q_diff_sides)] + [
         (n, reg[n][0]) for n in HEAVY_CONSTITUENTS]
 
 

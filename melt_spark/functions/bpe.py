@@ -73,8 +73,7 @@ def _merge_fold(syms: Column, a: Column, b: Column) -> Column:
         ).otherwise(F.concat(acc, F.array(s))))
 
 
-def bpe_train(docs: DataFrame, rounds: int = 3, text_col: str = "text",
-              checkpoint_every: int | None = None
+def bpe_train(docs: DataFrame, rounds: int = 3, text_col: str = "text"
               ) -> tuple[DataFrame, DataFrame]:
     """Run `rounds` BPE merges over the corpus vocabulary.
 
@@ -103,9 +102,6 @@ def bpe_train(docs: DataFrame, rounds: int = 3, text_col: str = "text",
     unchanged — collecting the winner instead of broadcasting it cannot
     change what it selects (tools/ab_bpe.py --check diffs the full
     entry output multisets bit-for-bit; oracle re-checked).
-
-    checkpoint_every is kept for API compatibility but superseded: every
-    round now checkpoints (the r11 unrolled lineage it bounded is gone).
     """
     spark = docs.sparkSession
     words = word_freqs(docs, text_col).localCheckpoint(eager=False)

@@ -432,34 +432,27 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
     shingle sets, so the computed Jaccard stays self-consistent.
     shingles_df: precomputed (id, shingle) distinct set — pass it when the
     surrounding pipeline already built one (e.g. clean_corpus shares a
-    single cached explode with decontamination); the cap still applies.
-    If it already carries a `sid` digest column (_with_digest), it is used
-    as-is and NOT re-cached — the caller owns the cache lifecycle, so one
-    explode is cached exactly once across the whole surrounding pipeline.
+    single pinned explode with decontamination); the cap still applies.
 
     Shuffle profile (the 100 TB story): shingle TEXT never enters a
-    shuffle. The md5 signature partials reduce map-side over the cached
+    shuffle. The md5 signature partials reduce map-side over the pinned
     explode; the df cap is an (sid)-only aggregation + broadcast anti-join
     (_drop_hot); candidate verification joins on the 8-byte digest. Every
     exchange in the plan ships ids, int64 digests, or 8-char signature
     chunks."""
-    # one cached digested shingle pass feeds signatures AND verification
-    # (the explode is the dominant cost; measured ~30% faster than
-    # recomputing it)
-    pre_digested = shingles_df is not None and "sid" in shingles_df.columns
-    if pre_digested:
-        shd = shingles_df
-    else:
-        sh = shingles(df, text_col, id_col, k) \
-            if shingles_df is None else shingles_df
-        shd = _with_digest(sh)
+    shd = _with_digest(shingles(df, text_col, id_col, k)
+                       if shingles_df is None else shingles_df)
     if max_df is not None:
-        # cap BEFORE caching: the capped set is what every downstream
+        # cap BEFORE pinning: the capped set is what every downstream
         # consumer scans, and on stopword-heavy corpora it is much smaller
         # than the raw explode
         shd = _drop_hot(shd, max_df)
-    if not pre_digested:
-        shd = shd.cache()
+    # one digested shingle pass, pinned for THIS call (eager), feeds
+    # signatures, sizes AND verification: the explode and the cap run
+    # once. localCheckpoint, not cache(): a process-wide cache entry
+    # would serve a later call stale rows after the input files change
+    # under the same path.
+    shd = shd.localCheckpoint()
     sigs = shd.groupBy(id_col).agg(
         *[_minhash_col(s).alias(f"mh{s}") for s in range(num_hashes)])
     cands = lsh_candidate_pairs(sigs, id_col, num_hashes, bands)
@@ -851,7 +844,8 @@ def incremental_minhash_pairs(batch: DataFrame, store_sigs: DataFrame,
     bsh = _with_digest(shingles(batch, text_col, id_col, k))
     if max_df is not None:
         bsh = _drop_hot(bsh, max_df)
-    bsh = bsh.cache()
+    # pinned for this call: signatures, sizes and verification read it
+    bsh = bsh.localCheckpoint()
     bsigs = bsh.groupBy(id_col).agg(
         *[_minhash_col(s).alias(f"mh{s}") for s in range(num_hashes)])
     bb = (band_rows(bsigs, id_col, num_hashes, bands)

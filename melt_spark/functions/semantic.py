@@ -83,13 +83,15 @@ def semantic_dedup(corpus: DataFrame, threshold: float = 0.3,
                                     id_col, vec_col)
     else:
         assigned = ivf_assign(corpus, cents, id_col, vec_col)
-    # cached: the centroid-scoring crossJoin behind `assigned` is the
-    # expensive pass, and member feeds BOTH sides of the pair self-join
-    # plus the final verdict join — uncached it would run three times
+    # pinned for this call: the centroid-scoring crossJoin behind
+    # `assigned` is the expensive pass, and member feeds BOTH sides of the
+    # pair self-join plus the final verdict join — unpinned it would run
+    # three times (localCheckpoint, not cache(), so a later call over
+    # rewritten input never reads stale rows)
     member = (assigned.join(F.broadcast(cents), "list_id")
               .withColumn("csim", cosine(F.col("v"), F.col("centroid")))
               .select("list_id", F.col(id_col), "v", "csim")
-              .cache())
+              .localCheckpoint())
 
     a = member.alias("a")
     b = (member.select("list_id", F.col(id_col).alias("b_id"),

@@ -8,50 +8,124 @@ signal. Merging near-duplicate demos into tagged unions / key-joins puts the
 WHOLE operator surface inside the checked window while every constituent
 query still executes and every value still participates in the hash.
 
-Rules for harmonized schemas (driver-hash safe, see tools/check_oracle.py):
-  * a ``kind``/``q``/``bits`` tag column identifies the branch;
-  * doubles are NEVER stringified (repr divergence) — they ride in DOUBLE
-    columns, with -1.0 sentinels where a branch has no value;
+Each branch states its harmonized projection ONCE, as a list of SQL select
+expressions that both engines run:
+  * Spark aliases the branch DataFrame ``b<i>`` and applies
+    ``selectExpr(*exprs)``;
+  * the oracle renders ``SELECT <exprs> FROM (<branch sql>) AS b<i>``
+    (DuckDB supports CTEs inside derived tables).
+So the two sides cannot drift: a NULL concatenated with ``||`` is NULL on
+both. Write the dialect both engines parse — ``CAST(x AS STRING)``, not
+VARCHAR — and reference a column named like a DuckDB keyword through the
+branch alias (``b3.column``), never with double quotes, which Spark reads
+as a string literal.
+
+An unpivot branch gives a list of select-lists instead: each input row
+yields one output row per list. Spark runs them in one pass over the branch
+as ``inline(array(struct(<list 1>), ...))``; the oracle materializes the
+branch once and unions one SELECT per list over it.
+
+Rules for harmonized schemas (driver-hash safe, see tools/check_oracle.py),
+checked by the combinator:
+  * the first expression is the tag column (``kind``/``q``/``bits``) that
+    identifies the branch, under the same name in every branch;
+  * doubles are NEVER stringified (repr divergence) — a STRING output must
+    not read a DOUBLE/FLOAT input column; doubles ride in DOUBLE columns,
+    with -1.0 sentinels where a branch has no value;
   * integers may be stringified (renders identically on both engines) or
     cast to DOUBLE (exact for these magnitudes);
   * no NEW nullable numeric columns (NULL degrades to NaN-float64 on the
-    driver's pandas path); pre-existing NULL string columns are fine.
-
-Both sides compose the same way: Spark unions the projected branch
-DataFrames; the oracle wraps each branch's SQL as a derived table under the
-same projection (DuckDB supports CTEs inside derived tables).
+    driver's pandas path) — a numeric output may not come from a NULL
+    literal; pre-existing NULL string columns are fine.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Sequence
+import re
+from typing import Sequence
 
 from pyspark.sql import DataFrame
 
 
 Entry = tuple  # (fn(spark, sf_dir) -> DataFrame, oracle_sql: str)
 
+_STRING_LITERAL = re.compile(r"'(?:[^']|'')*'")
+_ALIAS = re.compile(r"\bAS\s+(\w+)\s*$", re.IGNORECASE)
+_NUMERIC = ("tinyint", "smallint", "int", "bigint", "float", "double",
+            "decimal")
+
+
+def _rows(exprs) -> list:
+    """The select-lists of a branch: one, or one per unpivoted row."""
+    return exprs if isinstance(exprs[0], list) else [exprs]
+
+
+def _name(expr: str) -> str:
+    m = _ALIAS.search(expr)
+    return m.group(1) if m else expr
+
+
+def _check(exprs, src: DataFrame, out: DataFrame) -> None:
+    """Enforce the no-stringified-double and no-NULL-numeric rules against
+    the analyzed schemas (no job runs)."""
+    doubles = {c for c, t in src.dtypes if t in ("double", "float")}
+    for row in _rows(exprs):
+        for expr, (col, dtype) in zip(row, out.dtypes):
+            code = _ALIAS.sub("", _STRING_LITERAL.sub("''", expr))
+            if dtype == "string" and doubles & set(re.findall(r"\w+", code)):
+                raise ValueError(f"{col}: stringifies a double ({expr})")
+            if (dtype.startswith(_NUMERIC)
+                    and re.search(r"\bNULL\b", code, re.IGNORECASE)):
+                raise ValueError(f"{col}: new nullable numeric ({expr})")
+
+
+def project(df: DataFrame, exprs, i: int) -> DataFrame:
+    """Spark side of branch ``i``: its select-list(s) over ``df``."""
+    src = df.alias(f"b{i}")
+    if isinstance(exprs[0], list):
+        structs = ", ".join(f"struct({', '.join(row)})" for row in exprs)
+        out = src.selectExpr(f"inline(array({structs}))")
+    else:
+        out = src.selectExpr(*exprs)
+    _check(exprs, df, out)
+    return out
+
+
+def project_sql(sql: str, exprs, i: int) -> str:
+    """Oracle side of branch ``i``: the same select-list(s) over its SQL.
+    An unpivot materializes the branch once and reads it per row."""
+    if not isinstance(exprs[0], list):
+        return f"SELECT {', '.join(exprs)}\nFROM (\n{sql}\n) AS b{i}"
+    arms = "\nUNION ALL\n".join(
+        f"SELECT {', '.join(row)} FROM b{i}" for row in exprs)
+    return (f"SELECT *\nFROM (\nWITH b{i} AS MATERIALIZED (\n{sql}\n)\n"
+            f"{arms}\n) AS b{i}")
+
 
 def merged(*branches) -> Entry:
     """Tagged-union combinator.
 
-    Each branch: (entry, spark_proj, sql_proj) where
-      entry     = (fn, sql) — an existing suite entry
-      spark_proj= Callable[[DataFrame], DataFrame] projecting the branch
-                  output (including its tag literal) to the harmonized schema
-      sql_proj  = the matching "SELECT 'tag' AS kind, ..." select-list run
-                  over the branch SQL as a derived table
+    Each branch is ``(entry, exprs)``: ``entry = (fn, sql)`` is an
+    existing suite entry and ``exprs`` the SQL select-list projecting its
+    output — tag literal first — to the harmonized schema, or a list of
+    such select-lists for an unpivot. Both engines run ``exprs``:
+    :func:`project` in Spark, :func:`project_sql` in the oracle.
     """
+    tags = {_name(row[0]) for _entry, exprs in branches
+            for row in _rows(exprs)}
+    if len(tags) != 1:
+        raise ValueError(f"branches disagree on the tag column: {tags}")
+
     def run(spark, sf_dir) -> DataFrame:
         out = None
-        for (fn, _sql), proj, _sp in branches:
-            d = proj(fn(spark, sf_dir))
+        for i, ((fn, _sql), exprs) in enumerate(branches):
+            d = project(fn(spark, sf_dir), exprs, i)
             out = d if out is None else out.unionByName(d)
         return out
 
     sql = "\nUNION ALL\n".join(
-        f"{sql_proj}\nFROM (\n{entry[1]}\n) AS b{i}"
-        for i, (entry, _proj, sql_proj) in enumerate(branches))
+        project_sql(entry[1], exprs, i)
+        for i, (entry, exprs) in enumerate(branches))
     return run, sql
 
 
@@ -59,17 +133,16 @@ def joined(key: str, first: Entry,
            *rest: tuple[Entry, Sequence[str]]) -> Entry:
     """Key-join combinator for per-row feature queries over the same table
     (e.g. text stats ⋈ quality scores on doc_id). Branches must be 1:1 on
-    ``key``; ``rest`` entries contribute only their listed columns."""
+    ``key``; each ``rest`` branch is ``(entry, exprs)`` and contributes
+    only its select-list, run by both engines as in :func:`merged`."""
     def run(spark, sf_dir) -> DataFrame:
-        (fn0, _), = (first,)
-        out = fn0(spark, sf_dir)
-        for (fn, _sql), cols in rest:
-            out = out.join(fn(spark, sf_dir).select(key, *cols), key)
+        out = first[0](spark, sf_dir)
+        for i, ((fn, _sql), exprs) in enumerate(rest, 1):
+            out = out.join(project(fn(spark, sf_dir), [key, *exprs], i), key)
         return out
 
-    extra = ", ".join(
-        f"b{i + 1}.{c}" for i, (_e, cols) in enumerate(rest) for c in cols)
-    sql = f"SELECT b0.*, {extra}\nFROM (\n{first[1]}\n) AS b0"
-    for i, (entry, _cols) in enumerate(rest):
-        sql += f"\nJOIN (\n{entry[1]}\n) AS b{i + 1} USING ({key})"
+    sql = f"SELECT *\nFROM (\n{first[1]}\n) AS b0"
+    for i, (entry, exprs) in enumerate(rest, 1):
+        sql += (f"\nJOIN (\n{project_sql(entry[1], [key, *exprs], i)}\n)"
+                f" AS b{i} USING ({key})")
     return run, sql

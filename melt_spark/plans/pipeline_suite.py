@@ -590,7 +590,7 @@ def q_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    incremental_minhash_pairs, shingles)
 
     docs = read_table(spark, sf_dir, "documents")
-    store_sh = _with_digest(shingles(docs)).cache()
+    store_sh = _with_digest(shingles(docs)).localCheckpoint()
     store_sigs = store_sh.groupBy("doc_id").agg(
         *[_minhash_col(s).alias(f"mh{s}") for s in range(8)])
     batch = docs.withColumn("doc_id", F.col("doc_id") + 20000)
@@ -2294,12 +2294,12 @@ def q_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     good = (scored.filter((F.col("quality") >= 0.6)
                           & (F.col("__gate") == "ok"))
             .select("doc_id", "source"))
-    # ONE cached digested shingle explode feeds dedup signatures, dedup
-    # verification AND decontamination — the explode is the pipeline's
-    # dominant cost, and it is cached exactly once (minhash_dedup_pairs
-    # detects the sid column and reuses this cache; contamination joins on
+    # ONE digested shingle explode, pinned for this call, feeds dedup
+    # signatures, dedup verification AND decontamination — the explode is
+    # the pipeline's dominant cost, and it runs exactly once
+    # (minhash_dedup_pairs pins its capped set; contamination joins on
     # the 8-byte digest, so its benchmark broadcast ships digests too)
-    sh_all = _with_digest(shingles(docs)).cache()
+    sh_all = _with_digest(shingles(docs)).localCheckpoint()
     dup_losers = (minhash_dedup_pairs(docs, num_hashes=8, bands=4,
                                       threshold=0.8, max_df=MAX_SHINGLE_DF,
                                       shingles_df=sh_all)

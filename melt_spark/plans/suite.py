@@ -1319,7 +1319,7 @@ def q_stream_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = streaming_first_seen(stream)
     query, name = run_to_memory(out, mode="append")
     try:
-        return spark.table(name).cache().localCheckpoint(eager=True)
+        return spark.table(name).localCheckpoint(eager=True)
     finally:
         query.stop()
 
@@ -1357,7 +1357,7 @@ def q_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", "n")
     query, name = run_to_memory(out, mode="append")
     try:
-        return spark.table(name).cache().localCheckpoint(eager=True)
+        return spark.table(name).localCheckpoint(eager=True)
     finally:
         query.stop()
 
@@ -1379,7 +1379,7 @@ def q_stream_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events")
     query, name = run_to_memory(out, mode="append")
     try:
-        return spark.table(name).cache().localCheckpoint(eager=True)
+        return spark.table(name).localCheckpoint(eager=True)
     finally:
         query.stop()
 
@@ -1439,7 +1439,7 @@ def q_stream_click_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "purchase_id", "click_id")
     query, name = run_to_memory(out, mode="append")
     try:
-        return spark.table(name).cache().localCheckpoint(eager=True)
+        return spark.table(name).localCheckpoint(eager=True)
     finally:
         query.stop()
 
@@ -1470,7 +1470,7 @@ def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                    "event_type", "n"))
     query, name = run_to_memory(out, mode="append")
     try:
-        return spark.table(name).cache().localCheckpoint(eager=True)
+        return spark.table(name).localCheckpoint(eager=True)
     finally:
         query.stop()
 
@@ -1511,7 +1511,7 @@ def q_stream_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
            .agg(F.count(F.lit(1)).alias("n")))
     query, name = run_to_memory(out, mode="complete")
     try:
-        return spark.table(name).cache().localCheckpoint(eager=True)
+        return spark.table(name).localCheckpoint(eager=True)
     finally:
         query.stop()
 
@@ -1539,7 +1539,7 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("user_id", "event_type"))
     query, name = run_to_memory(out, mode="append")
     try:
-        return spark.table(name).cache().localCheckpoint(eager=True)
+        return spark.table(name).localCheckpoint(eager=True)
     finally:
         query.stop()
 
@@ -1564,7 +1564,7 @@ WHERE day_start + INTERVAL 1 DAY
 
 from .analytics_suite import ANALYTICS_SUITE  # noqa: E402
 from .pipeline_suite import PIPELINE_SUITE, q_text_profile_onepass  # noqa: E402
-from .combined import joined, merged  # noqa: E402
+from .combined import joined, merged, project  # noqa: E402
 
 # ---------------------------------------------------------------------------
 # The registry. EXACTLY 50 entries: the external driver records correctness
@@ -1660,11 +1660,11 @@ def _merged_shared_pca(*branches):
             return st[0]
 
         out = None
-        for (fn, _sql), proj, _sp in branches:
+        for i, ((fn, _sql), exprs) in enumerate(branches):
             if fn is pca_fn or fn is abtt_fn:
-                d = proj(fn(spark, sf_dir, state=shared()))
+                d = project(fn(spark, sf_dir, state=shared()), exprs, i)
             else:
-                d = proj(fn(spark, sf_dir))
+                d = project(fn(spark, sf_dir), exprs, i)
             out = d if out is None else out.unionByName(d)
         return out
 
@@ -1676,451 +1676,230 @@ SUITE: dict[str, tuple] = {
     #    + PK-less value-as-key (reference integration_test.clj:158-184)
     "message_envelope": merged(
         ((q_message_envelope, SQL_MESSAGE_ENVELOPE),
-         lambda df: df.select(F.lit("customer").alias("kind"),
-                              "topic", "key", "value"),
-         "SELECT 'customer' AS kind, topic, key, value"),
+         ["'customer' AS kind", "topic", "key", "value"]),
         ((q_message_envelope_events, SQL_MESSAGE_ENVELOPE_EVENTS),
-         lambda df: df.select(F.lit("events").alias("kind"),
-                              "topic", "key", "value"),
-         "SELECT 'events' AS kind, topic, key, value"),
+         ["'events' AS kind", "topic", "key", "value"]),
         ((q_masked_messages, SQL_MASKED_MESSAGES),
-         lambda df: df.select(F.lit("masked").alias("kind"),
-                              "topic", "key", "value"),
-         "SELECT 'masked' AS kind, topic, key, value"),
+         ["'masked' AS kind", "topic", "key", "value"]),
         ((q_composite_key_messages, SQL_COMPOSITE_KEY_MESSAGES),
-         lambda df: df.select(F.lit("composite").alias("kind"),
-                              "topic", "key", F.lit("").alias("value")),
-         "SELECT 'composite' AS kind, topic, key, '' AS value"),
+         ["'composite' AS kind", "topic", "key", "'' AS value"]),
         ((q_keyless_messages, SQL_KEYLESS_MESSAGES),
-         lambda df: df.select(F.lit("keyless").alias("kind"),
-                              "topic", "key", "value"),
-         "SELECT 'keyless' AS kind, topic, key, value"),
+         ["'keyless' AS kind", "topic", "key", "value"]),
     ),
     # S7 top-N sample + r4b weighted priority sampling (fixed-size sample
     # with the tau subset-sum estimator, functions/cleaning.py)
     "sample_top10": merged(
         ((q_sample_top10, SQL_SAMPLE_TOP10),
-         lambda df: df.select(F.lit("sample").alias("kind"),
-                              F.col("c_custkey").alias("id"),
-                              F.col("c_nationkey").cast("bigint")
-                              .alias("nval"),
-                              F.concat_ws("|", "c_name", "c_mktsegment")
-                              .alias("sval"),
-                              F.col("c_acctbal").alias("v1"),
-                              F.lit(-1.0).alias("v2"),
-                              F.lit(-1.0).alias("v3")),
-         "SELECT 'sample' AS kind, c_custkey AS id,"
-         " CAST(c_nationkey AS BIGINT) AS nval,"
-         " c_name || '|' || c_mktsegment AS sval, c_acctbal AS v1,"
-         " CAST(-1.0 AS DOUBLE) AS v2, CAST(-1.0 AS DOUBLE) AS v3"),
+         ["'sample' AS kind", "c_custkey AS id",
+          "CAST(c_nationkey AS BIGINT) AS nval",
+          "c_name || '|' || c_mktsegment AS sval", "c_acctbal AS v1",
+          "CAST(-1.0 AS DOUBLE) AS v2", "CAST(-1.0 AS DOUBLE) AS v3"]),
         (PIPELINE_SUITE["priority_sample"],
-         lambda df: df.select(F.lit("priority").alias("kind"), "id",
-                              F.col("w").alias("nval"),
-                              F.col("rank").cast("string").alias("sval"),
-                              F.col("priority").alias("v1"),
-                              F.col("tau").alias("v2"),
-                              F.col("w_hat").alias("v3")),
-         "SELECT 'priority' AS kind, id, w AS nval,"
-         " CAST(rank AS VARCHAR) AS sval, priority AS v1, tau AS v2,"
-         " w_hat AS v3"),
+         ["'priority' AS kind", "id", "w AS nval",
+          "CAST(rank AS STRING) AS sval", "priority AS v1", "tau AS v2",
+          "w_hat AS v3"]),
         # r5: deterministic train/val/test split — per (source, split)
         # doc counts + char totals; assignment is a pure hash of doc_id
         # (re-runs can never leak val into train)
         (PIPELINE_SUITE["split_corpus"],
-         lambda df: df.select(F.lit("split").alias("kind"),
-                              F.lit(-1).cast("bigint").alias("id"),
-                              F.col("n_docs").alias("nval"),
-                              F.concat_ws(":", "source", "split")
-                              .alias("sval"),
-                              F.col("sum_chars").cast("double").alias("v1"),
-                              F.lit(-1.0).alias("v2"),
-                              F.lit(-1.0).alias("v3")),
-         "SELECT 'split' AS kind, CAST(-1 AS BIGINT) AS id,"
-         " n_docs AS nval, source || ':' || split AS sval,"
-         " CAST(sum_chars AS DOUBLE) AS v1, CAST(-1.0 AS DOUBLE) AS v2,"
-         " CAST(-1.0 AS DOUBLE) AS v3"),
+         ["'split' AS kind", "CAST(-1 AS BIGINT) AS id", "n_docs AS nval",
+          "source || ':' || split AS sval",
+          "CAST(sum_chars AS DOUBLE) AS v1", "CAST(-1.0 AS DOUBLE) AS v2",
+          "CAST(-1.0 AS DOUBLE) AS v3"]),
     ),
     "event_text_ops": merged(
         ((q_user_event_sequences, SQL_USER_EVENT_SEQUENCES),
-         lambda df: df.select(F.lit("sequences").alias("kind"),
-                              F.col("user_id").cast("string").alias("key"),
-                              F.col("first5").alias("sval"),
-                              F.lit(-1).cast("bigint").alias("n")),
-         "SELECT 'sequences' AS kind, CAST(user_id AS VARCHAR) AS key,"
-         " first5 AS sval, CAST(-1 AS BIGINT) AS n"),
+         ["'sequences' AS kind", "CAST(user_id AS STRING) AS key",
+          "first5 AS sval", "CAST(-1 AS BIGINT) AS n"]),
         # r4b: positional postings layout costing — the ints carry the
         # full result; the compression ratio is their exact quotient
         (PIPELINE_SUITE["postings_stats"],
-         lambda df: df.select(
-             F.lit("postings").alias("kind"),
-             F.col("term").alias("key"),
-             F.concat_ws(":", F.col("df").cast("string"),
-                         F.col("doc_gap_bytes").cast("string"),
-                         F.col("pos_gap_bytes").cast("string"))
-             .alias("sval"),
-             F.col("total_tf").alias("n")),
-         "SELECT 'postings' AS kind, term AS key,"
-         " CAST(df AS VARCHAR) || ':' || CAST(doc_gap_bytes AS VARCHAR)"
-         " || ':' || CAST(pos_gap_bytes AS VARCHAR) AS sval,"
-         " total_tf AS n"),
+         ["'postings' AS kind", "term AS key",
+          "CAST(df AS STRING) || ':' || CAST(doc_gap_bytes AS STRING)"
+          " || ':' || CAST(pos_gap_bytes AS STRING) AS sval",
+          "total_tf AS n"]),
         ((q_top_tokens, SQL_TOP_TOKENS),
-         lambda df: df.select(F.lit("tokens").alias("kind"),
-                              F.col("token").alias("key"),
-                              F.lit("").alias("sval"), "n"),
-         "SELECT 'tokens' AS kind, token AS key, '' AS sval, n"),
+         ["'tokens' AS kind", "token AS key", "'' AS sval", "n"]),
         # r9: GPT-2-style regex pre-tokenization (functions/text.py
         # regex_pretokens) — md5 of the exact per-doc pre-token stream,
         # so every boundary decision of the Java/RE2-shared pattern
         # hashes on both engines
         (PIPELINE_SUITE["regex_pretokenize"],
-         lambda df: df.select(F.lit("rtok").alias("kind"),
-                              F.col("doc_id").cast("string").alias("key"),
-                              F.concat_ws(":", "tok_md5",
-                                          F.col("n_chars").cast("string"))
-                              .alias("sval"),
-                              F.col("n_toks").alias("n")),
-         "SELECT 'rtok' AS kind, CAST(doc_id AS VARCHAR) AS key,"
-         " tok_md5 || ':' || CAST(n_chars AS VARCHAR) AS sval,"
-         " n_toks AS n"),
+         ["'rtok' AS kind", "CAST(doc_id AS STRING) AS key",
+          "tok_md5 || ':' || CAST(n_chars AS STRING) AS sval",
+          "n_toks AS n"]),
         # r5: n-gram novelty — per val doc, distinct 3-grams the train
         # slice never saw (functions/cleaning.py ngram_novelty); all
         # exact integers, gram text digest-joined
         (PIPELINE_SUITE["ngram_novelty"],
-         lambda df: df.select(F.lit("novelty").alias("kind"),
-                              F.col("doc_id").cast("string").alias("key"),
-                              F.concat_ws(":", F.col("n_grams")
-                                          .cast("string"),
-                                          F.col("n_seen").cast("string"))
-                              .alias("sval"),
-                              F.col("n_novel").alias("n")),
-         "SELECT 'novelty' AS kind, CAST(doc_id AS VARCHAR) AS key,"
-         " CAST(n_grams AS VARCHAR) || ':' || CAST(n_seen AS VARCHAR)"
-         " AS sval, n_novel AS n"),
+         ["'novelty' AS kind", "CAST(doc_id AS STRING) AS key",
+          "CAST(n_grams AS STRING) || ':'"
+          " || CAST(n_seen AS STRING) AS sval", "n_novel AS n"]),
         # r5: per-doc top-3 TF-IDF keywords — idf scaled to BIGINT
         # (idf_e9) so score/rank/hash are integer-exact
         # (functions/retrieval.py tfidf_topk_terms)
         (PIPELINE_SUITE["tfidf_keywords"],
-         lambda df: df.select(F.lit("tfidf").alias("kind"),
-                              F.col("term").alias("key"),
-                              F.concat_ws(":", F.col("doc_id")
-                                          .cast("string"),
-                                          F.col("tf").cast("string"),
-                                          F.col("rank").cast("string"))
-                              .alias("sval"),
-                              F.col("score_e9").alias("n")),
-         "SELECT 'tfidf' AS kind, term AS key,"
-         " CAST(doc_id AS VARCHAR) || ':' || CAST(tf AS VARCHAR)"
-         " || ':' || CAST(rank AS VARCHAR) AS sval, score_e9 AS n"),
+         ["'tfidf' AS kind", "term AS key",
+          "CAST(doc_id AS STRING) || ':' || CAST(tf AS STRING) || ':'"
+          " || CAST(rank AS STRING) AS sval", "score_e9 AS n"]),
         # r5: top-20 PMI bigram collocations (functions/text.py
         # pmi_collocations, Church & Hanks 1990) — one ln per surviving
         # bigram type, integer-scaled
         (PIPELINE_SUITE["pmi_collocations"],
-         lambda df: df.select(F.lit("pmi").alias("kind"),
-                              F.col("bigram").alias("key"),
-                              F.concat_ws(":", F.col("c_ab").cast("string"),
-                                          F.col("rank").cast("string"))
-                              .alias("sval"),
-                              F.col("pmi_e9").alias("n")),
-         "SELECT 'pmi' AS kind, bigram AS key,"
-         " CAST(c_ab AS VARCHAR) || ':' || CAST(rank AS VARCHAR) AS sval,"
-         " pmi_e9 AS n"),
+         ["'pmi' AS kind", "bigram AS key",
+          "CAST(c_ab AS STRING) || ':' || CAST(rank AS STRING) AS sval",
+          "pmi_e9 AS n"]),
     ),
     # -- counts / offsets / lag: A3, S10, A6/T9, T4 monitoring
     "load_offsets": merged(
         ((q_load_counts, SQL_LOAD_COUNTS),
-         lambda df: df.select(F.lit("load").alias("kind"),
-                              F.col("source").alias("entity"),
-                              F.lit(-1).alias("partition"),
-                              F.col("n").alias("a"),
-                              F.lit(-1).cast("bigint").alias("b"),
-                              F.lit(-1).cast("bigint").alias("c")),
-         "SELECT 'load' AS kind, source AS entity, -1 AS partition, n AS a,"
-         " CAST(-1 AS BIGINT) AS b, CAST(-1 AS BIGINT) AS c"),
+         ["'load' AS kind", "source AS entity", "-1 AS partition",
+          "n AS a", "CAST(-1 AS BIGINT) AS b", "CAST(-1 AS BIGINT) AS c"]),
         ((q_topic_counts, SQL_TOPIC_COUNTS),
-         lambda df: df.select(F.lit("topic").alias("kind"),
-                              F.col("topic").alias("entity"),
-                              F.lit(-1).alias("partition"),
-                              F.col("n").alias("a"),
-                              F.lit(-1).cast("bigint").alias("b"),
-                              F.lit(-1).cast("bigint").alias("c")),
-         "SELECT 'topic' AS kind, topic AS entity, -1 AS partition, n AS a,"
-         " CAST(-1 AS BIGINT) AS b, CAST(-1 AS BIGINT) AS c"),
+         ["'topic' AS kind", "topic AS entity", "-1 AS partition",
+          "n AS a", "CAST(-1 AS BIGINT) AS b", "CAST(-1 AS BIGINT) AS c"]),
         ((q_offset_gaps, SQL_OFFSET_GAPS),
-         lambda df: df.select(F.lit("gaps").alias("kind"),
-                              F.col("topic").alias("entity"), "partition",
-                              F.col("n_msgs").alias("a"),
-                              F.col("max_offset").alias("b"),
-                              F.col("n_gaps").alias("c")),
-         "SELECT 'gaps' AS kind, topic AS entity, partition, n_msgs AS a,"
-         " max_offset AS b, n_gaps AS c"),
+         ["'gaps' AS kind", "topic AS entity", "partition", "n_msgs AS a",
+          "max_offset AS b", "n_gaps AS c"]),
         ((q_offset_watermarks, SQL_OFFSET_WATERMARKS),
-         lambda df: df.select(F.lit("watermark").alias("kind"),
-                              F.col("topic").alias("entity"), "partition",
-                              F.col("max_offset").alias("a"),
-                              F.lit(-1).cast("bigint").alias("b"),
-                              F.lit(-1).cast("bigint").alias("c")),
-         "SELECT 'watermark' AS kind, topic AS entity, partition,"
-         " max_offset AS a, CAST(-1 AS BIGINT) AS b, CAST(-1 AS BIGINT) AS c"),
+         ["'watermark' AS kind", "topic AS entity", "partition",
+          "max_offset AS a", "CAST(-1 AS BIGINT) AS b",
+          "CAST(-1 AS BIGINT) AS c"]),
         ((q_consumer_lag, SQL_CONSUMER_LAG),
-         lambda df: df.select(F.lit("lag").alias("kind"),
-                              F.col("topic").alias("entity"), "partition",
-                              F.col("committed").alias("a"),
-                              F.col("end_offset").alias("b"),
-                              F.col("lag").alias("c")),
-         "SELECT 'lag' AS kind, topic AS entity, partition, committed AS a,"
-         " end_offset AS b, lag AS c"),
+         ["'lag' AS kind", "topic AS entity", "partition",
+          "committed AS a", "end_offset AS b", "lag AS c"]),
         # r4: incremental aggregate maintenance — base ⊎ delta by monoid
         # merge (operators/incremental.py); the oracle recomputes the full
         # range, so the hash match proves the merge algebra
         ((q_incremental_agg, SQL_INCREMENTAL_AGG),
-         lambda df: df.select(F.lit("incr").alias("kind"),
-                              F.col("user_id").cast("string")
-                              .alias("entity"),
-                              F.lit(-1).alias("partition"),
-                              F.col("n").alias("a"),
-                              F.col("last_version").alias("b"),
-                              F.col("total_cents").alias("c")),
-         "SELECT 'incr' AS kind, CAST(user_id AS VARCHAR) AS entity,"
-         " -1 AS partition, n AS a, last_version AS b, total_cents AS c"),
+         ["'incr' AS kind", "CAST(user_id AS STRING) AS entity",
+          "-1 AS partition", "n AS a", "last_version AS b",
+          "total_cents AS c"]),
     ),
     # -- A1/A2 compaction + T5 incremental refresh of the same state
     "latest_state": merged(
         ((q_latest_state, SQL_LATEST_STATE),
-         lambda df: df.select(F.lit("batch").alias("kind"), "topic", "key",
-                              "last_offset", "last_event_type", "last_value"),
-         "SELECT 'batch' AS kind, topic, key, last_offset, last_event_type,"
-         " last_value"),
+         ["'batch' AS kind", "topic", "key", "last_offset",
+          "last_event_type", "last_value"]),
         (ANALYTICS_SUITE["incremental_refresh"],
-         lambda df: df.select(F.lit("incremental").alias("kind"), "topic",
-                              "key", "last_offset",
-                              F.lit("").alias("last_event_type"),
-                              F.lit(-1.0).alias("last_value")),
-         "SELECT 'incremental' AS kind, topic, key, last_offset,"
-         " '' AS last_event_type, CAST(-1.0 AS DOUBLE) AS last_value"),
+         ["'incremental' AS kind", "topic", "key", "last_offset",
+          "'' AS last_event_type", "CAST(-1.0 AS DOUBLE) AS last_value"]),
     ),
     # -- J2 diff + §3.2 sync plan + J3 deletes in one checked surface
     "diff_sync": merged(
         ((q_diff_sides, SQL_DIFF_SIDES),
-         lambda df: df.select(F.lit("diff").alias("kind"), "topic", "key",
-                              F.col("side").alias("detail")),
-         "SELECT 'diff' AS kind, topic, key, side AS detail"),
+         ["'diff' AS kind", "topic", "key", "side AS detail"]),
         ((q_sync_plan, SQL_SYNC_PLAN),
-         lambda df: df.select(F.lit("sync").alias("kind"), "topic", "key",
-                              F.col("value").alias("detail")),
-         "SELECT 'sync' AS kind, topic, key, value AS detail"),
+         ["'sync' AS kind", "topic", "key", "value AS detail"]),
         ((q_deleted_keys, SQL_DELETED_KEYS),
-         lambda df: df.select(F.lit("deleted").alias("kind"), "topic", "key",
-                              F.lit("").alias("detail")),
-         "SELECT 'deleted' AS kind, topic, key, '' AS detail"),
+         ["'deleted' AS kind", "topic", "key", "'' AS detail"]),
     ),
     # T4 verify loop + r4b data-quality expectation battery (the verify
     # family extended from count parity to content gates)
     "verify_retry": merged(
         ((q_verify_retry, SQL_VERIFY_RETRY),
-         lambda df: df.select(F.lit("verify").alias("kind"), "scenario",
-                              F.col("matches").cast("bigint"),
-                              F.col("attempts").cast("bigint"),
-                              F.col("synced").cast("bigint"),
-                              F.col("sync_count").cast("bigint")),
-         "SELECT 'verify' AS kind, scenario, CAST(matches AS BIGINT)"
-         " AS matches, CAST(attempts AS BIGINT) AS attempts,"
-         " CAST(synced AS BIGINT) AS synced,"
-         " CAST(sync_count AS BIGINT) AS sync_count"),
+         ["'verify' AS kind", "scenario",
+          "CAST(matches AS BIGINT) AS matches",
+          "CAST(attempts AS BIGINT) AS attempts",
+          "CAST(synced AS BIGINT) AS synced",
+          "CAST(sync_count AS BIGINT) AS sync_count"]),
         (ANALYTICS_SUITE["expectations"],
-         lambda df: df.select(F.lit("expect").alias("kind"),
-                              F.col("check").alias("scenario"),
-                              F.col("passed").cast("bigint")
-                              .alias("matches"),
-                              F.lit(-1).cast("bigint").alias("attempts"),
-                              F.lit(-1).cast("bigint").alias("synced"),
-                              F.col("n_violations").alias("sync_count")),
-         "SELECT 'expect' AS kind, \"check\" AS scenario,"
-         " CAST(passed AS BIGINT) AS matches,"
-         " CAST(-1 AS BIGINT) AS attempts, CAST(-1 AS BIGINT) AS synced,"
-         " n_violations AS sync_count"),
+         ["'expect' AS kind", "b1.check AS scenario",
+          "CAST(passed AS BIGINT) AS matches",
+          "CAST(-1 AS BIGINT) AS attempts", "CAST(-1 AS BIGINT) AS synced",
+          "n_violations AS sync_count"]),
     ),
     # -- CDC replay (S11/S12/P5-P7/O1) + A4 checkpoint stats
     "cdc_replay": merged(
         ((q_cdc_replay, SQL_CDC_REPLAY),
-         lambda df: df.select(F.lit("replay").alias("kind"), "topic", "key",
-                              "sys_change_operation", "sys_change_version",
-                              "value"),
-         "SELECT 'replay' AS kind, topic, key, sys_change_operation,"
-         " sys_change_version, value"),
+         ["'replay' AS kind", "topic", "key", "sys_change_operation",
+          "sys_change_version", "value"]),
         ((q_cdc_stats, SQL_CDC_STATS),
-         lambda df: df.select(F.lit("stats").alias("kind"),
-                              F.lit("").alias("topic"),
-                              F.lit("").alias("key"),
-                              F.lit("").alias("sys_change_operation"),
-                              F.coalesce("version",
-                                         F.lit(-1).cast("bigint"))
-                              .alias("sys_change_version"),
-                              F.col("sent_count").cast("string")
-                              .alias("value")),
-         "SELECT 'stats' AS kind, '' AS topic, '' AS key,"
-         " '' AS sys_change_operation,"
-         " COALESCE(version, -1) AS sys_change_version,"
-         " CAST(sent_count AS VARCHAR) AS value"),
+         ["'stats' AS kind", "'' AS topic", "'' AS key",
+          "'' AS sys_change_operation",
+          "COALESCE(version, -1) AS sys_change_version",
+          "CAST(sent_count AS STRING) AS value"]),
         # r4: SCD Type 2 — validity intervals from the same change stream
         # (operators/scd.py); value packs (valid_to, is_current)
         ((q_scd2_dimension, SQL_SCD2_DIMENSION),
-         lambda df: df.select(
-             F.lit("scd2").alias("kind"), F.lit("").alias("topic"),
-             F.col("c_custkey").cast("string").alias("key"),
-             "sys_change_operation",
-             F.col("valid_from").alias("sys_change_version"),
-             F.concat_ws("|",
-                         F.coalesce(F.col("valid_to").cast("string"),
-                                    F.lit("open")),
-                         F.col("is_current").cast("string"))
-             .alias("value")),
-         "SELECT 'scd2' AS kind, '' AS topic,"
-         " CAST(c_custkey AS VARCHAR) AS key, sys_change_operation,"
-         " valid_from AS sys_change_version,"
-         " COALESCE(CAST(valid_to AS VARCHAR), 'open') || '|' ||"
-         " CAST(is_current AS VARCHAR) AS value"),
+         ["'scd2' AS kind", "'' AS topic",
+          "CAST(c_custkey AS STRING) AS key", "sys_change_operation",
+          "valid_from AS sys_change_version",
+          "COALESCE(CAST(valid_to AS STRING), 'open') || '|'"
+          " || CAST(is_current AS STRING) AS value"]),
         # r5: point-in-time join — facts matched to the dimension version
         # valid at their own change version (operators/scd.py pit_join);
         # value packs (is_current, n_facts, last_at)
         (ANALYTICS_SUITE["pit_join"],
-         lambda df: df.select(
-             F.lit("pit").alias("kind"), F.lit("").alias("topic"),
-             F.col("c_custkey").cast("string").alias("key"),
-             F.lit("").alias("sys_change_operation"),
-             F.col("valid_from").alias("sys_change_version"),
-             F.concat_ws("|", F.col("is_current").cast("string"),
-                         F.col("n_facts").cast("string"),
-                         F.col("last_at").cast("string")).alias("value")),
-         "SELECT 'pit' AS kind, '' AS topic,"
-         " CAST(c_custkey AS VARCHAR) AS key, '' AS sys_change_operation,"
-         " valid_from AS sys_change_version,"
-         " CAST(is_current AS VARCHAR) || '|' || CAST(n_facts AS VARCHAR)"
-         " || '|' || CAST(last_at AS VARCHAR) AS value"),
+         ["'pit' AS kind", "'' AS topic",
+          "CAST(c_custkey AS STRING) AS key", "'' AS sys_change_operation",
+          "valid_from AS sys_change_version",
+          "CAST(is_current AS STRING) || '|' || CAST(n_facts AS STRING)"
+          " || '|' || CAST(last_at AS STRING) AS value"]),
         # r6: net-effect batching — per key the ONE idempotent op an
         # applier needs; value packs (first_op, last_op, n, first_v)
         ((q_cdc_net_effect, SQL_CDC_NET_EFFECT),
-         lambda df: df.select(
-             F.lit("net").alias("kind"), F.lit("").alias("topic"),
-             F.col("c_custkey").cast("string").alias("key"),
-             F.col("net_op").alias("sys_change_operation"),
-             F.col("last_version").alias("sys_change_version"),
-             F.concat_ws("|", "first_op", "last_op",
-                         F.col("n_changes").cast("string"),
-                         F.col("first_version").cast("string"))
-             .alias("value")),
-         "SELECT 'net' AS kind, '' AS topic,"
-         " CAST(c_custkey AS VARCHAR) AS key,"
-         " net_op AS sys_change_operation,"
-         " last_version AS sys_change_version,"
-         " first_op || '|' || last_op || '|' ||"
-         " CAST(n_changes AS VARCHAR) || '|' ||"
-         " CAST(first_version AS VARCHAR) AS value"),
+         ["'net' AS kind", "'' AS topic",
+          "CAST(c_custkey AS STRING) AS key",
+          "net_op AS sys_change_operation",
+          "last_version AS sys_change_version",
+          "first_op || '|' || last_op || '|' || CAST(n_changes AS STRING)"
+          " || '|' || CAST(first_version AS STRING) AS value"]),
     ),
     # -- catalog: S1-S3/P3/P4/A5/O3 discovery + E1 drift + P9/J4/E2 trackable
     "schema_catalog": merged(
         ((q_schema_discovery, SQL_SCHEMA_DISCOVERY),
-         lambda df: df.select(F.lit("columns").alias("kind"), "table_schem",
-                              "table_name",
-                              F.col("columns_csv").alias("d1"),
-                              F.col("keys_csv").alias("d2")),
-         "SELECT 'columns' AS kind, table_schem, table_name,"
-         " columns_csv AS d1, keys_csv AS d2"),
+         ["'columns' AS kind", "table_schem", "table_name",
+          "columns_csv AS d1", "keys_csv AS d2"]),
         ((q_schema_drift, SQL_SCHEMA_DRIFT),
-         lambda df: df.select(F.lit("drift").alias("kind"), "table_schem",
-                              "table_name", F.col("status").alias("d1"),
-                              F.lit("").alias("d2")),
-         "SELECT 'drift' AS kind, table_schem, table_name, status AS d1,"
-         " '' AS d2"),
+         ["'drift' AS kind", "table_schem", "table_name", "status AS d1",
+          "'' AS d2"]),
         ((q_trackable_tables, SQL_TRACKABLE),
-         lambda df: df.select(F.lit("trackable").alias("kind"), "table_schem",
-                              "table_name", F.lit("").alias("d1"),
-                              F.lit("").alias("d2")),
-         "SELECT 'trackable' AS kind, table_schem, table_name, '' AS d1,"
-         " '' AS d2"),
+         ["'trackable' AS kind", "table_schem", "table_name", "'' AS d1",
+          "'' AS d2"]),
         # r4b: ANALYZE-style content statistics extend the catalog family
         # (one scan per table; counts stringified — integers render
         # identically on both engines)
         (ANALYTICS_SUITE["table_stats"],
-         lambda df: df.select(
-             F.lit("stats").alias("kind"),
-             F.lit("main").alias("table_schem"), "table_name",
-             F.col("column").alias("d1"),
-             F.concat_ws(":", F.col("n_rows").cast("string"),
-                         F.col("n_nulls").cast("string"),
-                         F.col("n_distinct").cast("string")).alias("d2")),
-         "SELECT 'stats' AS kind, 'main' AS table_schem, table_name,"
-         " \"column\" AS d1, CAST(n_rows AS VARCHAR) || ':' ||"
-         " CAST(n_nulls AS VARCHAR) || ':' || CAST(n_distinct AS VARCHAR)"
-         " AS d2"),
+         ["'stats' AS kind", "'main' AS table_schem", "table_name",
+          "b3.column AS d1",
+          "CAST(n_rows AS STRING) || ':' || CAST(n_nulls AS STRING) || ':'"
+          " || CAST(n_distinct AS STRING) AS d2"]),
         # r6: schema-evolution compatibility verdicts (catalog/compat.py
         # — Avro promotion rules) above drift's did-anything-change
         ((q_schema_compat, SQL_SCHEMA_COMPAT),
-         lambda df: df.select(
-             F.lit("compat").alias("kind"),
-             F.lit("main").alias("table_schem"), "table_name",
-             F.col("column").alias("d1"),
-             F.concat_ws(":", "status",
-                         F.col("breaking").cast("string")).alias("d2")),
-         "SELECT 'compat' AS kind, 'main' AS table_schem, table_name,"
-         " \"column\" AS d1, status || ':' || CAST(breaking AS VARCHAR)"
-         " AS d2"),
+         ["'compat' AS kind", "'main' AS table_schem", "table_name",
+          "b4.column AS d1",
+          "status || ':' || CAST(breaking AS STRING) AS d2"]),
     ),
     # -- F3 JSON decode, classic get_json_object + Spark 4 VARIANT path
     "json_variant_extract": merged(
         ((q_json_extract, SQL_JSON_EXTRACT),
-         lambda df: df.select(F.lit("json").alias("kind"), "event_id", "k",
-                              F.lit(-1).cast("bigint").alias("k_bucket")),
-         "SELECT 'json' AS kind, event_id, k,"
-         " CAST(-1 AS BIGINT) AS k_bucket"),
+         ["'json' AS kind", "event_id", "k",
+          "CAST(-1 AS BIGINT) AS k_bucket"]),
         ((q_variant_extract, SQL_VARIANT_EXTRACT),
-         lambda df: df.select(F.lit("variant").alias("kind"), "event_id",
-                              "k", "k_bucket"),
-         "SELECT 'variant' AS kind, event_id, k, k_bucket"),
+         ["'variant' AS kind", "event_id", "k", "k_bucket"]),
     ),
     # -- F5 blob->base64 + F8 ISO-8601 timestamp rendering
     "encoders": merged(
         ((q_binary_base64, SQL_BINARY_BASE64),
-         lambda df: df.select(F.lit("base64").alias("kind"),
-                              F.col("doc_id").alias("id"),
-                              F.col("payload_b64").alias("encoded")),
-         "SELECT 'base64' AS kind, doc_id AS id, payload_b64 AS encoded"),
+         ["'base64' AS kind", "doc_id AS id", "payload_b64 AS encoded"]),
         ((q_iso_timestamps, SQL_ISO_TIMESTAMPS),
-         lambda df: df.select(F.lit("iso_ts").alias("kind"),
-                              F.col("event_id").alias("id"),
-                              F.col("ts_iso").alias("encoded")),
-         "SELECT 'iso_ts' AS kind, event_id AS id, ts_iso AS encoded"),
+         ["'iso_ts' AS kind", "event_id AS id", "ts_iso AS encoded"]),
     ),
     # -- custom connectors: synthetic CT feed + the executed broker loop
     #    (S8 S10 S14 S15 T1 compaction — see q_broker_roundtrip)
     "python_datasource": merged(
         ((q_python_datasource, SQL_PYTHON_DATASOURCE),
-         lambda df: df.select(
-             F.lit("feed").alias("kind"),
-             F.col("sys_change_operation").alias("c1"),
-             F.col("n").cast("string").alias("c2"),
-             F.col("max_version").cast("string").alias("c3"),
-             F.col("min_pk").cast("string").alias("c4")),
-         "SELECT 'feed' AS kind, sys_change_operation AS c1,"
-         " CAST(n AS VARCHAR) AS c2, CAST(max_version AS VARCHAR) AS c3,"
-         " CAST(min_pk AS VARCHAR) AS c4"),
+         ["'feed' AS kind", "sys_change_operation AS c1",
+          "CAST(n AS STRING) AS c2", "CAST(max_version AS STRING) AS c3",
+          "CAST(min_pk AS STRING) AS c4"]),
         ((q_broker_roundtrip, SQL_BROKER_ROUNDTRIP),
-         lambda df: df.select(
-             F.lit("broker").alias("kind"),
-             F.col("key").alias("c1"),
-             F.col("value").alias("c2"),
-             F.col("topic").alias("c3"),
-             F.lit("").alias("c4")),
-         "SELECT 'broker' AS kind, key AS c1, value AS c2,"
-         " topic AS c3, '' AS c4"),
+         ["'broker' AS kind", "key AS c1", "value AS c2", "topic AS c3",
+          "'' AS c4"]),
         ((q_stream_broker_sync, SQL_STREAM_BROKER_SYNC),
-         lambda df: df.select(
-             F.lit("stream_sink").alias("kind"),
-             F.col("key").alias("c1"),
-             F.col("value").alias("c2"),
-             F.col("topic").alias("c3"),
-             F.lit("").alias("c4")),
-         "SELECT 'stream_sink' AS kind, key AS c1, value AS c2,"
-         " topic AS c3, '' AS c4")),
+         ["'stream_sink' AS kind", "key AS c1", "value AS c2",
+          "topic AS c3", "'' AS c4"])),
     "tpch_q1": (q_tpch_q1, SQL_TPCH_Q1),
     "tpch_q3": (q_tpch_q3, SQL_TPCH_Q3),
     # -- LLM-pipeline text analysis: stats + quality + repetition + PII,
@@ -2160,131 +1939,73 @@ SUITE: dict[str, tuple] = {
     #    reassembled from surviving spans)
     "dedup_exact": merged(
         (PIPELINE_SUITE["dedup_exact"],
-         lambda df: df.select(F.lit("exact").alias("kind"),
-                              F.col("fingerprint").alias("k1"),
-                              F.col("n_docs").alias("n1"),
-                              F.col("min_doc").alias("n2"),
-                              F.lit("").alias("s1")),
-         "SELECT 'exact' AS kind, fingerprint AS k1, n_docs AS n1,"
-         " min_doc AS n2, '' AS s1"),
+         ["'exact' AS kind", "fingerprint AS k1", "n_docs AS n1",
+          "min_doc AS n2", "'' AS s1"]),
         (PIPELINE_SUITE["span_dedup"],
-         lambda df: df.select(F.lit("spans").alias("kind"),
-                              F.col("doc_id").cast("string").alias("k1"),
-                              F.col("n_spans").alias("n1"),
-                              F.col("n_removed").alias("n2"),
-                              F.col("text_dedup").alias("s1")),
-         "SELECT 'spans' AS kind, CAST(doc_id AS VARCHAR) AS k1,"
-         " n_spans AS n1, n_removed AS n2, text_dedup AS s1"),
+         ["'spans' AS kind", "CAST(doc_id AS STRING) AS k1",
+          "n_spans AS n1", "n_removed AS n2", "text_dedup AS s1"]),
         # r4b: incremental dedup of a new batch against the fingerprint
         # store (the ingestion shape — the corpus is never re-deduped)
         (PIPELINE_SUITE["incremental_dedup"],
-         lambda df: df.select(F.lit("incr").alias("kind"),
-                              F.col("fp").alias("k1"),
-                              F.col("doc_id").alias("n1"),
-                              F.col("dup_of").alias("n2"),
-                              F.col("verdict").alias("s1")),
-         "SELECT 'incr' AS kind, fp AS k1, doc_id AS n1, dup_of AS n2,"
-         " verdict AS s1"),
+         ["'incr' AS kind", "fp AS k1", "doc_id AS n1", "dup_of AS n2",
+          "verdict AS s1"]),
         # r11: longest contaminated span per train doc vs the benchmark
         # slice (+ planted 12-token prefix leaks) — consecutive shared
         # 8-gram starts certify span length; gaps-and-islands, digest
         # joins only
         (PIPELINE_SUITE["decontam_span"],
-         lambda df: df.select(F.lit("cspan").alias("kind"),
-                              F.col("doc_id").cast("string").alias("k1"),
-                              F.col("n_shared").alias("n1"),
-                              F.col("max_span_tokens").alias("n2"),
-                              F.lit("").alias("s1")),
-         "SELECT 'cspan' AS kind, CAST(doc_id AS VARCHAR) AS k1,"
-         " n_shared AS n1, max_span_tokens AS n2, '' AS s1"),
+         ["'cspan' AS kind", "CAST(doc_id AS STRING) AS k1",
+          "n_shared AS n1", "max_span_tokens AS n2", "'' AS s1"]),
         # r7: maximal duplicated-substring spans (Lee et al. ExactSubstr,
         # sliding-shingle restatement) — offset-exact, finds duplicates
         # that straddle span_dedup's non-overlapping block boundaries
         (PIPELINE_SUITE["exact_substring"],
-         lambda df: df.select(F.lit("substr").alias("kind"),
-                              F.col("doc_id").cast("string").alias("k1"),
-                              F.col("span_start").cast("bigint")
-                              .alias("n1"),
-                              F.col("span_tokens").cast("bigint")
-                              .alias("n2"),
-                              F.lit("").alias("s1")),
-         "SELECT 'substr' AS kind, CAST(doc_id AS VARCHAR) AS k1,"
-         " CAST(span_start AS BIGINT) AS n1,"
-         " CAST(span_tokens AS BIGINT) AS n2, '' AS s1"),
+         ["'substr' AS kind", "CAST(doc_id AS STRING) AS k1",
+          "CAST(span_start AS BIGINT) AS n1",
+          "CAST(span_tokens AS BIGINT) AS n2", "'' AS s1"]),
     ),
     # n-gram Jaccard near-dup: the inverted-index join and the r4b
     # PPJoin-style prefix-filtered join must produce the SAME pair set —
     # both branches check against the same plain-Jaccard oracle
     "dedup_jaccard": merged(
         (PIPELINE_SUITE["dedup_jaccard"],
-         lambda df: df.select(F.lit("inverted").alias("kind"),
-                              "doc_a", "doc_b", "jaccard"),
-         "SELECT 'inverted' AS kind, doc_a, doc_b, jaccard"),
+         ["'inverted' AS kind", "doc_a", "doc_b", "jaccard"]),
         (PIPELINE_SUITE["prefix_jaccard"],
-         lambda df: df.select(F.lit("prefix").alias("kind"),
-                              "doc_a", "doc_b", "jaccard"),
-         "SELECT 'prefix' AS kind, doc_a, doc_b, jaccard"),
+         ["'prefix' AS kind", "doc_a", "doc_b", "jaccard"]),
         # r5: contrastive training triplets mined from the same pairs —
         # the negative id rides the double slot (exact below 2^53)
         (PIPELINE_SUITE["contrastive"],
-         lambda df: df.select(F.lit("triplet").alias("kind"),
-                              F.col("anchor").alias("doc_a"),
-                              F.col("positive").alias("doc_b"),
-                              F.col("negative").cast("double")
-                              .alias("jaccard")),
-         "SELECT 'triplet' AS kind, anchor AS doc_a, positive AS doc_b,"
-         " CAST(negative AS DOUBLE) AS jaccard"),
+         ["'triplet' AS kind", "anchor AS doc_a", "positive AS doc_b",
+          "CAST(negative AS DOUBLE) AS jaccard"]),
         # r5: overlap-coefficient containment pairs (functions/dedup.py
         # containment_pairs) — the asymmetric doc-inside-doc detector;
         # the ratio rides the jaccard slot
         (PIPELINE_SUITE["containment"],
-         lambda df: df.select(F.lit("contain").alias("kind"),
-                              "doc_a", "doc_b",
-                              F.col("containment").alias("jaccard")),
-         "SELECT 'contain' AS kind, doc_a, doc_b,"
-         " containment AS jaccard"),
+         ["'contain' AS kind", "doc_a", "doc_b", "containment AS jaccard"]),
     ),
     # self-join LSH + r5 incremental batch-vs-store near-dup (the store's
     # persisted signatures are banded against the batch only — no
     # store×store re-banding on ingest)
     "dedup_minhash_lsh": merged(
         (PIPELINE_SUITE["dedup_minhash_lsh"],
-         lambda df: df.select(F.lit("self").alias("kind"),
-                              "doc_a", "doc_b", "jaccard"),
-         "SELECT 'self' AS kind, doc_a, doc_b, jaccard"),
+         ["'self' AS kind", "doc_a", "doc_b", "jaccard"]),
         (PIPELINE_SUITE["incremental_minhash"],
-         lambda df: df.select(F.lit("incr").alias("kind"),
-                              F.col("batch_doc").alias("doc_a"),
-                              F.col("store_doc").alias("doc_b"),
-                              "jaccard"),
-         "SELECT 'incr' AS kind, batch_doc AS doc_a, store_doc AS doc_b,"
-         " jaccard"),
+         ["'incr' AS kind", "batch_doc AS doc_a", "store_doc AS doc_b",
+          "jaccard"]),
         # r6: the (bands, rows) S-curve planner that justifies this
         # entry's LSH parameters — doc_a packs bands*100+rows, doc_b is
         # the Jaccard decile (-1 = the per-plan threshold estimate row)
         (PIPELINE_SUITE["lsh_planner"],
-         lambda df: df.select(
-             F.lit("plan").alias("kind"),
-             (F.col("bands") * 100 + F.col("rows_per_band"))
-             .cast("bigint").alias("doc_a"),
-             F.col("s_e1").cast("bigint").alias("doc_b"),
-             F.col("p_collide").alias("jaccard")),
-         "SELECT 'plan' AS kind,"
-         " CAST(bands * 100 + rows_per_band AS BIGINT) AS doc_a,"
-         " CAST(s_e1 AS BIGINT) AS doc_b, p_collide AS jaccard"),
+         ["'plan' AS kind",
+          "CAST(bands * 100 + rows_per_band AS BIGINT) AS doc_a",
+          "CAST(s_e1 AS BIGINT) AS doc_b", "p_collide AS jaccard"]),
         # r6: measured LSH recall vs exact truth — the planner's
         # S-curve checked empirically on this corpus; doc_b packs
         # (n_true, n_caught), recall ppm rides the double slot exactly
         (PIPELINE_SUITE["minhash_recall"],
-         lambda df: df.select(
-             F.lit("recall").alias("kind"),
-             F.col("thr_e2").cast("bigint").alias("doc_a"),
-             (F.col("n_true") * 4_294_967_296 + F.col("n_caught"))
-             .cast("bigint").alias("doc_b"),
-             F.col("recall_ppm").cast("double").alias("jaccard")),
-         "SELECT 'recall' AS kind, CAST(thr_e2 AS BIGINT) AS doc_a,"
-         " CAST(n_true * 4294967296 + n_caught AS BIGINT) AS doc_b,"
-         " CAST(recall_ppm AS DOUBLE) AS jaccard"),
+         ["'recall' AS kind", "CAST(thr_e2 AS BIGINT) AS doc_a",
+          "CAST(n_true * 4294967296 + n_caught AS BIGINT) AS doc_b",
+          "CAST(recall_ppm AS DOUBLE) AS jaccard"]),
     ),
     # -- the two iterative graph algorithms share one entry: connected
     #    components (label propagation) + r4's fixed-point PageRank
@@ -2292,397 +2013,235 @@ SUITE: dict[str, tuple] = {
     #    CTEs match bit-for-bit)
     "dedup_clusters": merged(
         (PIPELINE_SUITE["dedup_clusters"],
-         lambda df: df.select(F.lit("cc").alias("kind"),
-                              F.col("doc_id").alias("id"),
-                              F.col("cluster_id").alias("val")),
-         "SELECT 'cc' AS kind, doc_id AS id, cluster_id AS val"),
+         ["'cc' AS kind", "doc_id AS id", "cluster_id AS val"]),
         # r10: cluster-aware train/val/test split (functions/cleaning.py
         # cluster_split) — whole near-dup clusters route the split so
         # train and eval can never share near-duplicates; the
         # __naive_leak rows quantify the contamination a per-doc hash
         # split would have caused. Unpivoted to (kind, -1, val).
         (PIPELINE_SUITE["cluster_split"],
-         lambda df: df.select(F.explode(F.array(
-             F.struct(F.concat(F.lit("cs_docs:"), F.col("split"))
-                      .alias("kind"),
-                      F.col("n_docs").cast("double").alias("val")),
-             F.struct(F.concat(F.lit("cs_clusters:"), F.col("split"))
-                      .alias("kind"),
-                      F.col("n_clusters").cast("double").alias("val")),
-             F.struct(F.concat(F.lit("cs_chars:"), F.col("split"))
-                      .alias("kind"),
-                      F.col("sum_chars").cast("double").alias("val"))))
-             .alias("s"))
-         .select(F.col("s.kind").alias("kind"),
-                 F.lit(-1).cast("bigint").alias("id"),
-                 F.col("s.val").alias("val")),
-         "SELECT unnest(['cs_docs:' || split, 'cs_clusters:' || split,"
-         " 'cs_chars:' || split]) AS kind, CAST(-1 AS BIGINT) AS id,"
-         " unnest([CAST(n_docs AS DOUBLE), CAST(n_clusters AS DOUBLE),"
-         " CAST(sum_chars AS DOUBLE)]) AS val"),
+         [["'cs_docs:' || split AS kind", "CAST(-1 AS BIGINT) AS id",
+           "CAST(n_docs AS DOUBLE) AS val"],
+          ["'cs_clusters:' || split AS kind", "CAST(-1 AS BIGINT) AS id",
+           "CAST(n_clusters AS DOUBLE) AS val"],
+          ["'cs_chars:' || split AS kind", "CAST(-1 AS BIGINT) AS id",
+           "CAST(sum_chars AS DOUBLE) AS val"]]),
         (ANALYTICS_SUITE["pagerank"],
-         lambda df: df.select(F.lit("pagerank").alias("kind"),
-                              F.col("node").alias("id"),
-                              F.col("score").alias("val")),
-         "SELECT 'pagerank' AS kind, node AS id, score AS val"),
+         ["'pagerank' AS kind", "node AS id", "score AS val"]),
         # r4b: bipartite butterfly census (functions/graph.py) — the
         # scalar summary unpivots into tagged rows; the clustering
         # coefficient is the exact quotient 4*bf_count/bf_wedges and is
         # re-asserted with the constituent check + pytest
         (ANALYTICS_SUITE["butterflies"],
-         lambda df: df.selectExpr(
-             "stack(5, 'bf_edges', n_edges, 'bf_left', n_left,"
-             " 'bf_wedges', wedges, 'bf_rpairs', right_pairs,"
-             " 'bf_count', butterflies) AS (kind, val)")
-         .select("kind", F.lit(-1).cast("bigint").alias("id"), "val"),
-         "SELECT unnest(['bf_edges', 'bf_left', 'bf_wedges',"
-         " 'bf_rpairs', 'bf_count']) AS kind, CAST(-1 AS BIGINT) AS id,"
-         " unnest([n_edges, n_left, wedges, right_pairs, butterflies])"
-         " AS val"),
+         [["'bf_edges' AS kind", "CAST(-1 AS BIGINT) AS id",
+           "n_edges AS val"],
+          ["'bf_left' AS kind", "CAST(-1 AS BIGINT) AS id", "n_left AS val"],
+          ["'bf_wedges' AS kind", "CAST(-1 AS BIGINT) AS id",
+           "wedges AS val"],
+          ["'bf_rpairs' AS kind", "CAST(-1 AS BIGINT) AS id",
+           "right_pairs AS val"],
+          ["'bf_count' AS kind", "CAST(-1 AS BIGINT) AS id",
+           "butterflies AS val"]]),
         # r5: degree-ordered exact triangle census over the supplier
         # co-supply graph (functions/graph.py triangle_count) — the
         # unipartite complement of the butterfly census; transitivity is
         # re-asserted in the constituent check (exact-integer quotient)
         (ANALYTICS_SUITE["triangles"],
-         lambda df: df.selectExpr(
-             "stack(4, 'tri_nodes', n_nodes, 'tri_edges', n_edges,"
-             " 'tri_wedges', wedges, 'tri_count', triangles)"
-             " AS (kind, val)")
-         .select("kind", F.lit(-2).cast("bigint").alias("id"), "val"),
-         "SELECT unnest(['tri_nodes', 'tri_edges', 'tri_wedges',"
-         " 'tri_count']) AS kind, CAST(-2 AS BIGINT) AS id,"
-         " unnest([n_nodes, n_edges, wedges, triangles]) AS val"),
+         [["'tri_nodes' AS kind", "CAST(-2 AS BIGINT) AS id",
+           "n_nodes AS val"],
+          ["'tri_edges' AS kind", "CAST(-2 AS BIGINT) AS id",
+           "n_edges AS val"],
+          ["'tri_wedges' AS kind", "CAST(-2 AS BIGINT) AS id",
+           "wedges AS val"],
+          ["'tri_count' AS kind", "CAST(-2 AS BIGINT) AS id",
+           "triangles AS val"]]),
         # r5: k-core peeling (Matula-Beck) — dense-region membership
         (ANALYTICS_SUITE["kcore"],
-         lambda df: df.select(F.lit("kcore").alias("kind"),
-                              F.col("node").alias("id"),
-                              F.col("deg").alias("val")),
-         "SELECT 'kcore' AS kind, node AS id, deg AS val"),
+         ["'kcore' AS kind", "node AS id", "deg AS val"]),
         # r5: Adamic-Adar link prediction — supplier pairs through shared
         # customers, integer-scaled neighbor weights (functions/graph.py
         # adamic_adar); id packs the pair as u*2^32+v — collision-free
         # for any suppkey < 2^32 (u*1e6+v aliased once keys passed 1e6)
         (ANALYTICS_SUITE["adamic_adar"],
-         lambda df: df.selectExpr(
-             "stack(2, 'aa', aa_e9, 'aa_n', n_common) AS (kind, val)",
-             "u * 4294967296 + v AS id").select("kind", "id", "val"),
-         "SELECT unnest(['aa', 'aa_n']) AS kind, u * 4294967296 + v AS id,"
-         " unnest([aa_e9, n_common]) AS val"),
+         [["'aa' AS kind", "u * 4294967296 + v AS id", "aa_e9 AS val"],
+          ["'aa_n' AS kind", "u * 4294967296 + v AS id", "n_common AS val"]]),
         # r5: HyperBall-with-KMV 2-hop reach estimation per supplier node
         # (functions/graph.py kmv_reach); kth is the sketch state
         (ANALYTICS_SUITE["kmv_reach"],
-         lambda df: df.selectExpr(
-             "stack(2, 'reach', reach, 'reach_kth', kth) AS (kind, val)",
-             "node AS id").select("kind", "id", "val"),
-         "SELECT unnest(['reach', 'reach_kth']) AS kind, node AS id,"
-         " unnest([reach, kth]) AS val"),
+         [["'reach' AS kind", "node AS id", "reach AS val"],
+          ["'reach_kth' AS kind", "node AS id", "kth AS val"]]),
         # r5: fixed-point HITS over the directed purchase graph
         # (functions/graph.py hits_int) — hub and authority vectors as
         # tagged rows, bit-exact in BIGINT max-normalized arithmetic
         (ANALYTICS_SUITE["hits"],
-         lambda df: df.selectExpr(
-             "stack(2, 'hits_hub', hub, 'hits_auth', authority)"
-             " AS (kind, val)", "node AS id")
-         .select("kind", "id", "val"),
-         "SELECT unnest(['hits_hub', 'hits_auth']) AS kind,"
-         " node AS id, unnest([hub, authority]) AS val"),
+         [["'hits_hub' AS kind", "node AS id", "hub AS val"],
+          ["'hits_auth' AS kind", "node AS id", "authority AS val"]]),
         # r5: Personalized PageRank from seed customers {1,2,3} —
         # restart-to-seed proximity ranking (functions/graph.py ppr_int)
         (ANALYTICS_SUITE["ppr"],
-         lambda df: df.select(F.lit("ppr").alias("kind"),
-                              F.col("node").alias("id"),
-                              F.col("score").alias("val")),
-         "SELECT 'ppr' AS kind, node AS id, score AS val"),
+         ["'ppr' AS kind", "node AS id", "score AS val"]),
         # r5: canonical-representative selection (functions/dedup.py
         # canonical_docs) — val packs cluster_id*2 + keep
         (PIPELINE_SUITE["canonical_docs"],
-         lambda df: df.select(F.lit("canon").alias("kind"),
-                              F.col("doc_id").alias("id"),
-                              (F.col("cluster_id") * 2 + F.col("keep"))
-                              .cast("bigint").alias("val")),
-         "SELECT 'canon' AS kind, doc_id AS id,"
-         " CAST(cluster_id * 2 + keep AS BIGINT) AS val"),
+         ["'canon' AS kind", "doc_id AS id",
+          "CAST(cluster_id * 2 + keep AS BIGINT) AS val"]),
         # r6: deterministic synchronous label propagation — the
         # near-linear community detector beside the exact CC clusters
         (ANALYTICS_SUITE["lpa_communities"],
-         lambda df: df.select(F.lit("lpa").alias("kind"),
-                              F.col("node").alias("id"),
-                              F.col("community").alias("val")),
-         "SELECT 'lpa' AS kind, node AS id, community AS val"),
+         ["'lpa' AS kind", "node AS id", "community AS val"]),
         # r7: Newman-Girvan modularity of that LPA partition — the
         # community-quality score; 4 stats unpivot per community
         (ANALYTICS_SUITE["modularity"],
-         lambda df: df.selectExpr(
-             "community",
-             "stack(4, 'mod_n', n_nodes, 'mod_e', e_intra,"
-             " 'mod_d', d_sum, 'mod_q', q_e9) AS (kind, val)")
-         .select("kind", F.col("community").alias("id"), "val"),
-         "SELECT unnest(['mod_n', 'mod_e', 'mod_d', 'mod_q']) AS kind,"
-         " community AS id, unnest([n_nodes, e_intra, d_sum, q_e9])"
-         " AS val"),
+         [["'mod_n' AS kind", "community AS id", "n_nodes AS val"],
+          ["'mod_e' AS kind", "community AS id", "e_intra AS val"],
+          ["'mod_d' AS kind", "community AS id", "d_sum AS val"],
+          ["'mod_q' AS kind", "community AS id", "q_e9 AS val"]]),
         # r6: hash-deterministic DeepWalk corpus — val packs the 3-hop
         # path (node ids < 2^21 on this graph: custkey < 2^21,
         # 1e6+suppkey < 2^21)
         (ANALYTICS_SUITE["random_walks"],
-         lambda df: df.select(
-             F.lit("walk").alias("kind"),
-             F.col("start").alias("id"),
-             ((F.col("n1") * F.lit(2097152) + F.col("n2"))
-              * F.lit(2097152) + F.col("n3")).cast("bigint")
-             .alias("val")),
-         "SELECT 'walk' AS kind, start AS id,"
-         " CAST((n1 * 2097152 + n2) * 2097152 + n3 AS BIGINT) AS val"),
+         ["'walk' AS kind", "start AS id",
+          "CAST((n1 * 2097152 + n2) * 2097152 + n3 AS BIGINT) AS val"]),
     ),
     "simhash": PIPELINE_SUITE["simhash"],
     "simhash_near_dup": merged(
         (PIPELINE_SUITE["simhash_near_dup"],
-         lambda df: df.select(F.lit(16).alias("bits"), "doc_a", "doc_b",
-                              "hamming"),
-         "SELECT 16 AS bits, doc_a, doc_b, hamming"),
+         ["16 AS bits", "doc_a", "doc_b", "hamming"]),
         (PIPELINE_SUITE["simhash64_near_dup"],
-         lambda df: df.select(F.lit(64).alias("bits"), "doc_a", "doc_b",
-                              "hamming"),
-         "SELECT 64 AS bits, doc_a, doc_b, hamming"),
+         ["64 AS bits", "doc_a", "doc_b", "hamming"]),
     ),
     # -- brute-force vector top-k + NEW r3 BM25 lexical top-k (the two
     #    halves of a retrieval stack share one entry)
     "ann_cosine_topk": merged(
         (PIPELINE_SUITE["ann_cosine_topk"],
-         lambda df: df.select(F.lit("ann").alias("kind"),
-                              F.col("query_id").alias("qid"),
-                              F.col("neighbor_id").alias("did"),
-                              "rank", F.col("cos").alias("v")),
-         "SELECT 'ann' AS kind, query_id AS qid, neighbor_id AS did,"
-         " rank, cos AS v"),
+         ["'ann' AS kind", "query_id AS qid", "neighbor_id AS did", "rank",
+          "cos AS v"]),
         # r10: int8 scan + full-precision rerank (functions/similarity.py
         # int8_rerank_topk — the memory-bound scale path; in_exact folds
         # into the kind so measured recall hashes per neighbor)
         (PIPELINE_SUITE["ann_int8_rerank"],
-         lambda df: df.select(
-             F.when(F.col("in_exact") == 1, F.lit("int8_hit"))
-             .otherwise(F.lit("int8_miss")).alias("kind"),
-             F.col("query_id").alias("qid"),
-             F.col("neighbor_id").alias("did"),
-             "rank", F.col("cos").alias("v")),
-         "SELECT CASE WHEN in_exact = 1 THEN 'int8_hit'"
-         " ELSE 'int8_miss' END AS kind, query_id AS qid,"
-         " neighbor_id AS did, rank, cos AS v"),
+         ["CASE WHEN in_exact = 1 THEN 'int8_hit' ELSE 'int8_miss' END AS"
+          " kind", "query_id AS qid", "neighbor_id AS did", "rank",
+          "cos AS v"]),
         (PIPELINE_SUITE["bm25_topk"],
-         lambda df: df.select(F.lit("bm25").alias("kind"),
-                              F.lit(-1).cast("bigint").alias("qid"),
-                              F.col("doc_id").alias("did"),
-                              "rank", F.col("score").alias("v")),
-         "SELECT 'bm25' AS kind, CAST(-1 AS BIGINT) AS qid, doc_id AS did,"
-         " rank, score AS v"),
+         ["'bm25' AS kind", "CAST(-1 AS BIGINT) AS qid", "doc_id AS did",
+          "rank", "score AS v"]),
         (PIPELINE_SUITE["rrf_fusion"],
-         lambda df: df.select(F.lit("rrf").alias("kind"),
-                              F.lit(0).cast("bigint").alias("qid"),
-                              F.col("item").alias("did"),
-                              "rank", F.col("fused").alias("v")),
-         "SELECT 'rrf' AS kind, CAST(0 AS BIGINT) AS qid, item AS did,"
-         " rank, fused AS v"),
+         ["'rrf' AS kind", "CAST(0 AS BIGINT) AS qid", "item AS did",
+          "rank", "fused AS v"]),
         # r4: fusion QUALITY — recall@10 of the fused list vs the exact
         # cosine ground truth (ivf_recall's mirror for hybrid retrieval)
         (PIPELINE_SUITE["rrf_recall"],
-         lambda df: df.select(F.lit("rrf_recall").alias("kind"),
-                              F.lit(0).cast("bigint").alias("qid"),
-                              F.col("hits").alias("did"),
-                              F.lit(-1).alias("rank"),
-                              F.col("recall").alias("v")),
-         "SELECT 'rrf_recall' AS kind, CAST(0 AS BIGINT) AS qid,"
-         " hits AS did, -1 AS rank, recall AS v"),
+         ["'rrf_recall' AS kind", "CAST(0 AS BIGINT) AS qid",
+          "hits AS did", "-1 AS rank", "recall AS v"]),
         # r5: nDCG@10 of the fused list vs exact-cosine graded relevance
         # — ordering quality beside rrf_recall's set quality
         (PIPELINE_SUITE["rrf_ndcg"],
-         lambda df: df.selectExpr(
-             "stack(2, 'ndcg', ndcg, 'ndcg_dcg', dcg) AS (kind, v)")
-         .select("kind", F.lit(0).cast("bigint").alias("qid"),
-                 F.lit(-1).cast("bigint").alias("did"),
-                 F.lit(-1).alias("rank"), "v"),
-         "SELECT unnest(['ndcg', 'ndcg_dcg']) AS kind,"
-         " CAST(0 AS BIGINT) AS qid, CAST(-1 AS BIGINT) AS did,"
-         " -1 AS rank, unnest([ndcg, dcg]) AS v"),
+         [["'ndcg' AS kind", "CAST(0 AS BIGINT) AS qid",
+           "CAST(-1 AS BIGINT) AS did", "-1 AS rank", "ndcg AS v"],
+          ["'ndcg_dcg' AS kind", "CAST(0 AS BIGINT) AS qid",
+           "CAST(-1 AS BIGINT) AS did", "-1 AS rank", "dcg AS v"]]),
         # r5: MMR diversified top-5 — greedy relevance-vs-redundancy
         # re-rank over the exact top-20 (functions/retrieval.py
         # mmr_rerank); rank carries the selection order
         (PIPELINE_SUITE["mmr_rerank"],
-         lambda df: df.select(F.lit("mmr").alias("kind"),
-                              F.col("query_id").alias("qid"),
-                              F.col("neighbor_id").alias("did"),
-                              F.col("pick").alias("rank"),
-                              F.col("score").alias("v")),
-         "SELECT 'mmr' AS kind, query_id AS qid, neighbor_id AS did,"
-         " pick AS rank, score AS v"),
+         ["'mmr' AS kind", "query_id AS qid", "neighbor_id AS did",
+          "pick AS rank", "score AS v"]),
         # r4b: exact-phrase retrieval — pure-projection positional match
         # (functions/retrieval.py phrase_match); rank carries first_pos
         (PIPELINE_SUITE["phrase_match"],
-         lambda df: df.select(F.lit("phrase").alias("kind"),
-                              F.lit(-1).cast("bigint").alias("qid"),
-                              F.col("doc_id").alias("did"),
-                              F.col("first_pos").alias("rank"),
-                              F.col("n_matches").cast("double").alias("v")),
-         "SELECT 'phrase' AS kind, CAST(-1 AS BIGINT) AS qid,"
-         " doc_id AS did, first_pos AS rank,"
-         " CAST(n_matches AS DOUBLE) AS v"),
+         ["'phrase' AS kind", "CAST(-1 AS BIGINT) AS qid", "doc_id AS did",
+          "first_pos AS rank", "CAST(n_matches AS DOUBLE) AS v"]),
     ),
     # -- hyperplane-LSH buckets + bucket-local near-dup pairs
     "embedding_lsh": merged(
         (PIPELINE_SUITE["lsh_buckets"],
-         lambda df: df.select(F.lit("bucket").alias("kind"), "bucket",
-                              F.lit(-1).cast("bigint").alias("id_a"),
-                              F.lit(-1).cast("bigint").alias("id_b"),
-                              F.col("n").cast("double").alias("v")),
-         "SELECT 'bucket' AS kind, bucket, CAST(-1 AS BIGINT) AS id_a,"
-         " CAST(-1 AS BIGINT) AS id_b, CAST(n AS DOUBLE) AS v"),
+         ["'bucket' AS kind", "bucket", "CAST(-1 AS BIGINT) AS id_a",
+          "CAST(-1 AS BIGINT) AS id_b", "CAST(n AS DOUBLE) AS v"]),
         (PIPELINE_SUITE["embedding_near_dup"],
-         lambda df: df.select(F.lit("pair").alias("kind"),
-                              F.lit("").alias("bucket"), "id_a", "id_b",
-                              F.col("cos").alias("v")),
-         "SELECT 'pair' AS kind, '' AS bucket, id_a, id_b, cos AS v"),
+         ["'pair' AS kind", "'' AS bucket", "id_a", "id_b", "cos AS v"]),
         # r5: binary sign quantization — Hamming-ranked candidates,
         # exact-cosine re-rank (functions/similarity.py binary_topk);
         # the signature scan reads 16 bytes/vector, 32x less than floats
         (PIPELINE_SUITE["bq_rerank"],
-         lambda df: df.select(F.lit("bq").alias("kind"),
-                              F.concat_ws(":", F.col("hamming")
-                                          .cast("string"),
-                                          F.col("rank").cast("string"))
-                              .alias("bucket"),
-                              F.col("query_id").alias("id_a"),
-                              F.col("neighbor_id").alias("id_b"),
-                              F.col("cos").alias("v")),
-         "SELECT 'bq' AS kind, CAST(hamming AS VARCHAR) || ':' ||"
-         " CAST(rank AS VARCHAR) AS bucket, query_id AS id_a,"
-         " neighbor_id AS id_b, cos AS v"),
+         ["'bq' AS kind",
+          "CAST(hamming AS STRING) || ':'"
+          " || CAST(rank AS STRING) AS bucket", "query_id AS id_a",
+          "neighbor_id AS id_b", "cos AS v"]),
         # r6: cluster-local kNN proximity graph — the navigable
         # structure of the NSW/HNSW family (functions/similarity.py
         # knn_graph); built from IVF lists, never corpus×corpus
         (PIPELINE_SUITE["knn_graph"],
-         lambda df: df.select(F.lit("knn").alias("kind"),
-                              F.col("rank").cast("string")
-                              .alias("bucket"),
-                              F.col("src").alias("id_a"),
-                              F.col("dst").alias("id_b"),
-                              F.col("cos").alias("v")),
-         "SELECT 'knn' AS kind, CAST(rank AS VARCHAR) AS bucket,"
-         " src AS id_a, dst AS id_b, cos AS v"),
+         ["'knn' AS kind", "CAST(rank AS STRING) AS bucket", "src AS id_a",
+          "dst AS id_b", "cos AS v"]),
         # r6: greedy beam search over that graph (the NSW search half)
         # with in-band recall: in_exact marks brute-force-top-10 hits
         (PIPELINE_SUITE["graph_ann"],
-         lambda df: df.select(F.lit("gann").alias("kind"),
-                              F.concat_ws(":", F.col("rank")
-                                          .cast("string"),
-                                          F.col("in_exact")
-                                          .cast("string"))
-                              .alias("bucket"),
-                              F.col("query_id").alias("id_a"),
-                              F.col("neighbor_id").alias("id_b"),
-                              F.col("cos").alias("v")),
-         "SELECT 'gann' AS kind, CAST(rank AS VARCHAR) || ':' ||"
-         " CAST(in_exact AS VARCHAR) AS bucket, query_id AS id_a,"
-         " neighbor_id AS id_b, cos AS v"),
+         ["'gann' AS kind",
+          "CAST(rank AS STRING) || ':'"
+          " || CAST(in_exact AS STRING) AS bucket", "query_id AS id_a",
+          "neighbor_id AS id_b", "cos AS v"]),
         # r6: kNN-graph maintenance under batch ingest — batch nodes
         # link in, touched store lists re-rank, untouched lists are
         # never recomputed (incremental_minhash's discipline)
         (PIPELINE_SUITE["incremental_knn"],
-         lambda df: df.select(F.lit("iknn").alias("kind"),
-                              F.concat_ws(":", "side",
-                                          F.col("rank").cast("string"))
-                              .alias("bucket"),
-                              F.col("src").alias("id_a"),
-                              F.col("dst").alias("id_b"),
-                              F.col("cos").alias("v")),
-         "SELECT 'iknn' AS kind, side || ':' || CAST(rank AS VARCHAR)"
-         " AS bucket, src AS id_a, dst AS id_b, cos AS v"),
+         ["'iknn' AS kind",
+          "side || ':' || CAST(rank AS STRING) AS bucket", "src AS id_a",
+          "dst AS id_b", "cos AS v"]),
     ),
     # -- IVF ANN: probe top-k + recall@10 vs the brute-force oracle
     "ivf_search": merged(
         (PIPELINE_SUITE["ivf_topk"],
-         lambda df: df.select(F.lit("topk").alias("kind"), "query_id",
-                              F.col("neighbor_id").alias("ref"), "rank",
-                              F.col("cos").alias("v")),
-         "SELECT 'topk' AS kind, query_id, neighbor_id AS ref, rank,"
-         " cos AS v"),
+         ["'topk' AS kind", "query_id", "neighbor_id AS ref", "rank",
+          "cos AS v"]),
         (PIPELINE_SUITE["ivf_recall"],
-         lambda df: df.select(F.lit("recall").alias("kind"), "query_id",
-                              F.col("hits").alias("ref"),
-                              F.lit(-1).alias("rank"),
-                              F.col("recall").alias("v")),
-         "SELECT 'recall' AS kind, query_id, hits AS ref, -1 AS rank,"
-         " recall AS v"),
+         ["'recall' AS kind", "query_id", "hits AS ref", "-1 AS rank",
+          "recall AS v"]),
         # r4: SemDeDup-style semantic dedup shares the cluster machinery —
         # per-vector verdict (rank column carries the is_dup flag) and
         # per-cluster retention summary (functions/semantic.py)
         (PIPELINE_SUITE["semantic_dedup"],
-         lambda df: df.select(F.lit("semdedup").alias("kind"),
-                              F.col("vec_id").alias("query_id"),
-                              F.col("list_id").alias("ref"),
-                              F.col("is_dup").cast("int").alias("rank"),
-                              F.col("csim").alias("v")),
-         "SELECT 'semdedup' AS kind, vec_id AS query_id, list_id AS ref,"
-         " CAST(is_dup AS INTEGER) AS rank, csim AS v"),
+         ["'semdedup' AS kind", "vec_id AS query_id", "list_id AS ref",
+          "CAST(is_dup AS INTEGER) AS rank", "csim AS v"]),
         (PIPELINE_SUITE["semantic_summary"],
-         lambda df: df.select(F.lit("semsum").alias("kind"),
-                              F.col("list_id").alias("query_id"),
-                              F.col("exemplar_id").alias("ref"),
-                              F.col("n_dropped").cast("int").alias("rank"),
-                              F.col("n_members").cast("double").alias("v")),
-         "SELECT 'semsum' AS kind, list_id AS query_id, exemplar_id AS ref,"
-         " CAST(n_dropped AS INTEGER) AS rank,"
-         " CAST(n_members AS DOUBLE) AS v"),
+         ["'semsum' AS kind", "list_id AS query_id", "exemplar_id AS ref",
+          "CAST(n_dropped AS INTEGER) AS rank",
+          "CAST(n_members AS DOUBLE) AS v"]),
         # r4: product quantization — packed sub-codes + reconstruction
         # error (functions/pq.py; the IVF-PQ compression layout)
         (PIPELINE_SUITE["pq_codes"],
-         lambda df: df.select(F.lit("pq").alias("kind"),
-                              F.col("vec_id").alias("query_id"),
-                              F.col("packed_code").alias("ref"),
-                              F.lit(-1).alias("rank"),
-                              F.col("recon_err").alias("v")),
-         "SELECT 'pq' AS kind, vec_id AS query_id, packed_code AS ref,"
-         " -1 AS rank, recon_err AS v"),
+         ["'pq' AS kind", "vec_id AS query_id", "packed_code AS ref",
+          "-1 AS rank", "recon_err AS v"]),
         # r5: the IVF-PQ SEARCH half — asymmetric distance computation
         # over the packed codes (functions/pq.py pq_adc_topk); corpus
         # side is integer codes only, LUT broadcast
         (PIPELINE_SUITE["pq_adc"],
-         lambda df: df.select(F.lit("adc").alias("kind"), "query_id",
-                              F.col("cand_id").alias("ref"), "rank",
-                              F.col("adc_dist").alias("v")),
-         "SELECT 'adc' AS kind, query_id, cand_id AS ref, rank,"
-         " adc_dist AS v"),
+         ["'adc' AS kind", "query_id", "cand_id AS ref", "rank",
+          "adc_dist AS v"]),
         # r5: the COMPOSED IVFPQ search (coarse probes x ADC codes) —
         # the production FAISS IndexIVFPQ recipe end to end
         (PIPELINE_SUITE["ivf_pq"],
-         lambda df: df.select(F.lit("ivfpq").alias("kind"), "query_id",
-                              F.col("cand_id").alias("ref"), "rank",
-                              F.col("adc_dist").alias("v")),
-         "SELECT 'ivfpq' AS kind, query_id, cand_id AS ref, rank,"
-         " adc_dist AS v"),
+         ["'ivfpq' AS kind", "query_id", "cand_id AS ref", "rank",
+          "adc_dist AS v"]),
         # r5: integer-fixed-point Lloyd k-means — where the IVF centroids
         # come from (functions/kmeans.py); per cluster, membership count,
         # integer SSE and the first two centroid components
         (PIPELINE_SUITE["kmeans_train"],
-         lambda df: df.selectExpr(
-             "stack(4, 'km_n', n_assigned, 'km_sse', sse,"
-             " 'km_c1', c1, 'km_c2', c2) AS (kind, ref)",
-             "CAST(cid AS BIGINT) AS query_id")
-         .select("kind", "query_id", "ref", F.lit(-1).alias("rank"),
-                 F.lit(-1.0).alias("v")),
-         "SELECT unnest(['km_n', 'km_sse', 'km_c1', 'km_c2']) AS kind,"
-         " CAST(cid AS BIGINT) AS query_id,"
-         " unnest([n_assigned, sse, c1, c2]) AS ref, -1 AS rank,"
-         " CAST(-1.0 AS DOUBLE) AS v"),
+         [["'km_n' AS kind", "CAST(cid AS BIGINT) AS query_id",
+           "n_assigned AS ref", "-1 AS rank", "CAST(-1.0 AS DOUBLE) AS v"],
+          ["'km_sse' AS kind", "CAST(cid AS BIGINT) AS query_id",
+           "sse AS ref", "-1 AS rank", "CAST(-1.0 AS DOUBLE) AS v"],
+          ["'km_c1' AS kind", "CAST(cid AS BIGINT) AS query_id",
+           "c1 AS ref", "-1 AS rank", "CAST(-1.0 AS DOUBLE) AS v"],
+          ["'km_c2' AS kind", "CAST(cid AS BIGINT) AS query_id",
+           "c2 AS ref", "-1 AS rank", "CAST(-1.0 AS DOUBLE) AS v"]]),
         # r5: embedding-outlier gate — top-20 farthest from assigned
         # centroid (functions/kmeans.py kmeans_outliers); the exact
         # integer distance rides the BIGINT ref slot (dist > 2^53 would
         # not survive the DOUBLE v column)
         (PIPELINE_SUITE["kmeans_outliers"],
-         lambda df: df.select(F.lit("km_out").alias("kind"),
-                              F.col("vec_id").alias("query_id"),
-                              F.col("dist").alias("ref"),
-                              F.col("cid").cast("int").alias("rank"),
-                              F.lit(-1.0).alias("v")),
-         "SELECT 'km_out' AS kind, vec_id AS query_id, dist AS ref,"
-         " CAST(cid AS INT) AS rank, CAST(-1.0 AS DOUBLE) AS v"),
+         ["'km_out' AS kind", "vec_id AS query_id", "dist AS ref",
+          "CAST(cid AS INT) AS rank", "CAST(-1.0 AS DOUBLE) AS v"]),
     ),
     # -- multimodal decode ⋈ features ⋈ resize per doc (Arrow mapInPandas)
     # r5: + CLIP-score-style alignment filter (similarity.py, the LAION
@@ -2698,77 +2257,43 @@ SUITE: dict[str, tuple] = {
     # -- per-doc fingerprints: Karp-Rabin rolling hash + RAG chunk windows
     "rolling_fingerprint": merged(
         (PIPELINE_SUITE["rolling_fingerprint"],
-         lambda df: df.select(F.lit("karp").alias("kind"), "doc_id",
-                              F.col("rhash").alias("n"),
-                              F.lit("").alias("fp"),
-                              F.lit(-1).cast("long").alias("m")),
-         "SELECT 'karp' AS kind, doc_id, rhash AS n, '' AS fp,"
-         " CAST(-1 AS BIGINT) AS m"),
+         ["'karp' AS kind", "doc_id", "rhash AS n", "'' AS fp",
+          "CAST(-1 AS BIGINT) AS m"]),
         (PIPELINE_SUITE["chunk_docs"],
-         lambda df: df.select(F.lit("chunk").alias("kind"), "doc_id",
-                              F.col("chunk_id").alias("n"),
-                              F.col("chunk_fp").alias("fp"),
-                              F.col("n_tokens").alias("m")),
-         "SELECT 'chunk' AS kind, doc_id, chunk_id AS n, chunk_fp AS fp,"
-         " n_tokens AS m"),
+         ["'chunk' AS kind", "doc_id", "chunk_id AS n", "chunk_fp AS fp",
+          "n_tokens AS m"]),
         # r4b: BPE tokenizer training (functions/bpe.py) — 3 unrolled
         # merge rounds; the branch is already harmonized by q_bpe_train
         (PIPELINE_SUITE["bpe_train"],
-         lambda df: df,
-         "SELECT kind, doc_id, n, fp, m"),
+         ["kind", "doc_id", "n", "fp", "m"]),
         # r8: corpus-wide BPE tokenization (functions/bpe.py
         # bpe_encode) — the apply step of the trained merge table; the
         # md5 of the FULL ordered token stream rides fp, so the entry
         # hash certifies every token of every encoded document
         (PIPELINE_SUITE["bpe_encode"],
-         lambda df: df.select(F.lit("bpe_enc").alias("kind"), "doc_id",
-                              F.col("n_tokens").alias("n"),
-                              F.concat_ws(":", F.md5("stream"),
-                                          F.col("rt").cast("string"))
-                              .alias("fp"),
-                              F.col("n_words").alias("m")),
-         "SELECT 'bpe_enc' AS kind, doc_id, n_tokens AS n,"
-         " md5(stream) || ':' || CAST(rt AS VARCHAR) AS fp,"
-         " n_words AS m"),
+         ["'bpe_enc' AS kind", "doc_id", "n_tokens AS n",
+          "md5(stream) || ':' || CAST(rt AS STRING) AS fp", "n_words AS m"]),
         # r9: incremental BPE encode (batch-vs-store) — a NEW id-shifted
         # batch with a novel trailing token per doc encoded against the
         # PERSISTED vocab only (the daily-crawl shape); the md5:rt fp
         # certifies every token of every batch doc AND the OOV-fallback
         # round-trip
         (PIPELINE_SUITE["incremental_bpe"],
-         lambda df: df.select(F.lit("bpe_inc").alias("kind"), "doc_id",
-                              F.col("n_tokens").alias("n"),
-                              F.concat_ws(":", F.md5("stream"),
-                                          F.col("rt").cast("string"))
-                              .alias("fp"),
-                              F.col("n_words").alias("m")),
-         "SELECT 'bpe_inc' AS kind, doc_id, n_tokens AS n,"
-         " md5(stream) || ':' || CAST(rt AS VARCHAR) AS fp,"
-         " n_words AS m"),
+         ["'bpe_inc' AS kind", "doc_id", "n_tokens AS n",
+          "md5(stream) || ':' || CAST(rt AS STRING) AS fp", "n_words AS m"]),
         # r10: batch-vs-store CCNet assignment (functions/lm.py
         # ccnet_assign) — new batch scored under the FROZEN store model
         # (unseen-bigram/context backoff) and bucketed against the
         # store's frozen per-source tercile boundaries; avg_nll rides n
         # as exact nanos, source:bucket rides fp
         (PIPELINE_SUITE["ccnet_assign"],
-         lambda df: df.select(F.lit("ccnet_inc").alias("kind"), "doc_id",
-                              F.round(F.col("avg_nll") * 1e9)
-                              .cast("bigint").alias("n"),
-                              F.concat_ws(":", "source", "bucket")
-                              .alias("fp"),
-                              F.col("n_bigrams").alias("m")),
-         "SELECT 'ccnet_inc' AS kind, doc_id,"
-         " CAST(round(avg_nll * 1000000000.0) AS BIGINT) AS n,"
-         " source || ':' || bucket AS fp, n_bigrams AS m"),
+         ["'ccnet_inc' AS kind", "doc_id",
+          "CAST(round(avg_nll * 1000000000.0) AS BIGINT) AS n",
+          "source || ':' || bucket AS fp", "n_bigrams AS m"]),
         # r5: winnowing fingerprints (MOSS, SIGMOD 2003) — pos rides n,
         # the 48-bit fingerprint rides m
         (PIPELINE_SUITE["winnow"],
-         lambda df: df.select(F.lit("winnow").alias("kind"), "doc_id",
-                              F.col("pos").alias("n"),
-                              F.lit("").alias("fp"),
-                              F.col("fp").alias("m")),
-         "SELECT 'winnow' AS kind, doc_id, pos AS n, '' AS fp,"
-         " fp AS m"),
+         ["'winnow' AS kind", "doc_id", "pos AS n", "'' AS fp", "fp AS m"]),
     ),
     "frame_sample": PIPELINE_SUITE["frame_sample"],
     # end-to-end cleaning pipeline + r4b temperature mixture weighting
@@ -2776,507 +2301,263 @@ SUITE: dict[str, tuple] = {
     # consumes downstream of exactly this pipeline)
     "clean_corpus": merged(
         (PIPELINE_SUITE["clean_corpus"],
-         lambda df: df.select(F.lit("shards").alias("kind"),
-                              F.col("doc_id").cast("string").alias("key"),
-                              F.col("shard").cast("bigint").alias("n1"),
-                              F.col("shard_pos").cast("bigint").alias("n2"),
-                              F.lit(-1.0).alias("v")),
-         "SELECT 'shards' AS kind, CAST(doc_id AS VARCHAR) AS key,"
-         " CAST(shard AS BIGINT) AS n1, CAST(shard_pos AS BIGINT) AS n2,"
-         " CAST(-1.0 AS DOUBLE) AS v"),
+         ["'shards' AS kind", "CAST(doc_id AS STRING) AS key",
+          "CAST(shard AS BIGINT) AS n1", "CAST(shard_pos AS BIGINT) AS n2",
+          "CAST(-1.0 AS DOUBLE) AS v"]),
         (PIPELINE_SUITE["mixture_weights"],
-         lambda df: df.select(F.lit("mix").alias("kind"),
-                              F.col("source").alias("key"),
-                              F.col("n_tokens").alias("n1"),
-                              F.col("expected_tokens").alias("n2"),
-                              F.col("weight").alias("v")),
-         "SELECT 'mix' AS kind, source AS key, n_tokens AS n1,"
-         " expected_tokens AS n2, weight AS v"),
+         ["'mix' AS kind", "source AS key", "n_tokens AS n1",
+          "expected_tokens AS n2", "weight AS v"]),
         # r11: char-trigram NB language ID on the held-out slice
         # (functions/classify.py langid_ngram, Cavnar-Trenkle 1994) —
         # per-doc prediction + in-band correctness; nano-nat scores
         # ride n1 exactly
         (PIPELINE_SUITE["langid_ngram"],
-         lambda df: df.select(F.lit("langid").alias("kind"),
-                              F.concat_ws("|",
-                                          F.col("doc_id").cast("string"),
-                                          F.col("lang"),
-                                          F.col("predicted"))
-                              .alias("key"),
-                              F.col("score_nano").alias("n1"),
-                              F.col("correct").cast("bigint").alias("n2"),
-                              F.lit(-1.0).alias("v")),
-         "SELECT 'langid' AS kind, CAST(doc_id AS VARCHAR) || '|' ||"
-         " lang || '|' || predicted AS key, score_nano AS n1,"
-         " CAST(correct AS BIGINT) AS n2, CAST(-1.0 AS DOUBLE) AS v"),
+         ["'langid' AS kind",
+          "CAST(doc_id AS STRING) || '|' || lang || '|'"
+          " || predicted AS key", "score_nano AS n1",
+          "CAST(correct AS BIGINT) AS n2", "CAST(-1.0 AS DOUBLE) AS v"]),
         # r11: gate-stage audit funnel (functions/cleaning.py
         # corpus_gate_reason composed into clean_corpus's step 1) —
         # before/after counts per source of the Gopher+Luhn+quality
         # gate; two tagged rows per source
         (PIPELINE_SUITE["corpus_gate"],
-         lambda df: df.select(F.explode(F.array(
-             F.struct(F.lit("gate_in").alias("kind"),
-                      F.col("n_docs").alias("n1"),
-                      F.col("n_quality_ok").alias("n2"),
-                      F.col("n_gate_ok").cast("double").alias("v")),
-             F.struct(F.lit("gate_out").alias("kind"),
-                      F.col("n_gopher_fail").alias("n1"),
-                      F.col("n_card_pii").alias("n2"),
-                      F.col("n_kept").cast("double").alias("v"))))
-             .alias("s"), F.col("source").alias("key"))
-         .select(F.col("s.kind").alias("kind"), "key",
-                 F.col("s.n1").alias("n1"), F.col("s.n2").alias("n2"),
-                 F.col("s.v").alias("v")),
-         "SELECT unnest(['gate_in', 'gate_out']) AS kind, source AS key,"
-         " unnest([n_docs, n_gopher_fail]) AS n1,"
-         " unnest([n_quality_ok, n_card_pii]) AS n2,"
-         " unnest([CAST(n_gate_ok AS DOUBLE), CAST(n_kept AS DOUBLE)])"
-         " AS v"),
+         [["'gate_in' AS kind", "source AS key", "n_docs AS n1",
+           "n_quality_ok AS n2", "CAST(n_gate_ok AS DOUBLE) AS v"],
+          ["'gate_out' AS kind", "source AS key", "n_gopher_fail AS n1",
+           "n_card_pii AS n2", "CAST(n_kept AS DOUBLE) AS v"]]),
         # r10: per-source tokenizer fertility (functions/text.py
         # pretoken_fertility) — pretokens/word and chars/pretoken as
         # exact e6 ints; two tagged rows per source
         (PIPELINE_SUITE["pretoken_fertility"],
-         lambda df: df.select(F.explode(F.array(
-             F.struct(F.lit("fert").alias("kind"),
-                      F.col("n_pretokens").alias("n1"),
-                      F.col("n_words").alias("n2"),
-                      F.col("ppw_e6").cast("double").alias("v")),
-             F.struct(F.lit("fert_chars").alias("kind"),
-                      F.col("n_chars").alias("n1"),
-                      F.col("n_pretokens").alias("n2"),
-                      F.col("cpp_e6").cast("double").alias("v"))))
-             .alias("s"), F.col("source").alias("key"))
-         .select(F.col("s.kind").alias("kind"), "key",
-                 F.col("s.n1").alias("n1"), F.col("s.n2").alias("n2"),
-                 F.col("s.v").alias("v")),
-         "SELECT unnest(['fert', 'fert_chars']) AS kind, source AS key,"
-         " unnest([n_pretokens, n_chars]) AS n1,"
-         " unnest([n_words, n_pretokens]) AS n2,"
-         " unnest([CAST(ppw_e6 AS DOUBLE), CAST(cpp_e6 AS DOUBLE)])"
-         " AS v"),
+         [["'fert' AS kind", "source AS key", "n_pretokens AS n1",
+           "n_words AS n2", "CAST(ppw_e6 AS DOUBLE) AS v"],
+          ["'fert_chars' AS kind", "source AS key", "n_chars AS n1",
+           "n_pretokens AS n2", "CAST(cpp_e6 AS DOUBLE) AS v"]]),
         # r8: split-conformal prediction sets over the NB classifier —
         # distribution-free coverage; q_hat_nano < 2^53 rides the
         # double slot exactly
         (PIPELINE_SUITE["conformal_nb"],
-         lambda df: df.select(F.lit("cp").alias("kind"),
-                              F.concat_ws("|",
-                                          F.col("set_size").cast("string"),
-                                          F.col("n_cal").cast("string"))
-                              .alias("key"),
-                              F.col("n_docs").alias("n1"),
-                              F.col("n_covered").alias("n2"),
-                              F.col("q_hat_nano").cast("double")
-                              .alias("v")),
-         "SELECT 'cp' AS kind, CAST(set_size AS VARCHAR) || '|' ||"
-         " CAST(n_cal AS VARCHAR) AS key, n_docs AS n1,"
-         " n_covered AS n2, CAST(q_hat_nano AS DOUBLE) AS v"),
+         ["'cp' AS kind",
+          "CAST(set_size AS STRING) || '|' || CAST(n_cal AS STRING) AS key",
+          "n_docs AS n1", "n_covered AS n2",
+          "CAST(q_hat_nano AS DOUBLE) AS v"]),
         # r8: Heaps'-law vocabulary growth — types vs tokens at 20
         # checkpoints + fitted exponent; beta_e6 rides the double slot
         (PIPELINE_SUITE["heaps_law"],
-         lambda df: df.select(F.lit("heaps").alias("kind"),
-                              F.concat_ws("|", F.col("pt").cast("string"),
-                                          F.col("max_doc").cast("string"))
-                              .alias("key"),
-                              F.col("n_tokens").alias("n1"),
-                              F.col("n_types").alias("n2"),
-                              F.col("beta_e6").cast("double").alias("v")),
-         "SELECT 'heaps' AS kind, CAST(pt AS VARCHAR) || '|' ||"
-         " CAST(max_doc AS VARCHAR) AS key, n_tokens AS n1,"
-         " n_types AS n2, CAST(beta_e6 AS DOUBLE) AS v"),
+         ["'heaps' AS kind",
+          "CAST(pt AS STRING) || '|' || CAST(max_doc AS STRING) AS key",
+          "n_tokens AS n1", "n_types AS n2", "CAST(beta_e6 AS DOUBLE) AS v"]),
         # r8: URL/domain provenance gate (functions/provenance.py) —
         # eTLD+1 extraction + blocklist + per-domain cap; kept_chars
         # rides the double slot exactly (< 2^53)
         (PIPELINE_SUITE["domain_gate"],
-         lambda df: df.select(F.lit("dom").alias("kind"),
-                              F.col("domain").alias("key"),
-                              F.col("n_docs").alias("n1"),
-                              F.col("n_kept").alias("n2"),
-                              F.col("kept_chars").cast("double")
-                              .alias("v")),
-         "SELECT 'dom' AS kind, domain AS key, n_docs AS n1,"
-         " n_kept AS n2, CAST(kept_chars AS DOUBLE) AS v"),
+         ["'dom' AS kind", "domain AS key", "n_docs AS n1", "n_kept AS n2",
+          "CAST(kept_chars AS DOUBLE) AS v"]),
         (PIPELINE_SUITE["domain_gate"],
-         lambda df: df.select(F.lit("dom_drop").alias("kind"),
-                              F.col("domain").alias("key"),
-                              F.col("n_blocked").alias("n1"),
-                              F.col("n_capped").alias("n2"),
-                              F.lit(-1.0).alias("v")),
-         "SELECT 'dom_drop' AS kind, domain AS key, n_blocked AS n1,"
-         " n_capped AS n2, CAST(-1.0 AS DOUBLE) AS v"),
+         ["'dom_drop' AS kind", "domain AS key", "n_blocked AS n1",
+          "n_capped AS n2", "CAST(-1.0 AS DOUBLE) AS v"]),
         # r9: URL-level exact dedup on the canonical key
         # (functions/provenance.py canonical_url) — stage-zero crawl
         # dedup: fragments/userinfo/ports/www/tracking params/trailing
         # slashes collapse; keeper doc rides the double slot exactly
         (PIPELINE_SUITE["url_dedup"],
-         lambda df: df.select(F.lit("urlc").alias("kind"),
-                              F.col("canon").alias("key"),
-                              F.col("n_docs").alias("n1"),
-                              F.col("n_spellings").alias("n2"),
-                              F.col("keeper").cast("double").alias("v")),
-         "SELECT 'urlc' AS kind, canon AS key, n_docs AS n1,"
-         " n_spellings AS n2, CAST(keeper AS DOUBLE) AS v"),
+         ["'urlc' AS kind", "canon AS key", "n_docs AS n1",
+          "n_spellings AS n2", "CAST(keeper AS DOUBLE) AS v"]),
         # r5: max-min-fair budget waterfilling (functions/cleaning.py
         # budget_waterfill) — per-source token allocation under a
         # 50k-token budget with a 4-epoch cap; all-integer
         (PIPELINE_SUITE["waterfill"],
-         lambda df: df.select(F.lit("alloc").alias("kind"),
-                              F.col("source").alias("key"),
-                              F.col("cap_tokens").alias("n1"),
-                              F.col("alloc_tokens").alias("n2"),
-                              F.lit(-1.0).alias("v")),
-         "SELECT 'alloc' AS kind, source AS key, cap_tokens AS n1,"
-         " alloc_tokens AS n2, CAST(-1.0 AS DOUBLE) AS v"),
+         ["'alloc' AS kind", "source AS key", "cap_tokens AS n1",
+          "alloc_tokens AS n2", "CAST(-1.0 AS DOUBLE) AS v"]),
         # r5: per-source diversity profile (functions/text.py
         # diversity_profile) — TTR/distinct-3 ppm ints, Zipf slope in
         # the double slot
         (PIPELINE_SUITE["diversity"],
-         lambda df: df.select(F.lit("div").alias("kind"),
-                              F.col("source").alias("key"),
-                              F.col("ttr_e6").alias("n1"),
-                              F.col("distinct3_e6").alias("n2"),
-                              F.col("zipf_slope").alias("v")),
-         "SELECT 'div' AS kind, source AS key, ttr_e6 AS n1,"
-         " distinct3_e6 AS n2, zipf_slope AS v"),
+         ["'div' AS kind", "source AS key", "ttr_e6 AS n1",
+          "distinct3_e6 AS n2", "zipf_slope AS v"]),
         # r5: cross-source near-dup leakage matrix (functions/dedup.py
         # cross_source_leakage) — key packs the normalized source pair
         (PIPELINE_SUITE["leakage"],
-         lambda df: df.select(F.lit("leak").alias("kind"),
-                              F.concat_ws(":", "source_a", "source_b")
-                              .alias("key"),
-                              F.col("n_pairs").alias("n1"),
-                              F.lit(-1).cast("bigint").alias("n2"),
-                              F.col("max_sim").alias("v")),
-         "SELECT 'leak' AS kind, source_a || ':' || source_b AS key,"
-         " n_pairs AS n1, CAST(-1 AS BIGINT) AS n2, max_sim AS v"),
+         ["'leak' AS kind", "source_a || ':' || source_b AS key",
+          "n_pairs AS n1", "CAST(-1 AS BIGINT) AS n2", "max_sim AS v"]),
         # r5: DSIR-style importance selection (functions/importance.py,
         # arXiv:2302.03169) — hashed-bigram log-likelihood-ratio top-100;
         # the target-domain counterpart of the quality-gate selection
         (PIPELINE_SUITE["dsir_topk"],
-         lambda df: df.select(F.lit("dsir").alias("kind"),
-                              F.col("doc_id").cast("string").alias("key"),
-                              F.col("n_grams").alias("n1"),
-                              F.col("rank").cast("bigint").alias("n2"),
-                              F.col("logw").alias("v")),
-         "SELECT 'dsir' AS kind, CAST(doc_id AS VARCHAR) AS key,"
-         " n_grams AS n1, CAST(rank AS BIGINT) AS n2, logw AS v"),
+         ["'dsir' AS kind", "CAST(doc_id AS STRING) AS key",
+          "n_grams AS n1", "CAST(rank AS BIGINT) AS n2", "logw AS v"]),
         # r5: greedy max-coverage selection (functions/cleaning.py
         # greedy_coverage) — the submodular subset-selection complement
         # of DSIR's importance weighting; key packs pick:doc_id
         (PIPELINE_SUITE["greedy_coverage"],
-         lambda df: df.select(F.lit("cover").alias("kind"),
-                              F.concat_ws(":", F.col("pick").cast("string"),
-                                          F.col("doc_id").cast("string"))
-                              .alias("key"),
-                              F.col("gain").alias("n1"),
-                              F.col("covered_total").alias("n2"),
-                              F.lit(-1.0).alias("v")),
-         "SELECT 'cover' AS kind, CAST(pick AS VARCHAR) || ':' ||"
-         " CAST(doc_id AS VARCHAR) AS key, gain AS n1,"
-         " covered_total AS n2, CAST(-1.0 AS DOUBLE) AS v"),
+         ["'cover' AS kind",
+          "CAST(pick AS STRING) || ':' || CAST(doc_id AS STRING) AS key",
+          "gain AS n1", "covered_total AS n2", "CAST(-1.0 AS DOUBLE) AS v"]),
         # r7: Pareto-frontier (skyline) selection — un-dominated points
         # on two maximize-dims via the distributed exclusive running max
         # (functions/cleaning.py pareto_front); key packs branch:x:y
         (PIPELINE_SUITE["pareto_docs"],
-         lambda df: df.select(F.lit("pareto").alias("kind"),
-                              F.concat_ws(":", "kind",
-                                          F.col("x").cast("string"),
-                                          F.col("y").cast("string"))
-                              .alias("key"),
-                              F.col("n_points").alias("n1"),
-                              F.col("min_id").alias("n2"),
-                              F.lit(-1.0).alias("v")),
-         "SELECT 'pareto' AS kind, kind || ':' || CAST(x AS VARCHAR)"
-         " || ':' || CAST(y AS VARCHAR) AS key, n_points AS n1,"
-         " min_id AS n2, CAST(-1.0 AS DOUBLE) AS v"),
+         ["'pareto' AS kind",
+          "kind || ':' || CAST(x AS STRING) || ':'"
+          " || CAST(y AS STRING) AS key", "n_points AS n1", "min_id AS n2",
+          "CAST(-1.0 AS DOUBLE) AS v"]),
     ),
     # -- applyInPandas pair: per-user features + greedy sequence packing
     "user_features_pandas": merged(
         (PIPELINE_SUITE["user_features_pandas"],
-         lambda df: df.select(F.lit("feat").alias("kind"),
-                              F.col("user_id").alias("id"),
-                              F.col("n_events").cast("double").alias("a"),
-                              F.col("n_purchases").cast("double").alias("b"),
-                              F.col("total_value").alias("c"),
-                              F.col("max_single").alias("d")),
-         "SELECT 'feat' AS kind, user_id AS id,"
-         " CAST(n_events AS DOUBLE) AS a, CAST(n_purchases AS DOUBLE) AS b,"
-         " total_value AS c, max_single AS d"),
+         ["'feat' AS kind", "user_id AS id",
+          "CAST(n_events AS DOUBLE) AS a",
+          "CAST(n_purchases AS DOUBLE) AS b", "total_value AS c",
+          "max_single AS d"]),
         (PIPELINE_SUITE["pack_sequences"],
-         lambda df: df.select(F.lit("pack").alias("kind"),
-                              F.col("doc_id").alias("id"),
-                              F.col("grp").cast("double").alias("a"),
-                              F.col("n_tokens").cast("double").alias("b"),
-                              F.col("pack_id").cast("double").alias("c"),
-                              F.col("pack_pos").cast("double").alias("d")),
-         "SELECT 'pack' AS kind, doc_id AS id, CAST(grp AS DOUBLE) AS a,"
-         " CAST(n_tokens AS DOUBLE) AS b, CAST(pack_id AS DOUBLE) AS c,"
-         " CAST(pack_pos AS DOUBLE) AS d"),
+         ["'pack' AS kind", "doc_id AS id", "CAST(grp AS DOUBLE) AS a",
+          "CAST(n_tokens AS DOUBLE) AS b", "CAST(pack_id AS DOUBLE) AS c",
+          "CAST(pack_pos AS DOUBLE) AS d"]),
         # r8: packing under REAL BPE token counts — train -> encode ->
         # pack in one plan (functions/bpe.py bpe_encode); the budget is
         # measured in the tokens the training loader actually consumes
         (PIPELINE_SUITE["pack_bpe"],
-         lambda df: df.select(F.lit("pack_bpe").alias("kind"),
-                              F.col("doc_id").alias("id"),
-                              F.col("grp").cast("double").alias("a"),
-                              F.col("n_tokens").cast("double").alias("b"),
-                              F.col("pack_id").cast("double").alias("c"),
-                              F.col("pack_pos").cast("double").alias("d")),
-         "SELECT 'pack_bpe' AS kind, doc_id AS id,"
-         " CAST(grp AS DOUBLE) AS a,"
-         " CAST(n_tokens AS DOUBLE) AS b, CAST(pack_id AS DOUBLE) AS c,"
-         " CAST(pack_pos AS DOUBLE) AS d"),
+         ["'pack_bpe' AS kind", "doc_id AS id", "CAST(grp AS DOUBLE) AS a",
+          "CAST(n_tokens AS DOUBLE) AS b", "CAST(pack_id AS DOUBLE) AS c",
+          "CAST(pack_pos AS DOUBLE) AS d"]),
     ),
     # -- window functions: top-k per group + rank/dense_rank/row_number
     "window_ranking": merged(
         (ANALYTICS_SUITE["topk_orders_per_customer"],
-         lambda df: df.select(F.lit("topk").alias("kind"), "o_custkey",
-                              "o_orderkey", F.lit("").alias("detail"),
-                              F.col("o_totalprice").alias("price"),
-                              F.lit(-1.0).alias("price2"), "rk",
-                              F.lit(-1).alias("drk"), F.lit(-1).alias("rn")),
-         "SELECT 'topk' AS kind, o_custkey, o_orderkey, '' AS detail,"
-         " o_totalprice AS price, CAST(-1.0 AS DOUBLE) AS price2, rk,"
-         " -1 AS drk, -1 AS rn"),
+         ["'topk' AS kind", "o_custkey", "o_orderkey", "'' AS detail",
+          "o_totalprice AS price", "CAST(-1.0 AS DOUBLE) AS price2", "rk",
+          "-1 AS drk", "-1 AS rn"]),
         (ANALYTICS_SUITE["rank_semantics"],
-         lambda df: df.select(F.lit("rank").alias("kind"),
-                              F.lit(-1).cast("bigint").alias("o_custkey"),
-                              "o_orderkey",
-                              F.col("o_orderstatus").alias("detail"),
-                              F.lit(-1.0).alias("price"),
-                              F.lit(-1.0).alias("price2"), "rk", "drk", "rn"),
-         "SELECT 'rank' AS kind, CAST(-1 AS BIGINT) AS o_custkey, o_orderkey,"
-         " o_orderstatus AS detail, CAST(-1.0 AS DOUBLE) AS price,"
-         " CAST(-1.0 AS DOUBLE) AS price2, rk, drk, rn"),
+         ["'rank' AS kind", "CAST(-1 AS BIGINT) AS o_custkey",
+          "o_orderkey", "o_orderstatus AS detail",
+          "CAST(-1.0 AS DOUBLE) AS price",
+          "CAST(-1.0 AS DOUBLE) AS price2", "rk", "drk", "rn"]),
         (ANALYTICS_SUITE["window_distribution"],
-         lambda df: df.select(F.lit("dist").alias("kind"),
-                              F.lit(-1).cast("bigint").alias("o_custkey"),
-                              "o_orderkey",
-                              F.col("o_orderstatus").alias("detail"),
-                              F.col("pr").alias("price"),
-                              F.col("cd").alias("price2"),
-                              F.col("nt").alias("rk"),
-                              F.lit(-1).alias("drk"), "rn"),
-         "SELECT 'dist' AS kind, CAST(-1 AS BIGINT) AS o_custkey,"
-         " o_orderkey, o_orderstatus AS detail, pr AS price, cd AS price2,"
-         " nt AS rk, -1 AS drk, rn"),
+         ["'dist' AS kind", "CAST(-1 AS BIGINT) AS o_custkey",
+          "o_orderkey", "o_orderstatus AS detail", "pr AS price",
+          "cd AS price2", "nt AS rk", "-1 AS drk", "rn"]),
         # r6: RFM quintile segmentation — r/f/m ride the three int
         # slots, exact cents in the double slot (< 2^52)
         (ANALYTICS_SUITE["rfm_scores"],
-         lambda df: df.select(
-             F.lit("rfm").alias("kind"),
-             F.col("user_id").alias("o_custkey"),
-             F.col("rfm_code").cast("bigint").alias("o_orderkey"),
-             F.col("frequency").cast("string").alias("detail"),
-             F.col("monetary_cents").cast("double").alias("price"),
-             F.col("recency_days").cast("double").alias("price2"),
-             F.col("r").alias("rk"), F.col("f").alias("drk"),
-             F.col("m").alias("rn")),
-         "SELECT 'rfm' AS kind, user_id AS o_custkey,"
-         " CAST(rfm_code AS BIGINT) AS o_orderkey,"
-         " CAST(frequency AS VARCHAR) AS detail,"
-         " CAST(monetary_cents AS DOUBLE) AS price,"
-         " CAST(recency_days AS DOUBLE) AS price2,"
-         " r AS rk, f AS drk, m AS rn"),
+         ["'rfm' AS kind", "user_id AS o_custkey",
+          "CAST(rfm_code AS BIGINT) AS o_orderkey",
+          "CAST(frequency AS STRING) AS detail",
+          "CAST(monetary_cents AS DOUBLE) AS price",
+          "CAST(recency_days AS DOUBLE) AS price2", "r AS rk", "f AS drk",
+          "m AS rn"]),
         # r7: grid-DBSCAN density segmentation of the same customer
         # population (functions/density.py) — role + cluster ride the
         # detail slot; the quintile (RFM) and density (DBSCAN) views of
         # customer segmentation share one entry
         (ANALYTICS_SUITE["dbscan_customers"],
-         lambda df: df.select(
-             F.lit("dbscan").alias("kind"),
-             F.col("id").alias("o_custkey"),
-             F.lit(-1).cast("bigint").alias("o_orderkey"),
-             F.concat_ws("@", "role", "cluster_id").alias("detail"),
-             F.lit(-1.0).alias("price"), F.lit(-1.0).alias("price2"),
-             F.lit(-1).cast("int").alias("rk"),
-             F.lit(-1).cast("int").alias("drk"),
-             F.lit(-1).cast("long").alias("rn")),
-         "SELECT 'dbscan' AS kind, id AS o_custkey,"
-         " CAST(-1 AS BIGINT) AS o_orderkey,"
-         " role || '@' || cluster_id AS detail,"
-         " CAST(-1.0 AS DOUBLE) AS price, CAST(-1.0 AS DOUBLE) AS price2,"
-         " CAST(-1 AS INT) AS rk, CAST(-1 AS INT) AS drk,"
-         " CAST(-1 AS BIGINT) AS rn"),
+         ["'dbscan' AS kind", "id AS o_custkey",
+          "CAST(-1 AS BIGINT) AS o_orderkey",
+          "role || '@' || cluster_id AS detail",
+          "CAST(-1.0 AS DOUBLE) AS price",
+          "CAST(-1.0 AS DOUBLE) AS price2", "CAST(-1 AS INT) AS rk",
+          "CAST(-1 AS INT) AS drk", "CAST(-1 AS BIGINT) AS rn"]),
     ),
     # -- sessionization + r4 funnel analysis (ordered-subsequence array
     #    fold, restated as DuckDB list_reduce) share the per-user entry
     "event_sessions": merged(
         (ANALYTICS_SUITE["event_sessions"],
-         lambda df: df.select(F.lit("sessions").alias("kind"), "user_id",
-                              F.col("n_sessions").cast("long").alias("a"),
-                              F.col("n_events").alias("b")),
-         "SELECT 'sessions' AS kind, user_id, CAST(n_sessions AS BIGINT)"
-         " AS a, n_events AS b"),
+         ["'sessions' AS kind", "user_id",
+          "CAST(n_sessions AS BIGINT) AS a", "n_events AS b"]),
         (ANALYTICS_SUITE["event_funnel"],
-         lambda df: df.select(F.lit("funnel").alias("kind"), "user_id",
-                              F.col("funnel_stage").cast("long").alias("a"),
-                              F.lit(-1).cast("bigint").alias("b")),
-         "SELECT 'funnel' AS kind, user_id, CAST(funnel_stage AS BIGINT)"
-         " AS a, CAST(-1 AS BIGINT) AS b"),
+         ["'funnel' AS kind", "user_id",
+          "CAST(funnel_stage AS BIGINT) AS a", "CAST(-1 AS BIGINT) AS b"]),
         # r5: 7-day time-constrained funnel via the chained-min
         # decomposition (the whale-user scale path, shipped and checked);
         # b packs the stage timestamps
         (ANALYTICS_SUITE["timed_funnel"],
-         lambda df: df.select(
-             F.lit("timed").alias("kind"), "user_id",
-             F.col("stage_timed").cast("long").alias("a"),
-             (F.col("t1") + F.col("t2") * 7 + F.col("t3") * 13)
-             .alias("b")),
-         "SELECT 'timed' AS kind, user_id,"
-         " CAST(stage_timed AS BIGINT) AS a,"
-         " t1 + t2 * 7 + t3 * 13 AS b"),
+         ["'timed' AS kind", "user_id", "CAST(stage_timed AS BIGINT) AS a",
+          "t1 + t2 * 7 + t3 * 13 AS b"]),
     ),
     # -- windowed running sum + lag month-over-month delta
     "window_aggregates": merged(
         (ANALYTICS_SUITE["running_balance"],
-         lambda df: df.select(F.lit("balance").alias("kind"),
-                              F.col("user_id").cast("string").alias("key"),
-                              F.col("total").alias("v1"),
-                              F.lit(-1.0).alias("v2")),
-         "SELECT 'balance' AS kind, CAST(user_id AS VARCHAR) AS key,"
-         " total AS v1, CAST(-1.0 AS DOUBLE) AS v2"),
+         ["'balance' AS kind", "CAST(user_id AS STRING) AS key",
+          "total AS v1", "CAST(-1.0 AS DOUBLE) AS v2"]),
         (ANALYTICS_SUITE["monthly_revenue"],
-         lambda df: df.select(F.lit("monthly").alias("kind"),
-                              F.col("month").alias("key"),
-                              F.col("revenue").alias("v1"),
-                              F.col("mom_delta").alias("v2")),
-         "SELECT 'monthly' AS kind, month AS key, revenue AS v1,"
-         " mom_delta AS v2"),
+         ["'monthly' AS kind", "month AS key", "revenue AS v1",
+          "mom_delta AS v2"]),
         # r4b: trailing-window anomaly z-score (functions/timeseries.py)
         # — integer-window-sum mean/variance, IEEE-deterministic
         (ANALYTICS_SUITE["anomaly_zscore"],
-         lambda df: df.select(
-             F.lit("zscore").alias("kind"),
-             F.concat_ws("|", "event_type",
-                         F.col("bucket").cast("string")).alias("key"),
-             F.col("x").cast("double").alias("v1"),
-             F.col("z").alias("v2")),
-         "SELECT 'zscore' AS kind, event_type || '|' ||"
-         " CAST(bucket AS VARCHAR) AS key, CAST(x AS DOUBLE) AS v1,"
-         " z AS v2"),
+         ["'zscore' AS kind",
+          "event_type || '|' || CAST(bucket AS STRING) AS key",
+          "CAST(x AS DOUBLE) AS v1", "z AS v2"]),
         # r4b: per-type OLS trend — the 4 outputs unpivot into two rows
         # per type so they fit the (key, v1, v2) shape
         (ANALYTICS_SUITE["event_trend"],
-         lambda df: df.selectExpr(
-             "event_type",
-             "stack(2, 'trend_fit', slope, intercept,"
-             " 'trend_r2', CAST(n_points AS DOUBLE), r2)"
-             " AS (kind, v1, v2)")
-         .select("kind", F.col("event_type").alias("key"), "v1", "v2"),
-         "SELECT unnest(['trend_fit', 'trend_r2']) AS kind,"
-         " event_type AS key,"
-         " unnest([slope, CAST(n_points AS DOUBLE)]) AS v1,"
-         " unnest([intercept, r2]) AS v2"),
+         [["'trend_fit' AS kind", "event_type AS key", "slope AS v1",
+           "intercept AS v2"],
+          ["'trend_r2' AS kind", "event_type AS key",
+           "CAST(n_points AS DOUBLE) AS v1", "r2 AS v2"]]),
         # r5: CUSUM changepoint monitor (Page 1954) — the persistent-
         # shift detector; recursive-CTE oracle matches the fold exactly
         (ANALYTICS_SUITE["cusum_monitor"],
-         lambda df: df.selectExpr(
-             "event_type",
-             "stack(2, 'cusum_s', s_final, s_max,"
-             " 'cusum_n', CAST(n_buckets AS DOUBLE),"
-             " CAST(n_alarms AS DOUBLE)) AS (kind, v1, v2)")
-         .select("kind", F.col("event_type").alias("key"), "v1", "v2"),
-         "SELECT unnest(['cusum_s', 'cusum_n']) AS kind,"
-         " event_type AS key,"
-         " unnest([s_final, CAST(n_buckets AS DOUBLE)]) AS v1,"
-         " unnest([s_max, CAST(n_alarms AS DOUBLE)]) AS v2"),
+         [["'cusum_s' AS kind", "event_type AS key", "s_final AS v1",
+           "s_max AS v2"],
+          ["'cusum_n' AS kind", "event_type AS key",
+           "CAST(n_buckets AS DOUBLE) AS v1",
+           "CAST(n_alarms AS DOUBLE) AS v2"]]),
         # r5: exact 10%-trimmed mean in integer cents — robust location
         # per event type (functions/timeseries.py trimmed_mean_cents)
         (ANALYTICS_SUITE["trimmed_mean"],
-         lambda df: df.selectExpr(
-             "event_type",
-             "stack(2, 'trim_mean', CAST(trimmed_mean_cents AS DOUBLE),"
-             " CAST(n_kept AS DOUBLE), 'trim_sum',"
-             " CAST(trimmed_sum_cents AS DOUBLE), CAST(n AS DOUBLE))"
-             " AS (kind, v1, v2)")
-         .select("kind", F.col("event_type").alias("key"), "v1", "v2"),
-         "SELECT unnest(['trim_mean', 'trim_sum']) AS kind,"
-         " event_type AS key,"
-         " unnest([CAST(trimmed_mean_cents AS DOUBLE),"
-         " CAST(trimmed_sum_cents AS DOUBLE)]) AS v1,"
-         " unnest([CAST(n_kept AS DOUBLE), CAST(n AS DOUBLE)]) AS v2"),
+         [["'trim_mean' AS kind", "event_type AS key",
+           "CAST(trimmed_mean_cents AS DOUBLE) AS v1",
+           "CAST(n_kept AS DOUBLE) AS v2"],
+          ["'trim_sum' AS kind", "event_type AS key",
+           "CAST(trimmed_sum_cents AS DOUBLE) AS v1",
+           "CAST(n AS DOUBLE) AS v2"]]),
         # r5: integer EWMA smoothing (Roberts 1959, alpha = 1/2 so the
         # recurrence is exact BIGINT adds + shifts — no rounding at all)
         (ANALYTICS_SUITE["ewma"],
-         lambda df: df.selectExpr(
-             "event_type",
-             "stack(1, 'ewma', CAST(ewma_final AS DOUBLE),"
-             " CAST(ewma_max AS DOUBLE) + CAST(n_buckets AS DOUBLE)"
-             " * 1000000.0) AS (kind, v1, v2)")
-         .select("kind", F.col("event_type").alias("key"), "v1", "v2"),
-         "SELECT 'ewma' AS kind, event_type AS key,"
-         " CAST(ewma_final AS DOUBLE) AS v1,"
-         " CAST(ewma_max AS DOUBLE) + CAST(n_buckets AS DOUBLE)"
-         " * 1000000.0 AS v2"),
+         ["'ewma' AS kind", "event_type AS key",
+          "CAST(ewma_final AS DOUBLE) AS v1",
+          "CAST(ewma_max AS DOUBLE) + CAST(n_buckets AS DOUBLE) *"
+          " 1000000.0 AS v2"]),
         # r6: Holt double-exponential smoothing — level + trend + the
         # one-step forecast (functions/timeseries.py holt_int); the
         # trend can be negative, so both engines use exact floor(u/2.0)
         # halving, never integer div
         (ANALYTICS_SUITE["holt_trend"],
-         lambda df: df.selectExpr(
-             "event_type",
-             "stack(2, 'holt_lvl', CAST(level_final AS DOUBLE),"
-             " CAST(trend_final AS DOUBLE), 'holt_fc',"
-             " CAST(forecast_next AS DOUBLE),"
-             " CAST(n_buckets AS DOUBLE)) AS (kind, v1, v2)")
-         .select("kind", F.col("event_type").alias("key"), "v1", "v2"),
-         "SELECT unnest(['holt_lvl', 'holt_fc']) AS kind,"
-         " event_type AS key,"
-         " unnest([CAST(level_final AS DOUBLE),"
-         " CAST(forecast_next AS DOUBLE)]) AS v1,"
-         " unnest([CAST(trend_final AS DOUBLE),"
-         " CAST(n_buckets AS DOUBLE)]) AS v2"),
+         [["'holt_lvl' AS kind", "event_type AS key",
+           "CAST(level_final AS DOUBLE) AS v1",
+           "CAST(trend_final AS DOUBLE) AS v2"],
+          ["'holt_fc' AS kind", "event_type AS key",
+           "CAST(forecast_next AS DOUBLE) AS v1",
+           "CAST(n_buckets AS DOUBLE) AS v2"]]),
         # r8: autocorrelation of the daily count series at lags 1..7 —
         # the seasonality readout; acf_e6 < 2^52 rides the double slot
         (ANALYTICS_SUITE["acf_daily"],
-         lambda df: df.select(
-             F.lit("acf").alias("kind"),
-             F.concat_ws("|", "event_type",
-                         F.col("lag").cast("string")).alias("key"),
-             F.col("acf_e6").cast("double").alias("v1"),
-             F.col("n_buckets").cast("double").alias("v2")),
-         "SELECT 'acf' AS kind, event_type || '|' ||"
-         " CAST(lag AS VARCHAR) AS key,"
-         " CAST(acf_e6 AS DOUBLE) AS v1,"
-         " CAST(n_buckets AS DOUBLE) AS v2"),
+         ["'acf' AS kind",
+          "event_type || '|' || CAST(lag AS STRING) AS key",
+          "CAST(acf_e6 AS DOUBLE) AS v1", "CAST(n_buckets AS DOUBLE) AS v2"]),
         # r6: Theil-Sen robust trend — median of pairwise slopes (29%
         # breakdown point), the robust complement to trend_fit's OLS;
         # intercept_nano < 2^52 so the double slot carries it exactly
         (ANALYTICS_SUITE["theil_sen"],
-         lambda df: df.selectExpr(
-             "event_type",
-             "stack(2, 'theil_slope', CAST(slope_e9 AS DOUBLE),"
-             " CAST(n_pairs AS DOUBLE), 'theil_icpt',"
-             " CAST(intercept_nano AS DOUBLE),"
-             " CAST(n_buckets AS DOUBLE)) AS (kind, v1, v2)")
-         .select("kind", F.col("event_type").alias("key"), "v1", "v2"),
-         "SELECT unnest(['theil_slope', 'theil_icpt']) AS kind,"
-         " event_type AS key,"
-         " unnest([CAST(slope_e9 AS DOUBLE),"
-         " CAST(intercept_nano AS DOUBLE)]) AS v1,"
-         " unnest([CAST(n_pairs AS DOUBLE),"
-         " CAST(n_buckets AS DOUBLE)]) AS v2"),
+         [["'theil_slope' AS kind", "event_type AS key",
+           "CAST(slope_e9 AS DOUBLE) AS v1",
+           "CAST(n_pairs AS DOUBLE) AS v2"],
+          ["'theil_icpt' AS kind", "event_type AS key",
+           "CAST(intercept_nano AS DOUBLE) AS v1",
+           "CAST(n_buckets AS DOUBLE) AS v2"]]),
     ),
     # -- set ops: anti-join (NOT EXISTS) + UNION entity sets
     "set_operations": merged(
         (ANALYTICS_SUITE["customers_without_orders"],
-         lambda df: df.select(F.lit("anti_join").alias("kind"),
-                              F.col("c_custkey").alias("id")),
-         "SELECT 'anti_join' AS kind, c_custkey AS id"),
+         ["'anti_join' AS kind", "c_custkey AS id"]),
         (ANALYTICS_SUITE["active_entity_union"],
-         lambda df: df.select(F.lit("union").alias("kind"),
-                              F.col("k").alias("id")),
-         "SELECT 'union' AS kind, k AS id"),
+         ["'union' AS kind", "k AS id"]),
         # r4b: the remaining ANSI set operators — INTERSECT and the
         # multiset EXCEPT ALL (each key survives with multiplicity)
         (ANALYTICS_SUITE["nation_intersect"],
-         lambda df: df.select(F.lit("intersect").alias("kind"),
-                              F.col("k").cast("bigint").alias("id")),
-         "SELECT 'intersect' AS kind, CAST(k AS BIGINT) AS id"),
+         ["'intersect' AS kind", "CAST(k AS BIGINT) AS id"]),
         (ANALYTICS_SUITE["nation_except"],
-         lambda df: df.select(F.lit("except_all").alias("kind"),
-                              F.col("k").cast("bigint").alias("id")),
-         "SELECT 'except_all' AS kind, CAST(k AS BIGINT) AS id"),
+         ["'except_all' AS kind", "CAST(k AS BIGINT) AS id"]),
     ),
     # ROLLUP + GROUPING SETS + hypertable time-bucket cascade. The tbucket
     # branch packs level|bucket_epoch and event_type into the two varchar
@@ -3284,1186 +2565,656 @@ SUITE: dict[str, tuple] = {
     # the branches without a max) so the cascade's min/max path is hashed.
     "rollup_grouping_sets": merged(
         (ANALYTICS_SUITE["rollup_revenue"],
-         lambda df: df.select(F.lit("rollup").alias("kind"), "l_returnflag",
-                              "l_linestatus", F.lit(-1).alias("g_rf"),
-                              F.lit(-1).alias("g_ls"), "sum_price", "n",
-                              F.lit(-1.0).alias("max_v")),
-         "SELECT 'rollup' AS kind, l_returnflag, l_linestatus, -1 AS g_rf,"
-         " -1 AS g_ls, sum_price, n, CAST(-1.0 AS DOUBLE) AS max_v"),
+         ["'rollup' AS kind", "l_returnflag", "l_linestatus", "-1 AS g_rf",
+          "-1 AS g_ls", "sum_price", "n", "CAST(-1.0 AS DOUBLE) AS max_v"]),
         # r4b: CUBE — ROLLUP's missing per-second-dimension slice
         (ANALYTICS_SUITE["cube_revenue"],
-         lambda df: df.select(F.lit("cube").alias("kind"), "l_returnflag",
-                              "l_linestatus", F.lit(-1).alias("g_rf"),
-                              F.lit(-1).alias("g_ls"), "sum_price", "n",
-                              F.lit(-1.0).alias("max_v")),
-         "SELECT 'cube' AS kind, l_returnflag, l_linestatus, -1 AS g_rf,"
-         " -1 AS g_ls, sum_price, n, CAST(-1.0 AS DOUBLE) AS max_v"),
+         ["'cube' AS kind", "l_returnflag", "l_linestatus", "-1 AS g_rf",
+          "-1 AS g_ls", "sum_price", "n", "CAST(-1.0 AS DOUBLE) AS max_v"]),
         (ANALYTICS_SUITE["grouping_sets"],
-         lambda df: df.select(F.lit("gsets").alias("kind"), "l_returnflag",
-                              "l_linestatus", "g_rf", "g_ls",
-                              F.lit(-1.0).alias("sum_price"), "n",
-                              F.lit(-1.0).alias("max_v")),
-         "SELECT 'gsets' AS kind, l_returnflag, l_linestatus, g_rf, g_ls,"
-         " CAST(-1.0 AS DOUBLE) AS sum_price, n,"
-         " CAST(-1.0 AS DOUBLE) AS max_v"),
+         ["'gsets' AS kind", "l_returnflag", "l_linestatus", "g_rf",
+          "g_ls", "CAST(-1.0 AS DOUBLE) AS sum_price", "n",
+          "CAST(-1.0 AS DOUBLE) AS max_v"]),
         (ANALYTICS_SUITE["time_bucket_rollup"],
-         lambda df: df.select(
-             F.lit("tbucket").alias("kind"),
-             F.concat_ws("|", "level",
-                         F.col("bucket_epoch").cast("string"))
-             .alias("l_returnflag"),
-             F.col("event_type").alias("l_linestatus"),
-             F.lit(-1).alias("g_rf"), F.lit(-1).alias("g_ls"),
-             F.col("sum_value").alias("sum_price"), "n",
-             F.col("max_value").alias("max_v")),
-         "SELECT 'tbucket' AS kind, level || '|' ||"
-         " CAST(bucket_epoch AS VARCHAR) AS l_returnflag,"
-         " event_type AS l_linestatus, -1 AS g_rf, -1 AS g_ls,"
-         " sum_value AS sum_price, n, max_value AS max_v"),
+         ["'tbucket' AS kind",
+          "level || '|' || CAST(bucket_epoch AS STRING) AS l_returnflag",
+          "event_type AS l_linestatus", "-1 AS g_rf", "-1 AS g_ls",
+          "sum_value AS sum_price", "n", "max_value AS max_v"]),
         # r4b: hypertable gap-fill (functions/timeseries.py) — densified
         # hourly series; LOCF rides sum_price, linear interp rides max_v,
         # the observed-row count rides n (0 marks the filled gaps)
         (ANALYTICS_SUITE["gapfill_hourly"],
-         lambda df: df.select(
-             F.lit("gapfill").alias("kind"),
-             F.col("bucket").cast("string").alias("l_returnflag"),
-             F.col("event_type").alias("l_linestatus"),
-             F.lit(-1).alias("g_rf"), F.lit(-1).alias("g_ls"),
-             F.col("v_locf").alias("sum_price"), "n",
-             F.col("v_interp").alias("max_v")),
-         "SELECT 'gapfill' AS kind, CAST(bucket AS VARCHAR)"
-         " AS l_returnflag, event_type AS l_linestatus, -1 AS g_rf,"
-         " -1 AS g_ls, v_locf AS sum_price, n, v_interp AS max_v"),
+         ["'gapfill' AS kind", "CAST(bucket AS STRING) AS l_returnflag",
+          "event_type AS l_linestatus", "-1 AS g_rf", "-1 AS g_ls",
+          "v_locf AS sum_price", "n", "v_interp AS max_v"]),
         # r4b: time-weighted average — LOCF-weighted mean per type; the
         # µs span is < 2^53, exact in the double slot
         (ANALYTICS_SUITE["event_twa"],
-         lambda df: df.select(
-             F.lit("twa").alias("kind"),
-             F.lit("").alias("l_returnflag"),
-             F.col("event_type").alias("l_linestatus"),
-             F.lit(-1).alias("g_rf"), F.lit(-1).alias("g_ls"),
-             F.col("twa").alias("sum_price"),
-             F.col("n_points").alias("n"),
-             F.col("span_us").cast("double").alias("max_v")),
-         "SELECT 'twa' AS kind, '' AS l_returnflag,"
-         " event_type AS l_linestatus, -1 AS g_rf, -1 AS g_ls,"
-         " twa AS sum_price, n_points AS n,"
-         " CAST(span_us AS DOUBLE) AS max_v"),
+         ["'twa' AS kind", "'' AS l_returnflag",
+          "event_type AS l_linestatus", "-1 AS g_rf", "-1 AS g_ls",
+          "twa AS sum_price", "n_points AS n",
+          "CAST(span_us AS DOUBLE) AS max_v"]),
         # r6: OHLC candlestick bars (TimescaleDB first()/last() idiom) —
         # open/close ride one row (oc|bucket), high/low the other
         # (hl|bucket); the deterministic (epoch_us, event_id) total
         # order makes first/last tie-free
         (ANALYTICS_SUITE["ohlc_bars"],
-         lambda df: df.selectExpr(
-             "event_type", "bucket", "n",
-             "stack(2, 'oc', open, close, 'hl', high, low)"
-             " AS (half, va, vb)")
-         .select(F.lit("ohlc").alias("kind"),
-                 F.concat_ws("|", "half",
-                             F.col("bucket").cast("string"))
-                 .alias("l_returnflag"),
-                 F.col("event_type").alias("l_linestatus"),
-                 F.lit(-1).alias("g_rf"), F.lit(-1).alias("g_ls"),
-                 F.col("va").alias("sum_price"), "n",
-                 F.col("vb").alias("max_v")),
-         "SELECT 'ohlc' AS kind, unnest(['oc', 'hl']) || '|' ||"
-         " CAST(bucket AS VARCHAR) AS l_returnflag,"
-         " event_type AS l_linestatus, -1 AS g_rf, -1 AS g_ls,"
-         " unnest([open, high]) AS sum_price, n,"
-         " unnest([close, low]) AS max_v"),
+         [["'ohlc' AS kind",
+           "'oc' || '|' || CAST(bucket AS STRING) AS l_returnflag",
+           "event_type AS l_linestatus", "-1 AS g_rf", "-1 AS g_ls",
+           "open AS sum_price", "n", "close AS max_v"],
+          ["'ohlc' AS kind",
+           "'hl' || '|' || CAST(bucket AS STRING) AS l_returnflag",
+           "event_type AS l_linestatus", "-1 AS g_rf", "-1 AS g_ls",
+           "high AS sum_price", "n", "low AS max_v"]]),
     ),
     # -- TPC-H shapes, grouped by output geometry (see docs/SUITE_MAP.md)
     "tpch_revenue_groups": merged(
         (ANALYTICS_SUITE["tpch_q5"],
-         lambda df: df.select(F.lit("q5").alias("q"),
-                              F.col("n_name").alias("grp"), "revenue"),
-         "SELECT 'q5' AS q, n_name AS grp, revenue"),
+         ["'q5' AS q", "n_name AS grp", "revenue"]),
         (ANALYTICS_SUITE["tpch_q7"],
-         lambda df: df.select(F.lit("q7").alias("q"),
-                              F.concat_ws("|", "supp_nation", "cust_nation",
-                                          F.col("l_year").cast("string"))
-                              .alias("grp"), "revenue"),
-         "SELECT 'q7' AS q, supp_nation || '|' || cust_nation || '|' ||"
-         " CAST(l_year AS VARCHAR) AS grp, revenue"),
+         ["'q7' AS q",
+          "supp_nation || '|' || cust_nation || '|'"
+          " || CAST(l_year AS STRING) AS grp", "revenue"]),
         (ANALYTICS_SUITE["tpch_q10"],
-         lambda df: df.select(F.lit("q10").alias("q"),
-                              F.concat_ws("|",
-                                          F.col("c_custkey").cast("string"),
-                                          "c_name").alias("grp"), "revenue"),
-         "SELECT 'q10' AS q, CAST(c_custkey AS VARCHAR) || '|' || c_name"
-         " AS grp, revenue"),
+         ["'q10' AS q",
+          "CAST(c_custkey AS STRING) || '|' || c_name AS grp", "revenue"]),
         (ANALYTICS_SUITE["tpch_q8"],
-         lambda df: df.select(F.lit("q8").alias("q"),
-                              F.col("o_year").cast("string").alias("grp"),
-                              F.col("mkt_share").alias("revenue")),
-         "SELECT 'q8' AS q, CAST(o_year AS VARCHAR) AS grp,"
-         " mkt_share AS revenue"),
+         ["'q8' AS q", "CAST(o_year AS STRING) AS grp",
+          "mkt_share AS revenue"]),
         (ANALYTICS_SUITE["tpch_q9"],
-         lambda df: df.select(F.lit("q9").alias("q"),
-                              F.concat_ws("|", "nation",
-                                          F.col("o_year").cast("string"))
-                              .alias("grp"),
-                              F.col("sum_profit").alias("revenue")),
-         "SELECT 'q9' AS q, nation || '|' || CAST(o_year AS VARCHAR)"
-         " AS grp, sum_profit AS revenue"),
+         ["'q9' AS q", "nation || '|' || CAST(o_year AS STRING) AS grp",
+          "sum_profit AS revenue"]),
     ),
     "tpch_aggregates": merged(
         (ANALYTICS_SUITE["tpch_q4"],
-         lambda df: df.select(F.lit("q4").alias("q"),
-                              F.col("o_orderpriority").alias("grp"),
-                              F.lit(-1.0).alias("v"),
-                              F.col("order_count").alias("n")),
-         "SELECT 'q4' AS q, o_orderpriority AS grp,"
-         " CAST(-1.0 AS DOUBLE) AS v, order_count AS n"),
+         ["'q4' AS q", "o_orderpriority AS grp",
+          "CAST(-1.0 AS DOUBLE) AS v", "order_count AS n"]),
         (ANALYTICS_SUITE["tpch_q6"],
-         lambda df: df.select(F.lit("q6").alias("q"),
-                              F.lit("all").alias("grp"),
-                              F.col("revenue").alias("v"), "n"),
-         "SELECT 'q6' AS q, 'all' AS grp, revenue AS v, n"),
+         ["'q6' AS q", "'all' AS grp", "revenue AS v", "n"]),
         (ANALYTICS_SUITE["tpch_q12"],
-         lambda df: df.select(F.lit("q12").alias("q"),
-                              F.col("l_linestatus").alias("grp"),
-                              F.col("high_line_count").cast("double")
-                              .alias("v"),
-                              F.col("low_line_count").alias("n")),
-         "SELECT 'q12' AS q, l_linestatus AS grp,"
-         " CAST(high_line_count AS DOUBLE) AS v, low_line_count AS n"),
+         ["'q12' AS q", "l_linestatus AS grp",
+          "CAST(high_line_count AS DOUBLE) AS v", "low_line_count AS n"]),
         (ANALYTICS_SUITE["tpch_q14"],
-         lambda df: df.select(F.lit("q14").alias("q"),
-                              F.lit("all").alias("grp"),
-                              F.col("promo_revenue_pct").alias("v"),
-                              F.lit(-1).cast("bigint").alias("n")),
-         "SELECT 'q14' AS q, 'all' AS grp, promo_revenue_pct AS v,"
-         " CAST(-1 AS BIGINT) AS n"),
+         ["'q14' AS q", "'all' AS grp", "promo_revenue_pct AS v",
+          "CAST(-1 AS BIGINT) AS n"]),
         (ANALYTICS_SUITE["ship_latency_histogram"],
-         lambda df: df.select(F.lit("ship_hist").alias("q"),
-                              F.col("month_bucket").cast("string")
-                              .alias("grp"),
-                              F.lit(-1.0).alias("v"), "n"),
-         "SELECT 'ship_hist' AS q, CAST(month_bucket AS VARCHAR) AS grp,"
-         " CAST(-1.0 AS DOUBLE) AS v, n"),
+         ["'ship_hist' AS q", "CAST(month_bucket AS STRING) AS grp",
+          "CAST(-1.0 AS DOUBLE) AS v", "n"]),
         (ANALYTICS_SUITE["tpch_q17"],
-         lambda df: df.select(F.lit("q17").alias("q"),
-                              F.lit("all").alias("grp"),
-                              F.col("avg_yearly").alias("v"), "n"),
-         "SELECT 'q17' AS q, 'all' AS grp, avg_yearly AS v, n"),
+         ["'q17' AS q", "'all' AS grp", "avg_yearly AS v", "n"]),
         (ANALYTICS_SUITE["tpch_q19"],
-         lambda df: df.select(F.lit("q19").alias("q"),
-                              F.lit("all").alias("grp"),
-                              F.col("revenue").alias("v"), "n"),
-         "SELECT 'q19' AS q, 'all' AS grp, revenue AS v, n"),
+         ["'q19' AS q", "'all' AS grp", "revenue AS v", "n"]),
     ),
     "tpch_big_spenders": merged(
         (ANALYTICS_SUITE["tpch_q18"],
-         lambda df: df.select(F.lit("q18").alias("q"),
-                              F.concat_ws("|",
-                                          F.col("c_custkey").cast("string"),
-                                          "c_name").alias("grp"),
-                              F.col("n_big_orders").alias("n"),
-                              F.col("total_spent").alias("total")),
-         "SELECT 'q18' AS q, CAST(c_custkey AS VARCHAR) || '|' || c_name"
-         " AS grp, n_big_orders AS n, total_spent AS total"),
+         ["'q18' AS q",
+          "CAST(c_custkey AS STRING) || '|' || c_name AS grp",
+          "n_big_orders AS n", "total_spent AS total"]),
         (ANALYTICS_SUITE["tpch_q22"],
-         lambda df: df.select(F.lit("q22").alias("q"),
-                              F.col("c_nationkey").cast("string")
-                              .alias("grp"),
-                              F.col("n_cust").alias("n"),
-                              F.col("total_bal").alias("total")),
-         "SELECT 'q22' AS q, CAST(c_nationkey AS VARCHAR) AS grp,"
-         " n_cust AS n, total_bal AS total"),
+         ["'q22' AS q", "CAST(c_nationkey AS STRING) AS grp",
+          "n_cust AS n", "total_bal AS total"]),
         (ANALYTICS_SUITE["tpch_q15"],
-         lambda df: df.select(F.lit("q15").alias("q"),
-                              F.concat_ws("|",
-                                          F.col("s_suppkey").cast("string"),
-                                          "s_name").alias("grp"),
-                              F.lit(-1).cast("bigint").alias("n"),
-                              F.col("total_rev").alias("total")),
-         "SELECT 'q15' AS q, CAST(s_suppkey AS VARCHAR) || '|' || s_name"
-         " AS grp, CAST(-1 AS BIGINT) AS n, total_rev AS total"),
+         ["'q15' AS q",
+          "CAST(s_suppkey AS STRING) || '|' || s_name AS grp",
+          "CAST(-1 AS BIGINT) AS n", "total_rev AS total"]),
         (ANALYTICS_SUITE["tpch_q13"],
-         lambda df: df.select(F.lit("q13").alias("q"),
-                              F.col("c_count").cast("string").alias("grp"),
-                              F.col("custdist").alias("n"),
-                              F.lit(-1.0).alias("total")),
-         "SELECT 'q13' AS q, CAST(c_count AS VARCHAR) AS grp,"
-         " custdist AS n, CAST(-1.0 AS DOUBLE) AS total"),
+         ["'q13' AS q", "CAST(c_count AS STRING) AS grp", "custdist AS n",
+          "CAST(-1.0 AS DOUBLE) AS total"]),
         (ANALYTICS_SUITE["tpch_q21"],
-         lambda df: df.select(F.lit("q21").alias("q"),
-                              F.col("s_name").alias("grp"),
-                              F.col("numwait").alias("n"),
-                              F.lit(-1.0).alias("total")),
-         "SELECT 'q21' AS q, s_name AS grp, numwait AS n,"
-         " CAST(-1.0 AS DOUBLE) AS total"),
+         ["'q21' AS q", "s_name AS grp", "numwait AS n",
+          "CAST(-1.0 AS DOUBLE) AS total"]),
     ),
     "tpch_partsupp": merged(
         (ANALYTICS_SUITE["tpch_q2"],
-         lambda df: df.select(F.lit("q2").alias("q"),
-                              F.col("ps_partkey").cast("string")
-                              .alias("key"),
-                              F.col("best_suppkey").alias("n"),
-                              F.col("min_cost").alias("v")),
-         "SELECT 'q2' AS q, CAST(ps_partkey AS VARCHAR) AS key,"
-         " best_suppkey AS n, min_cost AS v"),
+         ["'q2' AS q", "CAST(ps_partkey AS STRING) AS key",
+          "best_suppkey AS n", "min_cost AS v"]),
         (ANALYTICS_SUITE["tpch_q11"],
-         lambda df: df.select(F.lit("q11").alias("q"),
-                              F.col("ps_partkey").cast("string")
-                              .alias("key"),
-                              F.lit(-1).cast("bigint").alias("n"),
-                              F.col("part_value").alias("v")),
-         "SELECT 'q11' AS q, CAST(ps_partkey AS VARCHAR) AS key,"
-         " CAST(-1 AS BIGINT) AS n, part_value AS v"),
+         ["'q11' AS q", "CAST(ps_partkey AS STRING) AS key",
+          "CAST(-1 AS BIGINT) AS n", "part_value AS v"]),
         # r4b: market-basket 2-itemset rules share the partsupp-family
         # entry — the two item counts ride stringified in the key, lift
         # is the exact-integer quotient in the double slot
         (ANALYTICS_SUITE["basket_rules"],
-         lambda df: df.select(
-             F.lit("basket").alias("q"),
-             F.concat_ws(":", F.col("p1").cast("string"),
-                         F.col("p2").cast("string"),
-                         F.col("n1").cast("string"),
-                         F.col("n2").cast("string")).alias("key"),
-             F.col("support").alias("n"),
-             F.col("lift").alias("v")),
-         "SELECT 'basket' AS q, CAST(p1 AS VARCHAR) || ':' ||"
-         " CAST(p2 AS VARCHAR) || ':' || CAST(n1 AS VARCHAR) || ':' ||"
-         " CAST(n2 AS VARCHAR) AS key, support AS n, lift AS v"),
+         ["'basket' AS q",
+          "CAST(p1 AS STRING) || ':' || CAST(p2 AS STRING) || ':'"
+          " || CAST(n1 AS STRING) || ':' || CAST(n2 AS STRING) AS key",
+          "support AS n", "lift AS v"]),
         (ANALYTICS_SUITE["tpch_q16"],
-         lambda df: df.select(F.lit("q16").alias("q"),
-                              F.concat_ws("|", "p_brand", "p_type",
-                                          F.col("p_size").cast("string"))
-                              .alias("key"),
-                              F.col("supplier_cnt").alias("n"),
-                              F.lit(-1.0).alias("v")),
-         "SELECT 'q16' AS q, p_brand || '|' || p_type || '|' ||"
-         " CAST(p_size AS VARCHAR) AS key, supplier_cnt AS n,"
-         " CAST(-1.0 AS DOUBLE) AS v"),
+         ["'q16' AS q",
+          "p_brand || '|' || p_type || '|'"
+          " || CAST(p_size AS STRING) AS key", "supplier_cnt AS n",
+          "CAST(-1.0 AS DOUBLE) AS v"]),
         (ANALYTICS_SUITE["tpch_q20"],
-         lambda df: df.select(F.lit("q20").alias("q"),
-                              F.col("s_name").alias("key"),
-                              F.col("s_suppkey").alias("n"),
-                              F.lit(-1.0).alias("v")),
-         "SELECT 'q20' AS q, s_name AS key, s_suppkey AS n,"
-         " CAST(-1.0 AS DOUBLE) AS v"),
+         ["'q20' AS q", "s_name AS key", "s_suppkey AS n",
+          "CAST(-1.0 AS DOUBLE) AS v"]),
     ),
     # -- the skew/heavy-key family shares one entry: salted two-phase
     #    aggregation + r4's exact heavy hitters (per-partition Misra-Gries
     #    candidates, broadcast recount — functions/heavy.py)
     "salted_event_counts": merged(
         (ANALYTICS_SUITE["salted_event_counts"],
-         lambda df: df.select(F.lit("salted").alias("kind"),
-                              F.col("event_type").alias("key"), "n"),
-         "SELECT 'salted' AS kind, event_type AS key, n"),
+         ["'salted' AS kind", "event_type AS key", "n"]),
         (PIPELINE_SUITE["heavy_tokens"],
-         lambda df: df.select(F.lit("heavy").alias("kind"),
-                              F.col("item").alias("key"), "n"),
-         "SELECT 'heavy' AS kind, item AS key, n"),
+         ["'heavy' AS kind", "item AS key", "n"]),
         # r5: key-skew diagnostic (operators/skew.py skew_report) — the
         # 6 stats unpivot into tagged rows
         (ANALYTICS_SUITE["skew_report"],
-         lambda df: df.selectExpr(
-             "stack(6, 'sk_keys', n_keys, 'sk_rows', total_rows,"
-             " 'sk_max', max_key_rows, 'sk_top1', top1_share_e6,"
-             " 'sk_top10', top10_share_e6, 'sk_top100',"
-             " top100_share_e6) AS (kind, n)")
-         .select("kind", F.lit("user_id").alias("key"), "n"),
-         "SELECT unnest(['sk_keys', 'sk_rows', 'sk_max', 'sk_top1',"
-         " 'sk_top10', 'sk_top100']) AS kind, 'user_id' AS key,"
-         " unnest([n_keys, total_rows, max_key_rows, top1_share_e6,"
-         " top10_share_e6, top100_share_e6]) AS n"),
+         [["'sk_keys' AS kind", "'user_id' AS key", "n_keys AS n"],
+          ["'sk_rows' AS kind", "'user_id' AS key", "total_rows AS n"],
+          ["'sk_max' AS kind", "'user_id' AS key", "max_key_rows AS n"],
+          ["'sk_top1' AS kind", "'user_id' AS key", "top1_share_e6 AS n"],
+          ["'sk_top10' AS kind", "'user_id' AS key", "top10_share_e6 AS n"],
+          ["'sk_top100' AS kind", "'user_id' AS key",
+           "top100_share_e6 AS n"]]),
         # r4b: count-min sketch estimates beside the exact recount
         # (functions/sketches.py cms_*): est/exact packed into the key,
         # the one-sided overestimate rides the count column
         (ANALYTICS_SUITE["cms_user_counts"],
-         lambda df: df.select(
-             F.lit("cms").alias("kind"),
-             F.concat_ws(":", F.col("user_id").cast("string"),
-                         F.col("cms_est").cast("string"),
-                         F.col("exact_n").cast("string")).alias("key"),
-             F.col("overcount").alias("n")),
-         "SELECT 'cms' AS kind, CAST(user_id AS VARCHAR) || ':' ||"
-         " CAST(cms_est AS VARCHAR) || ':' || CAST(exact_n AS VARCHAR)"
-         " AS key, overcount AS n"),
+         ["'cms' AS kind",
+          "CAST(user_id AS STRING) || ':' || CAST(cms_est AS STRING)"
+          " || ':' || CAST(exact_n AS STRING) AS key", "overcount AS n"]),
         # r4b: first-order Markov transition counts over user journeys —
         # probabilities are the exact quotients of the hashed ints
         (ANALYTICS_SUITE["event_transitions"],
-         lambda df: df.select(
-             F.lit("markov").alias("kind"),
-             F.concat_ws(">", "from_type", "to_type",
-                         F.col("n_out").cast("string")).alias("key"),
-             F.col("n")),
-         "SELECT 'markov' AS kind, from_type || '>' || to_type || '>' ||"
-         " CAST(n_out AS VARCHAR) AS key, n"),
+         ["'markov' AS kind",
+          "from_type || '>' || to_type || '>'"
+          " || CAST(n_out AS STRING) AS key", "n"]),
         # r4b: eventually-follows (any-gap) sequence support — the
         # PrefixSpan 2-sequence core beside the adjacent-only Markov view
         (ANALYTICS_SUITE["eventually_follows"],
-         lambda df: df.select(
-             F.lit("seq").alias("kind"),
-             F.concat_ws("~>", "a", "b",
-                         F.col("n_users").cast("string")).alias("key"),
-             F.col("support").alias("n")),
-         "SELECT 'seq' AS kind, a || '~>' || b || '~>' ||"
-         " CAST(n_users AS VARCHAR) AS key, support AS n"),
+         ["'seq' AS kind",
+          "a || '~>' || b || '~>' || CAST(n_users AS STRING) AS key",
+          "support AS n"]),
         # r5: weekday seasonality profile + deterministic peak weekday
         (ANALYTICS_SUITE["weekday_profile"],
-         lambda df: df.select(
-             F.lit("weekday").alias("kind"),
-             F.concat_ws("|", "part", "event_type",
-                         F.col("isodow").cast("string")).alias("key"),
-             F.col("n")),
-         "SELECT 'weekday' AS kind, part || '|' || event_type || '|' ||"
-         " CAST(isodow AS VARCHAR) AS key, n"),
+         ["'weekday' AS kind",
+          "part || '|' || event_type || '|'"
+          " || CAST(isodow AS STRING) AS key", "n"]),
         # r6: two-proportion z-test over the deterministic 50/50 hash
         # split — the A/B readout; counts/rate are exact integers, the
         # z-statistic rides the key (micro units, ln-fold discipline)
         (ANALYTICS_SUITE["ab_test"],
-         lambda df: df.select(
-             F.lit("ab").alias("kind"),
-             F.concat_ws("|", F.col("variant").cast("string"),
-                         F.col("z_micro").cast("string"),
-                         F.col("significant").cast("string"),
-                         F.col("rate_ppm").cast("string")).alias("key"),
-             (F.col("n_exposed") * 4_294_967_296 + F.col("n_conv"))
-             .alias("n")),
-         "SELECT 'ab' AS kind, CAST(variant AS VARCHAR) || '|' ||"
-         " CAST(z_micro AS VARCHAR) || '|' ||"
-         " CAST(significant AS VARCHAR) || '|' ||"
-         " CAST(rate_ppm AS VARCHAR) AS key,"
-         " n_exposed * 4294967296 + n_conv AS n"),
+         ["'ab' AS kind",
+          "CAST(variant AS STRING) || '|' || CAST(z_micro AS STRING)"
+          " || '|' || CAST(significant AS STRING) || '|'"
+          " || CAST(rate_ppm AS STRING) AS key",
+          "n_exposed * 4294967296 + n_conv AS n"]),
         # r7: Mann-Whitney U rank-sum test (functions/hypothesis.py) —
         # the rank-based complement to the ab z-test; doubled exact U
         # statistics, tie term and z_e6 unpivot into tagged rows
         (ANALYTICS_SUITE["mann_whitney"],
-         lambda df: df.selectExpr(
-             "event_type",
-             "stack(5, 'mw_u0', u0_2x, 'mw_u1', u1_2x, 'mw_tie',"
-             " tie_cube, 'mw_z', z_e6, 'mw_n', n0 * 4294967296 + n1)"
-             " AS (kind, n)")
-         .select("kind", F.col("event_type").alias("key"), "n"),
-         "SELECT unnest(['mw_u0', 'mw_u1', 'mw_tie', 'mw_z', 'mw_n'])"
-         " AS kind, event_type AS key,"
-         " unnest([u0_2x, u1_2x, tie_cube, z_e6, n0 * 4294967296 + n1])"
-         " AS n"),
+         [["'mw_u0' AS kind", "event_type AS key", "u0_2x AS n"],
+          ["'mw_u1' AS kind", "event_type AS key", "u1_2x AS n"],
+          ["'mw_tie' AS kind", "event_type AS key", "tie_cube AS n"],
+          ["'mw_z' AS kind", "event_type AS key", "z_e6 AS n"],
+          ["'mw_n' AS kind", "event_type AS key",
+           "n0 * 4294967296 + n1 AS n"]]),
         # r8: Welch's unequal-variance t-test — the parametric
         # complement to mann_whitney on the same md5 cohorts; t and
         # the Welch-Satterthwaite dof ride the key, counts/sums the n
         (ANALYTICS_SUITE["welch_ttest"],
-         lambda df: df.selectExpr(
-             "event_type", "t_e4", "df_e2",
-             "stack(3, 'welch_n', n0 * 4294967296 + n1,"
-             " 'welch_s0', sum0, 'welch_s1', sum1) AS (kind, n)")
-         .select("kind",
-                 F.concat_ws("|", "event_type",
-                             F.col("t_e4").cast("string"),
-                             F.col("df_e2").cast("string")).alias("key"),
-                 "n"),
-         "SELECT unnest(['welch_n', 'welch_s0', 'welch_s1']) AS kind,"
-         " event_type || '|' || CAST(t_e4 AS VARCHAR) || '|' ||"
-         " CAST(df_e2 AS VARCHAR) AS key,"
-         " unnest([n0 * 4294967296 + n1, sum0, sum1]) AS n"),
+         [["'welch_n' AS kind",
+           "event_type || '|' || CAST(t_e4 AS STRING) || '|'"
+           " || CAST(df_e2 AS STRING) AS key", "n0 * 4294967296 + n1 AS n"],
+          ["'welch_s0' AS kind",
+           "event_type || '|' || CAST(t_e4 AS STRING) || '|'"
+           " || CAST(df_e2 AS STRING) AS key", "sum0 AS n"],
+          ["'welch_s1' AS kind",
+           "event_type || '|' || CAST(t_e4 AS STRING) || '|'"
+           " || CAST(df_e2 AS STRING) AS key", "sum1 AS n"]]),
         # r8: always-valid mixture-SPRT + fixed-horizon MDE — the
         # peeking-safe sequential readout beside the fixed-horizon tests
         (ANALYTICS_SUITE["msprt"],
-         lambda df: df.selectExpr(
-             "event_type",
-             "stack(5, 'msprt_p', p_e6, 'msprt_mde', mde_e4,"
-             " 'msprt_n', n0 * 4294967296 + n1, 'msprt_th', theta_e4,"
-             " 'msprt_v', v_e9) AS (kind, n)")
-         .select("kind", F.col("event_type").alias("key"), "n"),
-         "SELECT unnest(['msprt_p', 'msprt_mde', 'msprt_n', 'msprt_th',"
-         " 'msprt_v']) AS kind, event_type AS key,"
-         " unnest([p_e6, mde_e4, n0 * 4294967296 + n1, theta_e4, v_e9])"
-         " AS n"),
+         [["'msprt_p' AS kind", "event_type AS key", "p_e6 AS n"],
+          ["'msprt_mde' AS kind", "event_type AS key", "mde_e4 AS n"],
+          ["'msprt_n' AS kind", "event_type AS key",
+           "n0 * 4294967296 + n1 AS n"],
+          ["'msprt_th' AS kind", "event_type AS key", "theta_e4 AS n"],
+          ["'msprt_v' AS kind", "event_type AS key", "v_e9 AS n"]]),
         # r8: Spearman rank correlation of value vs event time — the
         # per-type monotone-drift readout; rho rides the key
         (ANALYTICS_SUITE["spearman_drift"],
-         lambda df: df.select(
-             F.lit("spear").alias("kind"),
-             F.concat_ws("|", "event_type",
-                         F.col("rho_e6").cast("string")).alias("key"),
-             F.col("n")),
-         "SELECT 'spear' AS kind, event_type || '|' ||"
-         " CAST(rho_e6 AS VARCHAR) AS key, n"),
+         ["'spear' AS kind",
+          "event_type || '|' || CAST(rho_e6 AS STRING) AS key", "n"]),
         # r8: sample-ratio-mismatch guard on the md5 split — the
         # validity check run before reading any experiment metric
         (ANALYTICS_SUITE["srm_check"],
-         lambda df: df.selectExpr(
-             "event_type", "chi2_e6", "srm",
-             "stack(2, 'srm_n0', n0, 'srm_n1', n1) AS (kind, n)")
-         .select("kind",
-                 F.concat_ws("|", "event_type",
-                             F.col("chi2_e6").cast("string"),
-                             F.col("srm").cast("string")).alias("key"),
-                 "n"),
-         "SELECT unnest(['srm_n0', 'srm_n1']) AS kind,"
-         " event_type || '|' || CAST(chi2_e6 AS VARCHAR) || '|' ||"
-         " CAST(srm AS VARCHAR) AS key, unnest([n0, n1]) AS n"),
+         [["'srm_n0' AS kind",
+           "event_type || '|' || CAST(chi2_e6 AS STRING) || '|'"
+           " || CAST(srm AS STRING) AS key", "n0 AS n"],
+          ["'srm_n1' AS kind",
+           "event_type || '|' || CAST(chi2_e6 AS STRING) || '|'"
+           " || CAST(srm AS STRING) AS key", "n1 AS n"]]),
         # r8: 2x2 difference-in-differences on variant x pre/post —
         # cell moments ride n, the estimate/SE ride the key
         (ANALYTICS_SUITE["did"],
-         lambda df: df.selectExpr(
-             "event_type", "grp", "period", "did_e4", "se_e4",
-             "stack(2, 'did_n', n, 'did_s', sum_v) AS (kind, n)")
-         .select("kind",
-                 F.concat_ws("|", "event_type",
-                             F.col("grp").cast("string"),
-                             F.col("period").cast("string"),
-                             F.col("did_e4").cast("string"),
-                             F.col("se_e4").cast("string")).alias("key"),
-                 "n"),
-         "SELECT unnest(['did_n', 'did_s']) AS kind,"
-         " event_type || '|' || CAST(grp AS VARCHAR) || '|' ||"
-         " CAST(period AS VARCHAR) || '|' || CAST(did_e4 AS VARCHAR)"
-         " || '|' || CAST(se_e4 AS VARCHAR) AS key,"
-         " unnest([n, sum_v]) AS n"),
+         [["'did_n' AS kind",
+           "event_type || '|' || CAST(grp AS STRING) || '|'"
+           " || CAST(period AS STRING) || '|' || CAST(did_e4 AS STRING)"
+           " || '|' || CAST(se_e4 AS STRING) AS key", "n AS n"],
+          ["'did_s' AS kind",
+           "event_type || '|' || CAST(grp AS STRING) || '|'"
+           " || CAST(period AS STRING) || '|' || CAST(did_e4 AS STRING)"
+           " || '|' || CAST(se_e4 AS STRING) AS key", "sum_v AS n"]]),
         # r8: per-type Gini of per-user spend — the Lorenz-curve
         # concentration summary beside the skew head counts
         (ANALYTICS_SUITE["gini_spend"],
-         lambda df: df.select(
-             F.lit("gini").alias("kind"),
-             F.concat_ws("|", "event_type",
-                         F.col("gini_ppm").cast("string")).alias("key"),
-             F.col("n_entities").alias("n")),
-         "SELECT 'gini' AS kind, event_type || '|' ||"
-         " CAST(gini_ppm AS VARCHAR) AS key, n_entities AS n"),
+         ["'gini' AS kind",
+          "event_type || '|' || CAST(gini_ppm AS STRING) AS key",
+          "n_entities AS n"]),
         # r8: Cochran-Armitage weekday trend of the high-value share —
         # ordered-category dose-response beside chi2_weekday
         (ANALYTICS_SUITE["cochran_armitage"],
-         lambda df: df.selectExpr(
-             "event_type", "score", "z_e6",
-             "stack(2, 'ca_n', n_i, 'ca_r', r_i) AS (kind, n)")
-         .select("kind",
-                 F.concat_ws("|", "event_type",
-                             F.col("score").cast("string"),
-                             F.col("z_e6").cast("string")).alias("key"),
-                 "n"),
-         "SELECT unnest(['ca_n', 'ca_r']) AS kind,"
-         " event_type || '|' || CAST(score AS VARCHAR) || '|' ||"
-         " CAST(z_e6 AS VARCHAR) AS key, unnest([n_i, r_i]) AS n"),
+         [["'ca_n' AS kind",
+           "event_type || '|' || CAST(score AS STRING) || '|'"
+           " || CAST(z_e6 AS STRING) AS key", "n_i AS n"],
+          ["'ca_r' AS kind",
+           "event_type || '|' || CAST(score AS STRING) || '|'"
+           " || CAST(z_e6 AS STRING) AS key", "r_i AS n"]]),
         # r8: Kruskal-Wallis H across three md5 cohorts — the k-group
         # rank test; per-group rank sums ride n, tie term + H the key
         (ANALYTICS_SUITE["kruskal_wallis"],
-         lambda df: df.selectExpr(
-             "event_type", "grp", "tie_cube", "h_e6",
-             "stack(2, 'kw_n', n_g, 'kw_r', r2x) AS (kind, n)")
-         .select("kind",
-                 F.concat_ws("|", "event_type",
-                             F.col("grp").cast("string"),
-                             F.col("tie_cube").cast("string"),
-                             F.col("h_e6").cast("string")).alias("key"),
-                 "n"),
-         "SELECT unnest(['kw_n', 'kw_r']) AS kind,"
-         " event_type || '|' || CAST(grp AS VARCHAR) || '|' ||"
-         " CAST(tie_cube AS VARCHAR) || '|' || CAST(h_e6 AS VARCHAR)"
-         " AS key, unnest([n_g, r2x]) AS n"),
+         [["'kw_n' AS kind",
+           "event_type || '|' || CAST(grp AS STRING) || '|'"
+           " || CAST(tie_cube AS STRING) || '|'"
+           " || CAST(h_e6 AS STRING) AS key", "n_g AS n"],
+          ["'kw_r' AS kind",
+           "event_type || '|' || CAST(grp AS STRING) || '|'"
+           " || CAST(tie_cube AS STRING) || '|'"
+           " || CAST(h_e6 AS STRING) AS key", "r2x AS n"]]),
         # r7: leave-one-out target encoding (Micci-Barreca / Kaggle
         # canon) — the leakage-free categorical encoder; distinct
         # (category, value) cells, margins packed into the key
         (ANALYTICS_SUITE["target_encoding"],
-         lambda df: df.selectExpr(
-             "event_type", "cents", "n_c", "s_c",
-             "stack(2, 'te_n', n_rows, 'te_enc', enc_e6) AS (kind, n)")
-         .select("kind",
-                 F.concat_ws(":", "event_type",
-                             F.col("cents").cast("string"),
-                             F.col("n_c").cast("string"),
-                             F.col("s_c").cast("string")).alias("key"),
-                 "n"),
-         "SELECT unnest(['te_n', 'te_enc']) AS kind,"
-         " event_type || ':' || CAST(cents AS VARCHAR) || ':' ||"
-         " CAST(n_c AS VARCHAR) || ':' || CAST(s_c AS VARCHAR) AS key,"
-         " unnest([n_rows, enc_e6]) AS n"),
+         [["'te_n' AS kind",
+           "event_type || ':' || CAST(cents AS STRING) || ':'"
+           " || CAST(n_c AS STRING) || ':' || CAST(s_c AS STRING) AS key",
+           "n_rows AS n"],
+          ["'te_enc' AS kind",
+           "event_type || ':' || CAST(cents AS STRING) || ':'"
+           " || CAST(n_c AS STRING) || ':' || CAST(s_c AS STRING) AS key",
+           "enc_e6 AS n"]]),
         # r7: Benjamini-Hochberg FDR over the Mann-Whitney battery —
         # the multiple-testing layer; p/rank/m/rejected pack per test
         (ANALYTICS_SUITE["fdr_battery"],
-         lambda df: df.selectExpr(
-             "event_type", "rank", "m", "rejected",
-             "stack(2, 'fdr_z', z_e6, 'fdr_p', p_e6) AS (kind, n)")
-         .select("kind",
-                 F.concat_ws(":", "event_type",
-                             F.col("rank").cast("string"),
-                             F.col("m").cast("string"),
-                             F.col("rejected").cast("string"))
-                 .alias("key"), "n"),
-         "SELECT unnest(['fdr_z', 'fdr_p']) AS kind,"
-         " event_type || ':' || CAST(rank AS VARCHAR) || ':' ||"
-         " CAST(m AS VARCHAR) || ':' || CAST(rejected AS VARCHAR)"
-         " AS key, unnest([z_e6, p_e6]) AS n"),
+         [["'fdr_z' AS kind",
+           "event_type || ':' || CAST(rank AS STRING) || ':'"
+           " || CAST(m AS STRING) || ':'"
+           " || CAST(rejected AS STRING) AS key", "z_e6 AS n"],
+          ["'fdr_p' AS kind",
+           "event_type || ':' || CAST(rank AS STRING) || ':'"
+           " || CAST(m AS STRING) || ':'"
+           " || CAST(rejected AS STRING) AS key", "p_e6 AS n"]]),
         # r7: CUPED variance-reduced A/B readout (hypothesis.py,
         # Deng et al. WSDM 2013) — the covariate-adjusted companion to
         # the raw ab z-test; all 7 stats unpivot per row, key carries
         # kind:variant
         (ANALYTICS_SUITE["cuped"],
-         lambda df: df.selectExpr(
-             "kind AS ckind", "variant",
-             "stack(7, 'cu_n', n, 'cu_sx', sum_x, 'cu_sy', sum_y,"
-             " 'cu_my', mean_y_e6, 'cu_mcv', mean_ycv_e6,"
-             " 'cu_vy', var_y_e9, 'cu_vcv', var_ycv_e9) AS (kind, n)")
-         .select("kind",
-                 F.concat_ws(":", "ckind",
-                             F.col("variant").cast("string")).alias("key"),
-                 "n"),
-         "SELECT unnest(['cu_n', 'cu_sx', 'cu_sy', 'cu_my', 'cu_mcv',"
-         " 'cu_vy', 'cu_vcv']) AS kind,"
-         " kind || ':' || CAST(variant AS VARCHAR) AS key,"
-         " unnest([n, sum_x, sum_y, mean_y_e6, mean_ycv_e6,"
-         " var_y_e9, var_ycv_e9]) AS n"),
+         [["'cu_n' AS kind",
+           "kind || ':' || CAST(variant AS STRING) AS key", "n AS n"],
+          ["'cu_sx' AS kind",
+           "kind || ':' || CAST(variant AS STRING) AS key", "sum_x AS n"],
+          ["'cu_sy' AS kind",
+           "kind || ':' || CAST(variant AS STRING) AS key", "sum_y AS n"],
+          ["'cu_my' AS kind",
+           "kind || ':' || CAST(variant AS STRING) AS key",
+           "mean_y_e6 AS n"],
+          ["'cu_mcv' AS kind",
+           "kind || ':' || CAST(variant AS STRING) AS key",
+           "mean_ycv_e6 AS n"],
+          ["'cu_vy' AS kind",
+           "kind || ':' || CAST(variant AS STRING) AS key", "var_y_e9 AS n"],
+          ["'cu_vcv' AS kind",
+           "kind || ':' || CAST(variant AS STRING) AS key",
+           "var_ycv_e9 AS n"]]),
         # r7: first/last-touch conversion attribution — per-channel
         # purchase credit from per-user IGNORE NULLS window carries
         (ANALYTICS_SUITE["attribution"],
-         lambda df: df.selectExpr(
-             "channel",
-             "stack(2, 'attr_last', n_last_touch,"
-             " 'attr_first', n_first_touch) AS (kind, n)")
-         .select("kind", F.col("channel").alias("key"), "n"),
-         "SELECT unnest(['attr_last', 'attr_first']) AS kind,"
-         " channel AS key, unnest([n_last_touch, n_first_touch]) AS n"),
+         [["'attr_last' AS kind", "channel AS key", "n_last_touch AS n"],
+          ["'attr_first' AS kind", "channel AS key", "n_first_touch AS n"]]),
         # r7: MAD outlier gate (functions/timeseries.py mad_outliers) —
         # the robust complement to anomaly_zscore; all-integer unpivot
         (ANALYTICS_SUITE["mad_outliers"],
-         lambda df: df.selectExpr(
-             "event_type",
-             "stack(4, 'mad_n', n, 'mad_med', med, 'mad_mad', mad,"
-             " 'mad_out', n_outliers) AS (kind, n)")
-         .select("kind", F.col("event_type").alias("key"), "n"),
-         "SELECT unnest(['mad_n', 'mad_med', 'mad_mad', 'mad_out'])"
-         " AS kind, event_type AS key,"
-         " unnest([n, med, mad, n_outliers]) AS n"),
+         [["'mad_n' AS kind", "event_type AS key", "n AS n"],
+          ["'mad_med' AS kind", "event_type AS key", "med AS n"],
+          ["'mad_mad' AS kind", "event_type AS key", "mad AS n"],
+          ["'mad_out' AS kind", "event_type AS key", "n_outliers AS n"]]),
         # r7: Pearson chi-square independence (functions/hypothesis.py)
         # over the event_type x ISO-weekday contingency table — margins
         # ride the key, O and the cell contribution stack into n
         (ANALYTICS_SUITE["chi2_weekday"],
-         lambda df: df.selectExpr(
-             "event_type", "isodow", "row_tot", "col_tot", "n_total",
-             "stack(2, 'chi2_obs', n_obs, 'chi2_c', chi2_e6)"
-             " AS (kind, n)")
-         .select("kind",
-                 F.concat_ws("|", "event_type",
-                             F.col("isodow").cast("string"),
-                             F.col("row_tot").cast("string"),
-                             F.col("col_tot").cast("string"),
-                             F.col("n_total").cast("string")).alias("key"),
-                 "n"),
-         "SELECT unnest(['chi2_obs', 'chi2_c']) AS kind,"
-         " event_type || '|' || CAST(isodow AS VARCHAR) || '|' ||"
-         " CAST(row_tot AS VARCHAR) || '|' || CAST(col_tot AS VARCHAR)"
-         " || '|' || CAST(n_total AS VARCHAR) AS key,"
-         " unnest([n_obs, chi2_e6]) AS n"),
+         [["'chi2_obs' AS kind",
+           "event_type || '|' || CAST(isodow AS STRING) || '|'"
+           " || CAST(row_tot AS STRING) || '|' || CAST(col_tot AS STRING)"
+           " || '|' || CAST(n_total AS STRING) AS key", "n_obs AS n"],
+          ["'chi2_c' AS kind",
+           "event_type || '|' || CAST(isodow AS STRING) || '|'"
+           " || CAST(row_tot AS STRING) || '|' || CAST(col_tot AS STRING)"
+           " || '|' || CAST(n_total AS STRING) AS key", "chi2_e6 AS n"]]),
         # r7: Benford first-digit audit (functions/hypothesis.py) —
         # observed counts and chi-square contributions per digit
         (ANALYTICS_SUITE["benford_prices"],
-         lambda df: df.selectExpr(
-             "digit", "exp_ppm", "n_total",
-             "stack(2, 'bf_obs', n_obs, 'bf_chi', chi2_e6) AS (kind, n)")
-         .select("kind",
-                 F.concat_ws(":", F.col("digit").cast("string"),
-                             F.col("exp_ppm").cast("string"),
-                             F.col("n_total").cast("string")).alias("key"),
-                 "n"),
-         "SELECT unnest(['bf_obs', 'bf_chi']) AS kind,"
-         " CAST(digit AS VARCHAR) || ':' || CAST(exp_ppm AS VARCHAR)"
-         " || ':' || CAST(n_total AS VARCHAR) AS key,"
-         " unnest([n_obs, chi2_e6]) AS n"),
+         [["'bf_obs' AS kind",
+           "CAST(digit AS STRING) || ':' || CAST(exp_ppm AS STRING) || ':'"
+           " || CAST(n_total AS STRING) AS key", "n_obs AS n"],
+          ["'bf_chi' AS kind",
+           "CAST(digit AS STRING) || ':' || CAST(exp_ppm AS STRING) || ':'"
+           " || CAST(n_total AS STRING) AS key", "chi2_e6 AS n"]]),
     ),
     # as-of + range join: the two temporal-join operators share one entry
     # (harmonized: event_id, user_id, a reference event id, a double value)
     "asof_last_purchase": merged(
         (ANALYTICS_SUITE["asof_last_purchase"],
-         lambda df: df.select(F.lit("asof").alias("kind"), "event_id",
-                              "user_id",
-                              F.col("purchase_event_id").alias("ref_id"),
-                              F.col("purchase_value").alias("v")),
-         "SELECT 'asof' AS kind, event_id, user_id,"
-         " purchase_event_id AS ref_id, purchase_value AS v"),
+         ["'asof' AS kind", "event_id", "user_id",
+          "purchase_event_id AS ref_id", "purchase_value AS v"]),
         (ANALYTICS_SUITE["purchase_windows"],
-         lambda df: df.select(F.lit("range").alias("kind"), "event_id",
-                              "user_id", "ref_id",
-                              F.col("offset_sec").alias("v")),
-         "SELECT 'range' AS kind, event_id, user_id, ref_id,"
-         " offset_sec AS v"),
+         ["'range' AS kind", "event_id", "user_id", "ref_id",
+          "offset_sec AS v"]),
     ),
     "distinct_users": merged(
         (ANALYTICS_SUITE["distinct_counts"],
-         lambda df: df.select(F.lit("by_type").alias("kind"),
-                              F.col("event_type").alias("key"),
-                              F.col("distinct_users").alias("a"),
-                              F.col("distinct_parts").alias("b"), "n"),
-         "SELECT 'by_type' AS kind, event_type AS key, distinct_users AS a,"
-         " distinct_parts AS b, n"),
+         ["'by_type' AS kind", "event_type AS key", "distinct_users AS a",
+          "distinct_parts AS b", "n"]),
         (ANALYTICS_SUITE["daily_active_users"],
-         lambda df: df.select(F.lit("daily").alias("kind"),
-                              F.col("day").alias("key"),
-                              F.col("dau").alias("a"),
-                              F.lit(-1).cast("bigint").alias("b"),
-                              F.col("n_events").alias("n")),
-         "SELECT 'daily' AS kind, day AS key, dau AS a,"
-         " CAST(-1 AS BIGINT) AS b, n_events AS n"),
+         ["'daily' AS kind", "day AS key", "dau AS a",
+          "CAST(-1 AS BIGINT) AS b", "n_events AS n"]),
         # r4: KMV distinct sketch beside the exact control — the estimate
         # itself is integer-exact, so it participates in the hash
         # (functions/sketches.py; HLL can't cross-engine-match)
         (ANALYTICS_SUITE["kmv_distinct"],
-         lambda df: df.select(F.lit("kmv").alias("kind"),
-                              F.col("event_type").alias("key"),
-                              F.col("exact_distinct").alias("a"),
-                              F.col("kmv_est").alias("b"),
-                              F.col("kth_hash").alias("n")),
-         "SELECT 'kmv' AS kind, event_type AS key, exact_distinct AS a,"
-         " kmv_est AS b, kth_hash AS n"),
+         ["'kmv' AS kind", "event_type AS key", "exact_distinct AS a",
+          "kmv_est AS b", "kth_hash AS n"]),
         # r4b: cohort retention matrix (first-event-day cohorts × daily
         # activity offsets); the rate is the exact quotient a/b and is
         # re-asserted in pytest — the hashed ints carry all information
         (ANALYTICS_SUITE["cohort_retention"],
-         lambda df: df.select(
-             F.lit("cohort").alias("kind"),
-             F.concat_ws(":", F.col("cohort_day").cast("string"),
-                         F.col("day_offset").cast("string")).alias("key"),
-             F.col("n_active").alias("a"),
-             F.col("cohort_n").alias("b"),
-             F.col("day_offset").alias("n")),
-         "SELECT 'cohort' AS kind, CAST(cohort_day AS VARCHAR) || ':' ||"
-         " CAST(day_offset AS VARCHAR) AS key, n_active AS a,"
-         " cohort_n AS b, day_offset AS n"),
+         ["'cohort' AS kind",
+          "CAST(cohort_day AS STRING) || ':'"
+          " || CAST(day_offset AS STRING) AS key", "n_active AS a",
+          "cohort_n AS b", "day_offset AS n"]),
         # r5: deterministic Bloom filter (functions/bloom.py) — the full
         # bit-array words AND the membership/FPR summary hash-check
         (ANALYTICS_SUITE["bloom_filter"],
-         lambda df: df.select(F.lit("bloom").alias("kind"),
-                              F.col("part").alias("key"),
-                              F.col("k").alias("a"),
-                              F.col("v").alias("b"),
-                              F.lit(-1).cast("bigint").alias("n")),
-         "SELECT 'bloom' AS kind, part AS key, k AS a, v AS b,"
-         " CAST(-1 AS BIGINT) AS n"),
+         ["'bloom' AS kind", "part AS key", "k AS a", "v AS b",
+          "CAST(-1 AS BIGINT) AS n"]),
         # r5: KMV intersection estimate (sketch-based join sizing) beside
         # the exact controls — floor()ed integer math end to end
         (ANALYTICS_SUITE["kmv_intersect"],
-         lambda df: df.selectExpr(
-             "stack(2, 'inter', inter_est, exact_inter, j_num,"
-             " 'union', union_est, exact_union, n_union_mins)"
-             " AS (key, a, b, n)")
-         .select(F.lit("kmvint").alias("kind"), "key", "a", "b", "n"),
-         "SELECT 'kmvint' AS kind,"
-         " unnest(['inter', 'union']) AS key,"
-         " unnest([inter_est, union_est]) AS a,"
-         " unnest([exact_inter, exact_union]) AS b,"
-         " unnest([j_num, n_union_mins]) AS n"),
+         [["'kmvint' AS kind", "'inter' AS key", "inter_est AS a",
+           "exact_inter AS b", "j_num AS n"],
+          ["'kmvint' AS kind", "'union' AS key", "union_est AS a",
+           "exact_union AS b", "n_union_mins AS n"]]),
         # r5: the m²-pairs-one-scan audience-overlap matrix from reused
         # per-type sketches, beside the exact intersections
         (ANALYTICS_SUITE["kmv_overlap"],
-         lambda df: df.select(
-             F.lit("overlap").alias("kind"),
-             F.concat_ws("&", "ka", "kb").alias("key"),
-             F.col("inter_est").alias("a"),
-             F.col("exact_inter").alias("b"),
-             F.col("union_est").alias("n")),
-         "SELECT 'overlap' AS kind, ka || '&' || kb AS key,"
-         " inter_est AS a, exact_inter AS b, union_est AS n"),
+         ["'overlap' AS kind", "ka || '&' || kb AS key", "inter_est AS a",
+          "exact_inter AS b", "union_est AS n"]),
         # r6: theta-sketch-style a-not-b — directional set-difference
         # estimates beside the exact anti-join controls; completes the
         # KMV set algebra (union / intersect / difference)
         (ANALYTICS_SUITE["kmv_difference"],
-         lambda df: df.selectExpr(
-             "stack(2, 'anotb', anotb_est, exact_anotb, d_ab_num,"
-             " 'bnota', bnota_est, exact_bnota, d_ba_num)"
-             " AS (key, a, b, n)")
-         .select(F.lit("kmvdiff").alias("kind"), "key", "a", "b", "n"),
-         "SELECT 'kmvdiff' AS kind,"
-         " unnest(['anotb', 'bnota']) AS key,"
-         " unnest([anotb_est, bnota_est]) AS a,"
-         " unnest([exact_anotb, exact_bnota]) AS b,"
-         " unnest([d_ab_num, d_ba_num]) AS n"),
+         [["'kmvdiff' AS kind", "'anotb' AS key", "anotb_est AS a",
+           "exact_anotb AS b", "d_ab_num AS n"],
+          ["'kmvdiff' AS kind", "'bnota' AS key", "bnota_est AS a",
+           "exact_bnota AS b", "d_ba_num AS n"]]),
         # r7: Kaplan-Meier survival of time-to-first-big-purchase
         # (functions/hypothesis.py) — the product-limit curve beside the
         # cohort matrix's day-offset view of the same user timelines
         (ANALYTICS_SUITE["kaplan_meier"],
-         lambda df: df.select(
-             F.lit("km").alias("kind"),
-             F.concat_ws(":", F.col("dur_days").cast("string"),
-                         F.col("n_censored").cast("string")).alias("key"),
-             F.col("n_risk").alias("a"),
-             F.col("d_evt").alias("b"),
-             F.col("s_e6").alias("n")),
-         "SELECT 'km' AS kind, CAST(dur_days AS VARCHAR) || ':' ||"
-         " CAST(n_censored AS VARCHAR) AS key, n_risk AS a,"
-         " d_evt AS b, s_e6 AS n"),
+         ["'km' AS kind",
+          "CAST(dur_days AS STRING) || ':'"
+          " || CAST(n_censored AS STRING) AS key", "n_risk AS a",
+          "d_evt AS b", "s_e6 AS n"]),
         # r8: per-variant Kaplan-Meier curves (kaplan_meier with
         # group_col) — the survival table an experiment readout plots
         # beside the log-rank statistic; global administrative censor
         (ANALYTICS_SUITE["km_variants"],
-         lambda df: df.select(
-             F.lit("km_v").alias("kind"),
-             F.concat_ws(":", F.col("variant").cast("string"),
-                         F.col("dur_days").cast("string"),
-                         F.col("n_censored").cast("string")).alias("key"),
-             F.col("n_risk").alias("a"),
-             F.col("d_evt").alias("b"),
-             F.col("s_e6").alias("n")),
-         "SELECT 'km_v' AS kind, CAST(variant AS VARCHAR) || ':' ||"
-         " CAST(dur_days AS VARCHAR) || ':' ||"
-         " CAST(n_censored AS VARCHAR) AS key, n_risk AS a,"
-         " d_evt AS b, s_e6 AS n"),
+         ["'km_v' AS kind",
+          "CAST(variant AS STRING) || ':' || CAST(dur_days AS STRING)"
+          " || ':' || CAST(n_censored AS STRING) AS key", "n_risk AS a",
+          "d_evt AS b", "s_e6 AS n"]),
         # r7: two-group log-rank test (functions/hypothesis.py, Mantel
         # 1966) — does survival differ between the md5 variants; the
         # E/V terms stack into n, risk sets ride a/b, the dur=-1
         # summary row carries the 1-df chi-square statistic
         (ANALYTICS_SUITE["log_rank"],
-         lambda df: df.selectExpr(
-             "dur_days", "d0", "d1", "n0_risk", "n1_risk",
-             "stack(2, 'lr_e', e0_e6, 'lr_v', v_e6) AS (kind, n)")
-         .select("kind",
-                 F.concat_ws(":", F.col("dur_days").cast("string"),
-                             F.col("d0").cast("string"),
-                             F.col("d1").cast("string")).alias("key"),
-                 F.col("n0_risk").alias("a"),
-                 F.col("n1_risk").alias("b"), "n"),
-         "SELECT unnest(['lr_e', 'lr_v']) AS kind,"
-         " CAST(dur_days AS VARCHAR) || ':' || CAST(d0 AS VARCHAR)"
-         " || ':' || CAST(d1 AS VARCHAR) AS key,"
-         " n0_risk AS a, n1_risk AS b, unnest([e0_e6, v_e6]) AS n"),
+         [["'lr_e' AS kind",
+           "CAST(dur_days AS STRING) || ':' || CAST(d0 AS STRING) || ':'"
+           " || CAST(d1 AS STRING) AS key", "n0_risk AS a", "n1_risk AS b",
+           "e0_e6 AS n"],
+          ["'lr_v' AS kind",
+           "CAST(dur_days AS STRING) || ':' || CAST(d0 AS STRING) || ':'"
+           " || CAST(d1 AS STRING) AS key", "n0_risk AS a", "n1_risk AS b",
+           "v_e6 AS n"]]),
         # r7: portable-hash HyperLogLog beside the exact controls — even
         # the estimate hash-matches (register-level md5 algebra; the one
         # engine-specific sketch the suite previously could not check).
         # kind carries the estimator regime tag (by_type/global/lc).
         (ANALYTICS_SUITE["hll_distinct"],
-         lambda df: df.select(
-             F.concat(F.lit("hll_"), F.col("kind")).alias("kind"),
-             F.concat_ws("|", "key",
-                         F.col("n_zero_regs").cast("string")).alias("key"),
-             F.col("exact_distinct").alias("a"),
-             F.col("hll_e4").alias("b"),
-             F.col("s_scaled").alias("n")),
-         "SELECT 'hll_' || kind AS kind,"
-         " key || '|' || CAST(n_zero_regs AS VARCHAR) AS key,"
-         " exact_distinct AS a, hll_e4 AS b, s_scaled AS n"),
+         ["'hll_' || kind AS kind",
+          "key || '|' || CAST(n_zero_regs AS STRING) AS key",
+          "exact_distinct AS a", "hll_e4 AS b", "s_scaled AS n"]),
     ),
     # -- percentiles + deterministic math + embedding norms (all-double row)
     "numeric_profiles": _merged_shared_pca(
         (ANALYTICS_SUITE["order_value_percentiles"],
-         lambda df: df.select(F.lit("percentiles").alias("kind"),
-                              F.col("o_orderstatus").alias("key"),
-                              F.col("n").cast("string").alias("ints"),
-                              F.col("p25").alias("v1"),
-                              F.col("p50").alias("v2"),
-                              F.col("p75").alias("v3")),
-         "SELECT 'percentiles' AS kind, o_orderstatus AS key,"
-         " CAST(n AS VARCHAR) AS ints, p25 AS v1, p50 AS v2, p75 AS v3"),
+         ["'percentiles' AS kind", "o_orderstatus AS key",
+          "CAST(n AS STRING) AS ints", "p25 AS v1", "p50 AS v2",
+          "p75 AS v3"]),
         (ANALYTICS_SUITE["math_functions"],
-         lambda df: df.select(F.lit("math").alias("kind"),
-                              F.col("c_custkey").cast("string").alias("key"),
-                              F.concat_ws(",", F.col("fl").cast("string"),
-                                          F.col("ce").cast("string"),
-                                          F.col("md").cast("string"))
-                              .alias("ints"),
-                              F.col("ab").alias("v1"),
-                              F.col("sq").alias("v2"),
-                              F.col("sg").cast("double").alias("v3")),
-         "SELECT 'math' AS kind, CAST(c_custkey AS VARCHAR) AS key,"
-         " CAST(fl AS VARCHAR) || ',' || CAST(ce AS VARCHAR) || ',' ||"
-         " CAST(md AS VARCHAR) AS ints, ab AS v1, sq AS v2,"
-         " CAST(sg AS DOUBLE) AS v3"),
+         ["'math' AS kind", "CAST(c_custkey AS STRING) AS key",
+          "CAST(fl AS STRING) || ',' || CAST(ce AS STRING) || ','"
+          " || CAST(md AS STRING) AS ints", "ab AS v1", "sq AS v2",
+          "CAST(sg AS DOUBLE) AS v3"]),
         (ANALYTICS_SUITE["quantize_int8"],
-         lambda df: df.select(F.lit("quant").alias("kind"),
-                              F.col("vec_id").cast("string").alias("key"),
-                              F.col("dims").cast("string").alias("ints"),
-                              F.col("scale").alias("v1"),
-                              F.col("max_abs_err").alias("v2"),
-                              F.col("mse").alias("v3")),
-         "SELECT 'quant' AS kind, CAST(vec_id AS VARCHAR) AS key,"
-         " CAST(dims AS VARCHAR) AS ints, scale AS v1, max_abs_err AS v2,"
-         " mse AS v3"),
+         ["'quant' AS kind", "CAST(vec_id AS STRING) AS key",
+          "CAST(dims AS STRING) AS ints", "scale AS v1",
+          "max_abs_err AS v2", "mse AS v3"]),
         # r7: exact corpus-wide quantiles by distributed global rank
         # selection (util.global_order_scan) — the certified-exact p99
         # neither percentile_approx nor a TakeOrdered head can give
         (ANALYTICS_SUITE["exact_quantiles"],
-         lambda df: df.select(F.lit("exactq").alias("kind"),
-                              F.col("q_ppm").cast("string").alias("key"),
-                              F.concat_ws(",", F.col("rank").cast("string"),
-                                          F.col("n").cast("string"))
-                              .alias("ints"),
-                              F.col("value_cents").cast("double")
-                              .alias("v1"),
-                              F.lit(-1.0).alias("v2"),
-                              F.lit(-1.0).alias("v3")),
-         "SELECT 'exactq' AS kind, CAST(q_ppm AS VARCHAR) AS key,"
-         " CAST(rank AS VARCHAR) || ',' || CAST(n AS VARCHAR) AS ints,"
-         " CAST(value_cents AS DOUBLE) AS v1,"
-         " CAST(-1.0 AS DOUBLE) AS v2, CAST(-1.0 AS DOUBLE) AS v3"),
+         ["'exactq' AS kind", "CAST(q_ppm AS STRING) AS key",
+          "CAST(rank AS STRING) || ',' || CAST(n AS STRING) AS ints",
+          "CAST(value_cents AS DOUBLE) AS v1",
+          "CAST(-1.0 AS DOUBLE) AS v2", "CAST(-1.0 AS DOUBLE) AS v3"]),
         # r5: two-sample KS statistic over the psi_drift bins — the
         # rank-based drift complement (largest CDF gap vs PSI's
         # tail-weighted log-ratios)
         (ANALYTICS_SUITE["ks_drift"],
-         lambda df: df.select(F.lit("ks").alias("kind"),
-                              F.col("bin").cast("string").alias("key"),
-                              F.lit("").alias("ints"),
-                              F.col("cum_a").alias("v1"),
-                              F.col("cum_b").alias("v2"),
-                              F.col("gap").alias("v3")),
-         "SELECT 'ks' AS kind, CAST(bin AS VARCHAR) AS key, '' AS ints,"
-         " cum_a AS v1, cum_b AS v2, gap AS v3"),
+         ["'ks' AS kind", "CAST(bin AS STRING) AS key", "'' AS ints",
+          "cum_a AS v1", "cum_b AS v2", "gap AS v3"]),
         # r5: bottom-k sample quantiles (Cohen-Kaplan bottom-k sketch with
         # payload; deterministic md5-hash sample, mergeable, exact-rank
         # order statistics so the estimate itself oracle-checks)
         (ANALYTICS_SUITE["bottomk_quantiles"],
-         lambda df: df.select(F.lit("bottomk").alias("kind"),
-                              F.col("o_orderstatus").alias("key"),
-                              F.col("n_sample").cast("string")
-                              .alias("ints"),
-                              F.col("q_25").alias("v1"),
-                              F.col("q_50").alias("v2"),
-                              F.col("q_75").alias("v3")),
-         "SELECT 'bottomk' AS kind, o_orderstatus AS key,"
-         " CAST(n_sample AS VARCHAR) AS ints, q_25 AS v1, q_50 AS v2,"
-         " q_75 AS v3"),
+         ["'bottomk' AS kind", "o_orderstatus AS key",
+          "CAST(n_sample AS STRING) AS ints", "q_25 AS v1", "q_50 AS v2",
+          "q_75 AS v3"]),
         # r10: embedding-space drift monitor (functions/similarity.py
         # embedding_drift) — per-label centroid cosine + L2 shift
         # between the id-parity halves, both as exact e9 ints
         (ANALYTICS_SUITE["embedding_drift"],
-         lambda df: df.select(F.lit("edrift").alias("kind"),
-                              F.col("label").cast("string").alias("key"),
-                              F.concat_ws(":", "n_ref", "n_cand")
-                              .alias("ints"),
-                              F.col("centroid_cos_e9").cast("double")
-                              .alias("v1"),
-                              F.col("l2_shift_e9").cast("double")
-                              .alias("v2"),
-                              F.lit(-1.0).alias("v3")),
-         "SELECT 'edrift' AS kind, CAST(label AS VARCHAR) AS key,"
-         " CAST(n_ref AS VARCHAR) || ':' || CAST(n_cand AS VARCHAR)"
-         " AS ints, CAST(centroid_cos_e9 AS DOUBLE) AS v1,"
-         " CAST(l2_shift_e9 AS DOUBLE) AS v2, -1.0 AS v3"),
+         ["'edrift' AS kind", "CAST(label AS STRING) AS key",
+          "CAST(n_ref AS STRING) || ':' || CAST(n_cand AS STRING) AS ints",
+          "CAST(centroid_cos_e9 AS DOUBLE) AS v1",
+          "CAST(l2_shift_e9 AS DOUBLE) AS v2", "-1.0 AS v3"]),
         (ANALYTICS_SUITE["embedding_stats"],
-         lambda df: df.select(F.lit("embedding").alias("kind"),
-                              F.col("vec_id").cast("string").alias("key"),
-                              F.col("dims").cast("string").alias("ints"),
-                              F.col("norm").alias("v1"),
-                              F.col("vmin").alias("v2"),
-                              F.col("vmax").alias("v3")),
-         "SELECT 'embedding' AS kind, CAST(vec_id AS VARCHAR) AS key,"
-         " CAST(dims AS VARCHAR) AS ints, norm AS v1, vmin AS v2,"
-         " vmax AS v3"),
+         ["'embedding' AS kind", "CAST(vec_id AS STRING) AS key",
+          "CAST(dims AS STRING) AS ints", "norm AS v1", "vmin AS v2",
+          "vmax AS v3"]),
         # r9: PCA top-component / anisotropy readout (functions/pca.py):
         # exact-integer covariance + 8 order-pinned power-iteration
         # rounds; v_e6 (and the dim=-1 share_ppm) ride v1, the scaled
         # per-dim variance rides v2 — every eigenvector digit hashes
         (ANALYTICS_SUITE["embedding_pca"],
-         lambda df: df.select(F.lit("pca").alias("kind"),
-                              F.col("dim").cast("string").alias("key"),
-                              F.col("n").cast("string").alias("ints"),
-                              F.col("v_e6").cast("double").alias("v1"),
-                              F.col("cdiag").alias("v2"),
-                              F.lit(-1.0).alias("v3")),
-         "SELECT 'pca' AS kind, CAST(dim AS VARCHAR) AS key,"
-         " CAST(n AS VARCHAR) AS ints, CAST(v_e6 AS DOUBLE) AS v1,"
-         " cdiag AS v2, -1.0 AS v3"),
+         ["'pca' AS kind", "CAST(dim AS STRING) AS key",
+          "CAST(n AS STRING) AS ints", "CAST(v_e6 AS DOUBLE) AS v1",
+          "cdiag AS v2", "-1.0 AS v3"]),
         # r10: all-but-the-top APPLIED (functions/pca.py
         # abtt_ann_overlap) — de-meaned + top-component-subtracted
         # cosine top-10 with the raw-space overlap flag; cos rides v1,
         # in_raw rides v2 — the readout's decision loop, hash-closed
         (ANALYTICS_SUITE["abtt_ann"],
-         lambda df: df.select(F.lit("abtt").alias("kind"),
-                              F.concat_ws(":", "query_id",
-                                          "neighbor_id").alias("key"),
-                              F.col("rank").cast("string").alias("ints"),
-                              F.col("cos").alias("v1"),
-                              F.col("in_raw").cast("double").alias("v2"),
-                              F.lit(-1.0).alias("v3")),
-         "SELECT 'abtt' AS kind, CAST(query_id AS VARCHAR) || ':' ||"
-         " CAST(neighbor_id AS VARCHAR) AS key,"
-         " CAST(rank AS VARCHAR) AS ints, cos AS v1,"
-         " CAST(in_raw AS DOUBLE) AS v2, -1.0 AS v3"),
+         ["'abtt' AS kind",
+          "CAST(query_id AS STRING) || ':'"
+          " || CAST(neighbor_id AS STRING) AS key",
+          "CAST(rank AS STRING) AS ints", "cos AS v1",
+          "CAST(in_raw AS DOUBLE) AS v2", "-1.0 AS v3"]),
         # r4: Morton z-values (functions/layout.py) — multi-dimensional
         # clustering keys for scan pruning, bit-exact across engines
         (ANALYTICS_SUITE["zorder_values"],
-         lambda df: df.select(F.lit("zorder").alias("kind"),
-                              F.col("o_orderkey").cast("string")
-                              .alias("key"),
-                              F.col("zval").cast("string").alias("ints"),
-                              F.lit(-1.0).alias("v1"),
-                              F.lit(-1.0).alias("v2"),
-                              F.lit(-1.0).alias("v3")),
-         "SELECT 'zorder' AS kind, CAST(o_orderkey AS VARCHAR) AS key,"
-         " CAST(zval AS VARCHAR) AS ints, -1.0 AS v1, -1.0 AS v2,"
-         " -1.0 AS v3"),
+         ["'zorder' AS kind", "CAST(o_orderkey AS STRING) AS key",
+          "CAST(zval AS STRING) AS ints", "-1.0 AS v1", "-1.0 AS v2",
+          "-1.0 AS v3"]),
         # r7: half-sample replication CI (random-group/BRR family) —
         # deterministic hash half-samples, so even the CI bounds hash
         (ANALYTICS_SUITE["random_group_ci"],
-         lambda df: df.select(
-             F.lit("rgci").alias("kind"),
-             F.col("rep").cast("string").alias("key"),
-             F.concat_ws("/", F.col("n").cast("string"),
-                         F.col("sum_v").cast("string"),
-                         F.col("mean_e4").cast("string"),
-                         F.col("se_e4").cast("string"),
-                         F.col("ci_lo_e4").cast("string"),
-                         F.col("ci_hi_e4").cast("string")).alias("ints"),
-             F.lit(-1.0).alias("v1"), F.lit(-1.0).alias("v2"),
-             F.lit(-1.0).alias("v3")),
-         "SELECT 'rgci' AS kind, CAST(rep AS VARCHAR) AS key,"
-         " CAST(n AS VARCHAR) || '/' || CAST(sum_v AS VARCHAR) || '/' ||"
-         " CAST(mean_e4 AS VARCHAR) || '/' || CAST(se_e4 AS VARCHAR)"
-         " || '/' || CAST(ci_lo_e4 AS VARCHAR) || '/' ||"
-         " CAST(ci_hi_e4 AS VARCHAR) AS ints,"
-         " -1.0 AS v1, -1.0 AS v2, -1.0 AS v3"),
+         ["'rgci' AS kind", "CAST(rep AS STRING) AS key",
+          "CAST(n AS STRING) || '/' || CAST(sum_v AS STRING) || '/'"
+          " || CAST(mean_e4 AS STRING) || '/' || CAST(se_e4 AS STRING)"
+          " || '/' || CAST(ci_lo_e4 AS STRING) || '/'"
+          " || CAST(ci_hi_e4 AS STRING) AS ints", "-1.0 AS v1",
+          "-1.0 AS v2", "-1.0 AS v3"]),
         # r7: layout-quality pruning eval — files touched by a range
         # predicate under z-order vs natural file assignment; the
         # OPTIMIZE ZORDER argument as a hashed number
         (ANALYTICS_SUITE["pruning_eval"],
-         lambda df: df.select(
-             F.lit("prune").alias("kind"),
-             F.concat_ws(":", "layout", "pred").alias("key"),
-             F.concat_ws("/", F.col("n_files").cast("string"),
-                         F.col("files_hit").cast("string"),
-                         F.col("rows_in_hit").cast("string"))
-             .alias("ints"),
-             F.lit(-1.0).alias("v1"), F.lit(-1.0).alias("v2"),
-             F.lit(-1.0).alias("v3")),
-         "SELECT 'prune' AS kind, layout || ':' || pred AS key,"
-         " CAST(n_files AS VARCHAR) || '/' ||"
-         " CAST(files_hit AS VARCHAR) || '/' ||"
-         " CAST(rows_in_hit AS VARCHAR) AS ints,"
-         " -1.0 AS v1, -1.0 AS v2, -1.0 AS v3"),
+         ["'prune' AS kind", "layout || ':' || pred AS key",
+          "CAST(n_files AS STRING) || '/' || CAST(files_hit AS STRING)"
+          " || '/' || CAST(rows_in_hit AS STRING) AS ints", "-1.0 AS v1",
+          "-1.0 AS v2", "-1.0 AS v3"]),
         # r6: Hilbert clustering keys — the contiguous space-filling
         # curve beside the Morton interleave (functions/layout.py)
         (ANALYTICS_SUITE["hilbert_values"],
-         lambda df: df.select(F.lit("hilbert").alias("kind"),
-                              F.col("o_orderkey").cast("string")
-                              .alias("key"),
-                              F.col("hval").cast("string").alias("ints"),
-                              F.lit(-1.0).alias("v1"),
-                              F.lit(-1.0).alias("v2"),
-                              F.lit(-1.0).alias("v3")),
-         "SELECT 'hilbert' AS kind, CAST(o_orderkey AS VARCHAR) AS key,"
-         " CAST(hval AS VARCHAR) AS ints, -1.0 AS v1, -1.0 AS v2,"
-         " -1.0 AS v3"),
+         ["'hilbert' AS kind", "CAST(o_orderkey AS STRING) AS key",
+          "CAST(hval AS STRING) AS ints", "-1.0 AS v1", "-1.0 AS v2",
+          "-1.0 AS v3"]),
         # r6: Otsu auto-threshold over the doc-length histogram — the
         # exact-integer criterion rides the string slot (> 2^52)
         (ANALYTICS_SUITE["otsu_threshold"],
-         lambda df: df.select(
-             F.lit("otsu").alias("kind"),
-             F.col("t").cast("string").alias("key"),
-             F.concat_ws(":", F.col("w0").cast("string"),
-                         F.col("w1").cast("string"),
-                         F.col("crit").cast("string")).alias("ints"),
-             F.col("chosen").cast("double").alias("v1"),
-             F.col("n").cast("double").alias("v2"),
-             F.lit(-1.0).alias("v3")),
-         "SELECT 'otsu' AS kind, CAST(t AS VARCHAR) AS key,"
-         " CAST(w0 AS VARCHAR) || ':' || CAST(w1 AS VARCHAR) || ':' ||"
-         " CAST(crit AS VARCHAR) AS ints, CAST(chosen AS DOUBLE) AS v1,"
-         " CAST(n AS DOUBLE) AS v2, CAST(-1.0 AS DOUBLE) AS v3"),
+         ["'otsu' AS kind", "CAST(t AS STRING) AS key",
+          "CAST(w0 AS STRING) || ':' || CAST(w1 AS STRING) || ':'"
+          " || CAST(crit AS STRING) AS ints",
+          "CAST(chosen AS DOUBLE) AS v1", "CAST(n AS DOUBLE) AS v2",
+          "CAST(-1.0 AS DOUBLE) AS v3"]),
         # r4b: Johnson-Lindenstrauss 64->16 projection with per-vector
         # norm distortion (functions/projection.py) — the md5-derived
         # sign matrix is shared source-of-truth between both engines
         (PIPELINE_SUITE["jl_projection"],
-         lambda df: df.select(F.lit("jl").alias("kind"),
-                              F.col("vec_id").cast("string").alias("key"),
-                              F.col("label").cast("string").alias("ints"),
-                              F.col("distortion").alias("v1"),
-                              F.col("proj_0").alias("v2"),
-                              F.col("proj_1").alias("v3")),
-         "SELECT 'jl' AS kind, CAST(vec_id AS VARCHAR) AS key,"
-         " CAST(label AS VARCHAR) AS ints, distortion AS v1,"
-         " proj_0 AS v2, proj_1 AS v3"),
+         ["'jl' AS kind", "CAST(vec_id AS STRING) AS key",
+          "CAST(label AS STRING) AS ints", "distortion AS v1",
+          "proj_0 AS v2", "proj_1 AS v3"]),
         # r4b: PSI drift monitor — per-bin contributions + the 'bin -1'
         # total row carrying the index itself
         (ANALYTICS_SUITE["psi_drift"],
-         lambda df: df.select(
-             F.lit("psi").alias("kind"),
-             F.col("bin").cast("string").alias("key"),
-             F.concat_ws(":", F.col("n_a").cast("string"),
-                         F.col("n_b").cast("string")).alias("ints"),
-             F.col("psi").alias("v1"),
-             F.lit(-1.0).alias("v2"), F.lit(-1.0).alias("v3")),
-         "SELECT 'psi' AS kind, CAST(bin AS VARCHAR) AS key,"
-         " CAST(n_a AS VARCHAR) || ':' || CAST(n_b AS VARCHAR) AS ints,"
-         " psi AS v1, CAST(-1.0 AS DOUBLE) AS v2,"
-         " CAST(-1.0 AS DOUBLE) AS v3"),
+         ["'psi' AS kind", "CAST(bin AS STRING) AS key",
+          "CAST(n_a AS STRING) || ':' || CAST(n_b AS STRING) AS ints",
+          "psi AS v1", "CAST(-1.0 AS DOUBLE) AS v2",
+          "CAST(-1.0 AS DOUBLE) AS v3"]),
         # r6: classifier reliability bins + ECE (Guo et al. ICML 2017)
         # — stated confidence vs observed accuracy per decile; the
         # bin=-1 row carries ECE (v1) and overall accuracy (v2)
         (PIPELINE_SUITE["nb_calibration"],
-         lambda df: df.select(
-             F.lit("calib").alias("kind"),
-             F.col("bin").cast("string").alias("key"),
-             F.concat_ws(":", F.col("n").cast("string"),
-                         F.col("n_correct").cast("string")).alias("ints"),
-             F.col("conf_ppm").cast("double").alias("v1"),
-             F.col("acc_ppm").cast("double").alias("v2"),
-             F.lit(-1.0).alias("v3")),
-         "SELECT 'calib' AS kind, CAST(bin AS VARCHAR) AS key,"
-         " CAST(n AS VARCHAR) || ':' || CAST(n_correct AS VARCHAR)"
-         " AS ints, CAST(conf_ppm AS DOUBLE) AS v1,"
-         " CAST(acc_ppm AS DOUBLE) AS v2, CAST(-1.0 AS DOUBLE) AS v3"),
+         ["'calib' AS kind", "CAST(bin AS STRING) AS key",
+          "CAST(n AS STRING) || ':' || CAST(n_correct AS STRING) AS ints",
+          "CAST(conf_ppm AS DOUBLE) AS v1",
+          "CAST(acc_ppm AS DOUBLE) AS v2", "CAST(-1.0 AS DOUBLE) AS v3"]),
         # r6: selective-classification curve (Chow 1970 reject option) —
         # integer margins, no transcendental anywhere
         (PIPELINE_SUITE["nb_abstain"],
-         lambda df: df.select(
-             F.lit("abstain").alias("kind"),
-             F.col("thr_nano").cast("string").alias("key"),
-             F.concat_ws(":", F.col("n_covered").cast("string"),
-                         F.col("n_correct").cast("string")).alias("ints"),
-             F.col("coverage_ppm").cast("double").alias("v1"),
-             F.col("acc_ppm").cast("double").alias("v2"),
-             F.lit(-1.0).alias("v3")),
-         "SELECT 'abstain' AS kind, CAST(thr_nano AS VARCHAR) AS key,"
-         " CAST(n_covered AS VARCHAR) || ':' ||"
-         " CAST(n_correct AS VARCHAR) AS ints,"
-         " CAST(coverage_ppm AS DOUBLE) AS v1,"
-         " CAST(acc_ppm AS DOUBLE) AS v2, CAST(-1.0 AS DOUBLE) AS v3"),
+         ["'abstain' AS kind", "CAST(thr_nano AS STRING) AS key",
+          "CAST(n_covered AS STRING) || ':'"
+          " || CAST(n_correct AS STRING) AS ints",
+          "CAST(coverage_ppm AS DOUBLE) AS v1",
+          "CAST(acc_ppm AS DOUBLE) AS v2", "CAST(-1.0 AS DOUBLE) AS v3"]),
     ),
     # -- pivot (wide) re-checked in long form + unpivot/stack
     "pivot_unpivot": merged(
         (ANALYTICS_SUITE["pivot_event_counts"],
-         lambda df: df.selectExpr(
-             "user_id",
-             "stack(5, 'click', click, 'error', error, 'purchase',"
-             " purchase, 'signup', signup, 'view', view)"
-             " AS (metric, nval)")
-         .select(F.lit("pivot").alias("kind"),
-                 F.col("user_id").alias("key"), "metric",
-                 F.col("nval").cast("double").alias("value")),
-         "SELECT 'pivot' AS kind, user_id AS key,"
-         " unnest(['click', 'error', 'purchase', 'signup', 'view'])"
-         " AS metric,"
-         " unnest([CAST(click AS DOUBLE), CAST(error AS DOUBLE),"
-         " CAST(purchase AS DOUBLE), CAST(signup AS DOUBLE),"
-         " CAST(view AS DOUBLE)]) AS value"),
+         [["'pivot' AS kind", "user_id AS key", "'click' AS metric",
+           "CAST(click AS DOUBLE) AS value"],
+          ["'pivot' AS kind", "user_id AS key", "'error' AS metric",
+           "CAST(error AS DOUBLE) AS value"],
+          ["'pivot' AS kind", "user_id AS key", "'purchase' AS metric",
+           "CAST(purchase AS DOUBLE) AS value"],
+          ["'pivot' AS kind", "user_id AS key", "'signup' AS metric",
+           "CAST(signup AS DOUBLE) AS value"],
+          ["'pivot' AS kind", "user_id AS key", "'view' AS metric",
+           "CAST(view AS DOUBLE) AS value"]]),
         (ANALYTICS_SUITE["unpivot_part_metrics"],
-         lambda df: df.select(F.lit("unpivot").alias("kind"),
-                              F.col("p_partkey").alias("key"), "metric",
-                              "value"),
-         "SELECT 'unpivot' AS kind, p_partkey AS key, metric, value"),
+         ["'unpivot' AS kind", "p_partkey AS key", "metric", "value"]),
     ),
     "null_semantics": ANALYTICS_SUITE["null_semantics"],
     "string_ops": merged(
         (ANALYTICS_SUITE["regex_extract_ids"],
-         lambda df: df.select(F.lit("regex").alias("kind"), "c_custkey",
-                              F.lit("").alias("sval"),
-                              F.col("name_id").alias("n")),
-         "SELECT 'regex' AS kind, c_custkey, '' AS sval, name_id AS n"),
+         ["'regex' AS kind", "c_custkey", "'' AS sval", "name_id AS n"]),
         # r4b: date-function battery (ISO-normalized weekday; see the
         # constituent docstring for the cross-engine off-by-one trap)
         (ANALYTICS_SUITE["date_functions"],
-         lambda df: df.select(
-             F.lit("dates").alias("kind"),
-             F.col("o_orderkey").alias("c_custkey"),
-             F.concat_ws("|", "day", "month_end", "plus_2m", "month_start",
-                         F.col("qtr").cast("string"),
-                         F.col("iso_week").cast("string"),
-                         F.col("iso_dow").cast("string")).alias("sval"),
-             F.col("days_to").cast("bigint").alias("n")),
-         "SELECT 'dates' AS kind, o_orderkey AS c_custkey,"
-         " day || '|' || month_end || '|' || plus_2m || '|' ||"
-         " month_start || '|' || CAST(qtr AS VARCHAR) || '|' ||"
-         " CAST(iso_week AS VARCHAR) || '|' || CAST(iso_dow AS VARCHAR)"
-         " AS sval, CAST(days_to AS BIGINT) AS n"),
+         ["'dates' AS kind", "o_orderkey AS c_custkey",
+          "day || '|' || month_end || '|' || plus_2m || '|' || month_start"
+          " || '|' || CAST(qtr AS STRING) || '|'"
+          " || CAST(iso_week AS STRING) || '|'"
+          " || CAST(iso_dow AS STRING) AS sval",
+          "CAST(days_to AS BIGINT) AS n"]),
         (ANALYTICS_SUITE["string_functions"],
-         lambda df: df.select(F.lit("functions").alias("kind"), "c_custkey",
-                              F.concat_ws("|", "seg_up", "key_pad",
-                                          "name_mid", "name_repl",
-                                          F.col("lev").cast("string"),
-                                          F.col("name_len").cast("string"))
-                              .alias("sval"),
-                              F.lit(-1).cast("bigint").alias("n")),
-         "SELECT 'functions' AS kind, c_custkey, seg_up || '|' || key_pad ||"
-         " '|' || name_mid || '|' || name_repl || '|' ||"
-         " CAST(lev AS VARCHAR) || '|' || CAST(name_len AS VARCHAR) AS sval,"
-         " CAST(-1 AS BIGINT) AS n"),
+         ["'functions' AS kind", "c_custkey",
+          "seg_up || '|' || key_pad || '|' || name_mid || '|' || name_repl"
+          " || '|' || CAST(lev AS STRING) || '|'"
+          " || CAST(name_len AS STRING) AS sval", "CAST(-1 AS BIGINT) AS n"]),
         # r5: fuzzy entity matching — q-gram count prefilter + exact
         # levenshtein verify (Gravano et al. VLDB 2001)
         (ANALYTICS_SUITE["fuzzy_match"],
-         lambda df: df.select(
-             F.lit("fuzzy").alias("kind"),
-             F.col("t_id").alias("c_custkey"),
-             F.concat_ws(":", F.col("c_custkey").cast("string"),
-                         F.col("lev").cast("string"),
-                         F.col("is_best").cast("string")).alias("sval"),
-             F.col("shared_grams").alias("n")),
-         "SELECT 'fuzzy' AS kind, t_id AS c_custkey,"
-         " CAST(c_custkey AS VARCHAR) || ':' || CAST(lev AS VARCHAR)"
-         " || ':' || CAST(is_best AS VARCHAR) AS sval,"
-         " shared_grams AS n"),
+         ["'fuzzy' AS kind", "t_id AS c_custkey",
+          "CAST(c_custkey AS STRING) || ':' || CAST(lev AS STRING) || ':'"
+          " || CAST(is_best AS STRING) AS sval", "shared_grams AS n"]),
         # r5: matcher evaluation vs the planted truth — tp/fp/fn +
         # precision/recall ppm packed into sval, one row
         (ANALYTICS_SUITE["match_quality"],
-         lambda df: df.select(
-             F.lit("match_pr").alias("kind"),
-             F.lit(-1).cast("bigint").alias("c_custkey"),
-             F.concat_ws(":", F.col("tp").cast("string"),
-                         F.col("fp").cast("string"),
-                         F.col("fn").cast("string"),
-                         F.col("precision_e6").cast("string"),
-                         F.col("recall_e6").cast("string")).alias("sval"),
-             F.lit(-1).cast("bigint").alias("n")),
-         "SELECT 'match_pr' AS kind, CAST(-1 AS BIGINT) AS c_custkey,"
-         " CAST(tp AS VARCHAR) || ':' || CAST(fp AS VARCHAR) || ':' ||"
-         " CAST(fn AS VARCHAR) || ':' || CAST(precision_e6 AS VARCHAR)"
-         " || ':' || CAST(recall_e6 AS VARCHAR) AS sval,"
-         " CAST(-1 AS BIGINT) AS n"),
+         ["'match_pr' AS kind", "CAST(-1 AS BIGINT) AS c_custkey",
+          "CAST(tp AS STRING) || ':' || CAST(fp AS STRING) || ':'"
+          " || CAST(fn AS STRING) || ':' || CAST(precision_e6 AS STRING)"
+          " || ':' || CAST(recall_e6 AS STRING) AS sval",
+          "CAST(-1 AS BIGINT) AS n"]),
         # r6: golden-record survivorship over the match clusters — the
         # MDM step after matching: one elected master per cluster
         (ANALYTICS_SUITE["golden_records"],
-         lambda df: df.select(
-             F.lit("golden").alias("kind"),
-             F.col("record_id").alias("c_custkey"),
-             F.concat_ws(":", F.col("cluster_id").cast("string"),
-                         F.col("survivor_id").cast("string"),
-                         F.col("keep").cast("string")).alias("sval"),
-             F.col("n_members").alias("n")),
-         "SELECT 'golden' AS kind, record_id AS c_custkey,"
-         " CAST(cluster_id AS VARCHAR) || ':' ||"
-         " CAST(survivor_id AS VARCHAR) || ':' ||"
-         " CAST(keep AS VARCHAR) AS sval, n_members AS n"),
+         ["'golden' AS kind", "record_id AS c_custkey",
+          "CAST(cluster_id AS STRING) || ':'"
+          " || CAST(survivor_id AS STRING) || ':'"
+          " || CAST(keep AS STRING) AS sval", "n_members AS n"]),
     ),
     # -- Structured Streaming surface (S9/T3/T6): each branch runs a real
     #    stream to completion; results checked against batch-equivalent SQL
     "stream_latest_state": (q_stream_latest_state, SQL_LATEST_STATE),
     "stream_dedup": merged(
         ((q_stream_first_seen, SQL_STREAM_FIRST_SEEN),
-         lambda df: df.select(F.lit("first_seen").alias("kind"),
-                              F.col("fingerprint").alias("key"),
-                              F.col("doc_id").cast("string").alias("val")),
-         "SELECT 'first_seen' AS kind, fingerprint AS key,"
-         " CAST(doc_id AS VARCHAR) AS val"),
+         ["'first_seen' AS kind", "fingerprint AS key",
+          "CAST(doc_id AS STRING) AS val"]),
         ((q_stream_dedup_watermark, SQL_STREAM_DEDUP_WATERMARK),
-         lambda df: df.select(F.lit("watermark").alias("kind"),
-                              F.col("user_id").cast("string").alias("key"),
-                              F.col("event_type").alias("val")),
-         "SELECT 'watermark' AS kind, CAST(user_id AS VARCHAR) AS key,"
-         " event_type AS val"),
+         ["'watermark' AS kind", "CAST(user_id AS STRING) AS key",
+          "event_type AS val"]),
     ),
     "stream_windowed_counts": merged(
         ((q_stream_windowed_counts, SQL_STREAM_WINDOWED_COUNTS),
-         lambda df: df.select(F.lit("tumbling").alias("kind"),
-                              F.col("day").alias("win"), "event_type", "n"),
-         "SELECT 'tumbling' AS kind, day AS win, event_type, n"),
+         ["'tumbling' AS kind", "day AS win", "event_type", "n"]),
         ((q_stream_sliding_counts, SQL_STREAM_SLIDING_COUNTS),
-         lambda df: df.select(F.lit("sliding").alias("kind"),
-                              F.col("win_start").alias("win"), "event_type",
-                              "n"),
-         "SELECT 'sliding' AS kind, win_start AS win, event_type, n"),
+         ["'sliding' AS kind", "win_start AS win", "event_type", "n"]),
         # r4: stream-static broadcast enrichment + complete-mode global agg
         # (the win column carries the joined dimension attribute)
         ((q_stream_enriched_counts, SQL_STREAM_ENRICHED_COUNTS),
-         lambda df: df.select(F.lit("enriched").alias("kind"),
-                              F.col("c_mktsegment").alias("win"),
-                              "event_type", "n"),
-         "SELECT 'enriched' AS kind, c_mktsegment AS win, event_type, n"),
+         ["'enriched' AS kind", "c_mktsegment AS win", "event_type", "n"]),
     ),
     "stream_sessions": merged(
         ((q_stream_session_counts, SQL_STREAM_SESSION_COUNTS),
-         lambda df: df.select(F.lit("session").alias("kind"), "user_id",
-                              F.col("session_start").alias("a"),
-                              F.col("session_end").alias("b"),
-                              F.col("n_events").alias("n")),
-         "SELECT 'session' AS kind, user_id, session_start AS a,"
-         " session_end AS b, n_events AS n"),
+         ["'session' AS kind", "user_id", "session_start AS a",
+          "session_end AS b", "n_events AS n"]),
         ((q_stream_click_to_purchase, SQL_STREAM_CLICK_TO_PURCHASE),
-         lambda df: df.select(F.lit("attribution").alias("kind"), "user_id",
-                              F.col("purchase_id").cast("string").alias("a"),
-                              F.col("click_id").cast("string").alias("b"),
-                              F.lit(-1).cast("bigint").alias("n")),
-         "SELECT 'attribution' AS kind, user_id,"
-         " CAST(purchase_id AS VARCHAR) AS a, CAST(click_id AS VARCHAR)"
-         " AS b, CAST(-1 AS BIGINT) AS n"),
+         ["'attribution' AS kind", "user_id",
+          "CAST(purchase_id AS STRING) AS a",
+          "CAST(click_id AS STRING) AS b", "CAST(-1 AS BIGINT) AS n"]),
     ),
     "sql_passthrough_q1": (q_sql_passthrough_q1, SQL_TPCH_Q1),
 }

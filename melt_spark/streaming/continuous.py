@@ -106,7 +106,7 @@ def stream_latest_state_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     query, name = run_to_memory(out, mode="complete")
     try:
         # materialize the final snapshot as a plain batch DataFrame
-        return spark.table(name).cache().localCheckpoint(eager=True)
+        return spark.table(name).localCheckpoint(eager=True)
     finally:
         query.stop()
 

@@ -50,7 +50,6 @@ SLOW_NODEIDS = {
     "tests/test_vocab_properties.py::test_bm25_structural_invariants_any_vocabulary",
     "tests/test_vocab_properties.py::test_disjoint_vocabulary_docs_never_pair",
     "tests/test_vocab_properties.py::test_gapfill_interp_bounded_by_neighbors",
-    "tests/test_bpe.py::test_checkpointed_deep_training_matches_unchunked",
     "tests/test_lm.py::test_ccnet_store_persist_resume",
     "tests/test_lm.py::test_ccnet_hatch_all_one_source",
     "tests/test_lm.py::test_ccnet_assign_frozen_boundaries",

@@ -93,20 +93,6 @@ def test_degenerate_corpus_no_pairs(spark):
     assert got == {"a": "a", "b": "b", "c": "c"}
 
 
-def test_checkpointed_deep_training_matches_unchunked(spark, sf_dir):
-    """6 rounds with localCheckpoint every 2 == 6 rounds unrolled — the
-    lineage cap must not change a single merge or segmentation."""
-    from melt_spark.sources.parquet import read_table
-
-    docs = read_table(spark, sf_dir, "documents")
-    m1, w1 = bpe_train(docs, rounds=6)
-    m2, w2 = bpe_train(docs, rounds=6, checkpoint_every=2)
-    assert [tuple(r) for r in m1.orderBy("round").collect()] \
-        == [tuple(r) for r in m2.orderBy("round").collect()]
-    assert {r.word: r.seg for r in w1.collect()} \
-        == {r.word: r.seg for r in w2.collect()}
-
-
 def test_bpe_encode_hand_computed(spark):
     """Encode applies the trained segmentation per word in order; the
     stream is the '|'-joined full token sequence."""

@@ -3,7 +3,8 @@
 Runs every __spark_entry__.queries() entry in Spark AND its oracle_sql() in
 DuckDB over the same parquet dir, then compares row count, sorted column
 names, and an order-insensitive multiset of normalized row values. Exit 0 iff
-everything matches.
+everything matches. Each PASS line ends with a digest of the sorted
+normalized Spark rows, so two drives compare by diffing their PASS lines.
 
 Round-2 hardening: the round-1 driver failed tpch_q1/event_sessions while the
 old repr-based compare here passed. Reverse-engineered cause (validated on the
@@ -23,6 +24,7 @@ from __future__ import annotations
 
 import datetime
 import decimal
+import hashlib
 import math
 import os
 import sys
@@ -78,6 +80,16 @@ def spark_rows(df):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     data = [tuple(norm(row[i]) for i in order) for row in df.collect()]
     return sorted(c for c in cols), data
+
+
+def digest(rows) -> str:
+    """First 12 hex chars of a sha256 over the sorted normalized rows, so
+    two drives prove identical outputs by diffing their PASS lines."""
+    h = hashlib.sha256()
+    for r in sorted(rows):
+        h.update(repr(r).encode())
+        h.update(b"\n")
+    return h.hexdigest()[:12]
 
 
 def duck_rows(con, sql):
@@ -215,7 +227,7 @@ def main():
             for r in only_d:
                 print(f"      duck-only:  {r}")
             continue
-        print(f"PASS  {name} ({len(s_data)} rows)")
+        print(f"PASS  {name} ({len(s_data)} rows) {digest(s_data)}")
 
     n_warn = gate.settle()
     print(f"\n{checked - len(failures)}/{checked} oracle-checked pass;"

@@ -87,12 +87,6 @@ def with_canonical(df: DataFrame, out: str = "__canon",
     return df.withColumn(out, canonical_json(names))
 
 
-def canonical_hash(names: Iterable[str]) -> Column:
-    """64-bit hash of the canonical form — cheaper join/compare key at scale
-    (hash the 8-byte value, not the JSON text, through the shuffle)."""
-    return F.xxhash64(canonical_json(names))
-
-
 def canonical_json_nested(col: Column | str) -> Column:
     """Canonical JSON for NESTED values (maps/structs/arrays created by user
     transforms): keys sorted recursively at every level, the deep analogue

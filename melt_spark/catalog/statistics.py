@@ -43,13 +43,3 @@ def column_stats(df: DataFrame, table_name: str,
                 F.col("__n").alias("n_rows"),
                 (F.col("__n") - F.col("n_notnull")).alias("n_nulls"),
                 "n_distinct"))
-
-
-def tables_stats(read, tables: list[str]) -> DataFrame:
-    """Union of column_stats over `tables`; `read` maps a table name to
-    its DataFrame (read_table partial in practice)."""
-    out = None
-    for t in tables:
-        s = column_stats(read(t), t)
-        out = s if out is None else out.unionByName(s)
-    return out

@@ -248,21 +248,6 @@ def nb_calibration(docs: DataFrame, label_col: str = "source",
     return bins.unionByName(summary)
 
 
-def nb_confusion(docs: DataFrame, label_col: str = "source",
-                 text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
-    """Self-classification confusion matrix (actual, predicted, n) —
-    train on the corpus, score the corpus, the same in-engine loop as
-    lm.py's self-perplexity. |labels|² rows at most."""
-    model, labels = nb_model(docs, label_col, text_col, id_col)
-    pred = nb_classify(docs, model, labels, text_col, id_col)
-    actual = docs.select(F.col(id_col).alias("id"),
-                         F.col(label_col).alias("actual"))
-    return (actual.join(pred, "id")
-            .groupBy("actual", "predicted")
-            .agg(F.count(F.lit(1)).alias("n")))
-
-
 ABSTAIN_THRESHOLDS_NANO = (0, 100_000_000, 250_000_000, 500_000_000,
                            1_000_000_000, 2_000_000_000)
 

@@ -88,14 +88,6 @@ def change_stats(messages: DataFrame) -> dict:
     return {"version": row["version"], "sent_count": row["sent_count"]}
 
 
-def full_sync_then_tail_version(current_version_df: DataFrame) -> int:
-    """T7 handoff (sql_server.clj:155-162): capture the change-tracking
-    version BEFORE the full backfill, then tail from it — overlap gives
-    at-least-once with no gap. Input: a 1-row DataFrame with column
-    `current_version` (e.g. a pushed-down scalar query)."""
-    return current_version_df.collect()[0][0]
-
-
 def net_effect(changes: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Net-effect batching — collapse each key's change sequence within a
     replay window to the ONE operation a downstream applier needs (the

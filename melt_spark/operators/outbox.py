@@ -12,8 +12,6 @@ monotone batch_id column so replay order is explicit. NULL values
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,7 +57,3 @@ def latest_outbox_state(spark: SparkSession, path: str) -> DataFrame:
     return latest_state(outbox_as_changelog(spark, path),
                         order_col=("batch_id", "seq")) \
         .select("topic", "key", "value")
-
-
-def outbox_exists(path: str) -> bool:
-    return os.path.exists(path)

@@ -1056,18 +1056,17 @@ def q_stream_broker_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference §3.2 (full sync then continuous tail) as a STREAM end to
     end: a staged 3-batch changelog (full load → updates → tombstones) is
     consumed with readStream and produced into the mock broker through its
-    STREAMING sink (MeltBrokerStreamWriter — per-micro-batch commit with the
-    batch-id ledger, so a replayed batch appends nothing twice), then the
-    topic is read back bounded and compacted. The executed streaming analogue
-    of q_broker_roundtrip's batch produce path (T3 producer side +
-    S14/S15/T1)."""
+    streaming sink (foreachBatch → write_messages, whose ledger keyed by
+    query id and batch id makes a replayed batch append nothing twice),
+    then the topic is read back bounded and compacted. The executed
+    streaming analogue of q_broker_roundtrip's batch produce path (T3
+    producer side + S14/S15/T1)."""
     import shutil
     import tempfile
     import time
 
     from ..sources import mock_broker as mb
 
-    mb.register(spark)
     work = tempfile.mkdtemp(prefix="melt_stream_sync_")
     stage = os.path.join(work, "stage")
     broker = os.path.join(work, "broker")
@@ -1106,8 +1105,8 @@ def q_stream_broker_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = (spark.readStream
               .schema("topic string, key string, value string")
               .option("maxFilesPerTrigger", "1").json(stage))
-    q = (stream.writeStream.format("melt_broker")
-         .option("path", broker).option("partitions", 3)
+    q = (stream.writeStream
+         .foreachBatch(lambda df, _id: mb.write_messages(df, broker, 3))
          .option("checkpointLocation", os.path.join(work, "ckpt"))
          .trigger(availableNow=True).start())
     q.awaitTermination(300)

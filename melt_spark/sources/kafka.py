@@ -19,7 +19,9 @@ these builders are import-safe, and offset-bookkeeping logic is pure and
 unit-tested. The SAME four surfaces (bounded read, incremental refresh,
 producer sink, streaming tail/sink) run for real against the file-backed
 mock broker in sources/mock_broker.py, which mirrors every signature here —
-swap the module, keep the call sites.
+swap the module, keep the call sites. Its streaming sink is
+foreachBatch → write_messages, one call per topic per micro-batch, made
+idempotent by a ledger keyed by query id and batch id.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
-"""File-backed mock message broker: native Parquet batch I/O, Python
-DataSource streaming.
+"""File-backed mock message broker: native Parquet I/O, plus a Python
+DataSource for the streaming tail.
 
 The sandbox has no Kafka broker or spark-sql-kafka jar, so the reference's
 core I/O boundary (consumer melt.clj:239-299, producer melt.clj:431-443)
@@ -11,7 +11,7 @@ surfaces Spark's Kafka connector has —
   * batch read with atomically-resolved starting/ending offsets (S8/T1),
   * incremental refresh from saved offset watermarks (T5),
   * a producer sink with key-hash partitioning and tombstones (S14/S15),
-  * a streaming tail (readStream) and a streaming sink (writeStream, T3).
+  * a streaming tail (readStream) and a streaming sink (foreachBatch, T3).
 
 Layout (mirrors a real broker's log, scaled down):
   <root>/<topic>/.meta.json              {"partitions": N}
@@ -19,7 +19,7 @@ Layout (mirrors a real broker's log, scaled down):
                                          columns k string, v string, ts bigint
   <root>/<topic>/p<k>/manifest.json      {"segments": [{file, base, count}],
                                           "end": next_offset,
-                                          "batches": [stream batch ids]}
+                                          "batches": ["<query id>:<batch id>"]}
 
 A segment's records hold offsets base .. base+count-1 in file row order.
 Segments are invisible until committed: the driver-side commit assigns base
@@ -38,10 +38,22 @@ SQL, writes the rows partitioned by (topic, partition) into a staging
 directory and publishes the files as segments from the driver. There is no
 batch ``format("melt_broker")``.
 
-Streaming goes through a Spark 4 Python DataSource, because a custom
-streaming source needs one: ``readStream``/``writeStream.format(
-"melt_broker")`` after ``register(spark)``. It reads and writes the same
-Parquet segments through pyarrow.
+The streaming sink is ``write_messages`` itself, called from
+``foreachBatch``: ``.foreachBatch(lambda df, _id: write_messages(df, root))``.
+Inside a micro-batch it reads the local properties Spark sets on the
+stream's thread, the query id (stable across restarts from one checkpoint)
+and the batch id, and records ``"<query id>:<batch id>"`` in the ledger on
+each written topic's partition-0 manifest. A pair already in a topic's
+ledger is a replay: its staged files are deleted, not published, so a
+restarted query appends nothing twice while a second query into the same
+topic still lands. The rule is Delta's ``txnAppId``/``txnVersion`` one:
+make one ``write_messages`` call per topic per micro-batch, since a second
+call with the same pair is taken for a replay. Outside a stream nothing is
+recorded.
+
+The streaming tail goes through a Spark 4 Python DataSource, because a
+custom streaming source needs one: ``readStream.format("melt_broker")``
+after ``register(spark)``. It reads the Parquet segments through pyarrow.
 
 On a real cluster the root must be shared storage; this is a test double
 for CI and local development, not a Kafka replacement. The production path
@@ -51,13 +63,13 @@ two are swappable.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
 import shutil
 import uuid
 import zlib
-from dataclasses import dataclass
 from typing import Iterator, Sequence
 from urllib.parse import unquote
 
@@ -65,9 +77,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import (DataSource, DataSourceStreamWriter,
-                                    SimpleDataSourceStreamReader,
-                                    WriterCommitMessage)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 ENVELOPE_SCHEMA = ("topic string, partition int, offset bigint,"
                    " timestamp bigint, key string, value string")
@@ -196,14 +206,14 @@ def _sql_str(s: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# streaming surfaces (Python DataSource)
+# streaming tail (Python DataSource)
 
 class MeltBrokerDataSource(DataSource):
-    """readStream/writeStream.format("melt_broker") — options:
-    path (broker root), subscribe (comma-separated topics; stream reader),
-    startingOffsets ('earliest'|'latest'; stream reader), partitions
-    (stream writer topic auto-create, default 4). Batch reads and writes
-    go through read_topics/write_messages, not this source."""
+    """readStream.format("melt_broker") — options: path (broker root),
+    subscribe (comma-separated topics), startingOffsets
+    ('earliest'|'latest'). It serves the stream read only: batch reads go
+    through read_topics, and batch and stream writes through write_messages
+    (in a stream, from foreachBatch)."""
 
     @classmethod
     def name(cls) -> str:
@@ -214,9 +224,6 @@ class MeltBrokerDataSource(DataSource):
 
     def simpleStreamReader(self, schema) -> "MeltBrokerStreamReader":
         return MeltBrokerStreamReader(self.options)
-
-    def streamWriter(self, schema, overwrite: bool) -> "MeltBrokerStreamWriter":
-        return MeltBrokerStreamWriter(self.options)
 
 
 class MeltBrokerStreamReader(SimpleDataSourceStreamReader):
@@ -264,118 +271,9 @@ class MeltBrokerStreamReader(SimpleDataSourceStreamReader):
                                           s, int(e))
 
 
-@dataclass
-class _SegmentMsg(WriterCommitMessage):
-    segments: list  # [(topic, part, filename, count), ...]
-
-
-def _write_segments(root: str, default_partitions: int,
-                    iterator: Iterator) -> _SegmentMsg:
-    """Executor side: bucket rows by (topic, key-hash partition), write one
-    segment file per bucket. Files are invisible until the driver commits
-    them into the manifest."""
-    buckets: dict[tuple[str, int], dict[str, list]] = {}
-    nparts: dict[str, int] = {}
-    for row in iterator:
-        topic = row["topic"]
-        if topic not in nparts:
-            try:
-                nparts[topic] = topic_partitions(root, topic)
-            except FileNotFoundError:
-                # auto-create (driver may race; create_topic is idempotent
-                # and meta publish is atomic)
-                create_topic(root, topic, default_partitions)
-                nparts[topic] = topic_partitions(root, topic)
-        part = key_partition(row["key"], nparts[topic])
-        ts = row["timestamp"] if "timestamp" in row.__fields__ else None
-        cols = buckets.setdefault((topic, part),
-                                  {"k": [], "v": [], "ts": []})
-        cols["k"].append(row["key"])
-        cols["v"].append(row["value"])
-        cols["ts"].append(ts)
-    segments = []
-    for (topic, part), cols in sorted(buckets.items()):
-        fname = f"seg-{uuid.uuid4().hex}.parquet"
-        pq.write_table(pa.table(cols, schema=_ARROW_SEGMENT),
-                       os.path.join(_part_dir(root, topic, part), fname))
-        segments.append((topic, part, fname, len(cols["k"])))
-    return _SegmentMsg(segments=segments)
-
-
-def _commit_segments(root: str, messages, batch_id: int | None) -> None:
-    """Driver side: assign base offsets in task order and atomically publish
-    the new manifests. With a batch_id (stream sink), replayed batches are
-    skipped — idempotent exactly-once append per micro-batch."""
-    per_part: dict[tuple[str, int], list] = {}
-    for msg in messages:
-        if msg is None:
-            continue
-        for topic, part, fname, count in msg.segments:
-            per_part.setdefault((topic, part), []).append((fname, count))
-    touched = sorted({t for (t, _p) in per_part})
-    skip: set[str] = set()
-    if batch_id is not None:
-        # batch-id ledger lives on each topic's partition 0 manifest; a
-        # replayed micro-batch (stream restart) appends nothing twice
-        for topic in touched:
-            if batch_id in _load_manifest(root, topic, 0).get("batches", []):
-                skip.add(topic)
-    for (topic, part), segs in sorted(per_part.items()):
-        if topic in skip:
-            continue
-        man = _load_manifest(root, topic, part)
-        base = man["end"]
-        for fname, count in segs:
-            man["segments"].append(
-                {"file": fname, "base": base, "count": count})
-            base += count
-        man["end"] = base
-        if batch_id is not None and part == 0:
-            man.setdefault("batches", []).append(batch_id)
-        _save_json(_manifest_path(root, topic, part), man)
-    if batch_id is not None:
-        for topic in touched:
-            if topic in skip or (topic, 0) in per_part:
-                continue
-            man = _load_manifest(root, topic, 0)
-            man.setdefault("batches", []).append(batch_id)
-            _save_json(_manifest_path(root, topic, 0), man)
-
-
-def _abort_segments(root: str, messages) -> None:
-    for msg in messages:
-        if msg is None:
-            continue
-        for topic, part, fname, _count in msg.segments:
-            try:
-                os.remove(os.path.join(_part_dir(root, topic, part), fname))
-            except OSError:
-                pass
-
-
-class MeltBrokerStreamWriter(DataSourceStreamWriter):
-    """writeStream sink (T3): per-micro-batch commit with batch-id dedup, so
-    a restarted query that replays its last batch appends nothing twice.
-    NULL value = tombstone (S15) — stored, not dropped; compaction
-    interprets it."""
-
-    def __init__(self, options):
-        self.root = options["path"]
-        self.default_partitions = int(options.get("partitions", 4))
-
-    def write(self, iterator):
-        return _write_segments(self.root, self.default_partitions, iterator)
-
-    def commit(self, messages, batchId):
-        _commit_segments(self.root, messages, batchId)
-
-    def abort(self, messages, batchId):
-        _abort_segments(self.root, messages)
-
-
 def register(spark: SparkSession) -> None:
-    """Register the streaming source and sink (readStream/writeStream
-    .format("melt_broker")); batch I/O needs no registration."""
+    """Register the streaming source (readStream.format("melt_broker"));
+    writes and batch reads need no registration."""
     spark.dataSource.register(MeltBrokerDataSource)
 
 
@@ -466,10 +364,40 @@ def _staged(path: str, pattern: re.Pattern) -> list[tuple]:
     return out
 
 
+def _commit_segments(root: str, segments: list[tuple],
+                     txn: str | None = None) -> None:
+    """Driver side: append segments [(topic, part, file, count)] to their
+    partitions' manifests in list order, assigning base offsets, and
+    publish each manifest atomically. A `txn` ("<query id>:<batch id>") is
+    recorded in each topic's partition-0 ledger. Partition 0 is written
+    last, with its ledger entry, so a crash part-way through a topic
+    leaves a replay that writes the topic again (a duplicate), never one
+    that is skipped (a loss)."""
+    per_part: dict[tuple[str, int], list] = {}
+    for topic, part, fname, count in segments:
+        per_part.setdefault((topic, part), []).append((fname, count))
+    if txn is not None:
+        for topic, _part in list(per_part):
+            per_part.setdefault((topic, 0), [])
+    for topic, part in sorted(per_part,
+                              key=lambda tp: (tp[0], tp[1] == 0, tp[1])):
+        man = _load_manifest(root, topic, part)
+        base = man["end"]
+        for fname, count in per_part[(topic, part)]:
+            man["segments"].append(
+                {"file": fname, "base": base, "count": count})
+            base += count
+        man["end"] = base
+        if txn is not None and part == 0:
+            man.setdefault("batches", []).append(txn)
+        _save_json(_manifest_path(root, topic, part), man)
+
+
 def _publish_stage(root: str, stage: str, counts: dict[str, int],
-                   default: int) -> None:
+                   default: int, txn: str | None = None) -> None:
     """Driver side: move the staged files into their partition directories
-    as segments and commit them, in producer-task order."""
+    as segments and commit them, in producer-task order. Files of a topic
+    whose ledger already holds `txn` stay in the stage (a replay)."""
     staged = []  # ((task, file), topic, part, path)
     for tdir, t in _staged(stage, _TOPIC_DIR):
         topic = unquote(t[1])
@@ -481,23 +409,30 @@ def _publish_stage(root: str, stage: str, counts: dict[str, int],
                 staged.append(((int(f[1]), int(f[2])), topic, int(p[1]),
                                path))
     staged.sort(key=lambda s: s[0])
-    for topic in {s[1] for s in staged}:
+    topics = {s[1] for s in staged}
+    for topic in topics:
         create_topic(root, topic, default)
         if topic_partitions(root, topic) != counts.get(topic, default):
             raise RuntimeError(f"melt_broker: topic {topic!r} changed its "
                                "partition count during the write")
-    msg = _SegmentMsg(segments=[])
+    if txn is not None:
+        done = {t for t in topics
+                if txn in _load_manifest(root, t, 0).get("batches", [])}
+        staged = [s for s in staged if s[1] not in done]
+    segments = []
     try:
         for _order, topic, part, path in staged:
             count = pq.read_metadata(path).num_rows
             fname = f"seg-{uuid.uuid4().hex}.parquet"
             os.replace(path, os.path.join(_part_dir(root, topic, part),
                                           fname))
-            msg.segments.append((topic, part, fname, count))
+            segments.append((topic, part, fname, count))
     except BaseException:
-        _abort_segments(root, [msg])
+        for topic, part, fname, _count in segments:
+            with contextlib.suppress(OSError):
+                os.remove(os.path.join(_part_dir(root, topic, part), fname))
         raise
-    _commit_segments(root, [msg], None)
+    _commit_segments(root, segments, txn)
 
 
 def write_messages(messages: DataFrame, broker_path: str,
@@ -506,9 +441,18 @@ def write_messages(messages: DataFrame, broker_path: str,
     per call, per-key ordering within a producer task (Kafka's
     per-producer contract). NULL value = tombstone (S15) — stored, not
     dropped; compaction interprets it. New topics are created with
-    `partitions` partitions. A failed job publishes nothing."""
+    `partitions` partitions. A failed job publishes nothing.
+
+    Streaming sink: call it from foreachBatch, once per topic per
+    micro-batch. There the query id and batch id Spark sets on the
+    stream's thread make the write idempotent per topic: a replayed batch
+    appends nothing (see the module docstring)."""
     os.makedirs(broker_path, exist_ok=True)
     counts = _topic_counts(broker_path)
+    sc = messages.sparkSession.sparkContext
+    query = sc.getLocalProperty("sql.streaming.queryId")
+    batch = sc.getLocalProperty("streaming.sql.batchId")
+    txn = None if query is None or batch is None else f"{query}:{batch}"
     stage = os.path.join(broker_path, f".stage-{uuid.uuid4().hex}")
     try:
         (messages
@@ -520,7 +464,7 @@ def write_messages(messages: DataFrame, broker_path: str,
          .sortWithinPartitions("topic", "__p",
                                F.monotonically_increasing_id())
          .write.partitionBy("topic", "__p").parquet(stage))
-        _publish_stage(broker_path, stage, counts, partitions)
+        _publish_stage(broker_path, stage, counts, partitions, txn)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
 

@@ -21,8 +21,6 @@ SF_DIR = "/root/testdata/sf0.001"
 # double-driven time.
 SLOW_NODEIDS = {
     "tests/test_plan_lint.py::test_whole_surface_has_no_single_reducer_hazards",
-    "tests/test_transform_state.py::test_latest_state_apply_ttl_expires_idle_keys",
-    "tests/test_transform_state.py::test_latest_state_apply_executes_and_ignores_stragglers",
     "tests/test_suite_queries.py::test_query_runs[dedup_clusters]",
     "tests/test_suite_queries.py::test_query_runs[clean_corpus]",
     "tests/test_suite_queries.py::test_query_runs[embedding_lsh]",

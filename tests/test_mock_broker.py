@@ -1,12 +1,14 @@
 """The Kafka-shaped I/O boundary, executed for real against the file-backed
 mock broker (sources/mock_broker.py): produce → bounded read → incremental
-refresh → compaction → tombstones → streaming tail → streaming sink.
+refresh → compaction → tombstones → streaming tail → streaming sink
+(foreachBatch → write_messages, idempotent per query id and batch id).
 
 Covers SURVEY §2 S8/S10/S14/S15/T1/T3/T5 as *running* code (round 1 could
 only restate them — no broker in the sandbox)."""
 
 import json
 import os
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -144,31 +146,81 @@ def test_streaming_tail_compacts_like_batch(spark, broker, tmp_path):
     assert got == {"a": '{"v":2}'}
 
 
-def test_stream_writer_idempotent_batches(spark, broker, tmp_path):
-    """writeStream INTO the broker (T3 producer side): a rate-limited file
-    stream lands in the topic exactly once; batch-id ledger dedups replays."""
-    src_dir = tmp_path / "src"
-    src_dir.mkdir()
-    (src_dir / "a.json").write_text("\n".join(
-        json.dumps({"topic": "melt.sink", "key": f"s{i}", "value": str(i)})
-        for i in range(10)))
-
+def _stream_into_broker(spark, broker, src_dir, ckpt):
+    """Drain the JSON files under src_dir into the broker through the
+    streaming sink: foreachBatch -> write_messages."""
     stream = (spark.readStream.schema("topic string, key string, value string")
               .json(str(src_dir)))
-    q = (stream.writeStream.format("melt_broker")
-         .option("path", broker)
-         .option("partitions", 2)
-         .option("checkpointLocation", str(tmp_path / "ckpt2"))
+    q = (stream.writeStream
+         .foreachBatch(lambda df, _id: mb.write_messages(df, broker, 2))
+         .option("checkpointLocation", str(ckpt))
          .trigger(availableNow=True).start())
     q.awaitTermination(120)
 
-    assert mb.count_topic(spark, broker, "melt.sink") == 10
-    # replaying the same committed batch id appends nothing (ledger dedup)
-    man_before = mb.end_offsets(broker, "melt.sink")
-    msg = mb._write_segments(broker, 2, iter([
-        Row(topic="melt.sink", key="s0", value="dup")]))
-    mb._commit_segments(broker, [msg], 0)  # batch 0 already in ledger
-    assert mb.end_offsets(broker, "melt.sink") == man_before
+
+def _json_source(path, topic, keys):
+    path.mkdir()
+    (path / "a.json").write_text("\n".join(
+        json.dumps({"topic": topic, "key": k, "value": k}) for k in keys))
+    return path
+
+
+def _ledger(broker, topic):
+    return mb._load_manifest(broker, topic, 0)["batches"]
+
+
+def test_stream_sink_two_queries_both_land(spark, broker, tmp_path):
+    """Two queries with their own checkpoints write batch 0 into one
+    topic: the ledger is keyed by query id as well as batch id, so the
+    second query's batch is not taken for a replay of the first's."""
+    topic = "melt.sink2q"
+    _stream_into_broker(spark, broker, _json_source(
+        tmp_path / "a", topic, [f"a{i}" for i in range(10)]),
+        tmp_path / "ckpt_a")
+    assert mb.count_topic(spark, broker, topic) == 10
+    _stream_into_broker(spark, broker, _json_source(
+        tmp_path / "b", topic, [f"b{i}" for i in range(5)]),
+        tmp_path / "ckpt_b")
+    assert mb.count_topic(spark, broker, topic) == 15
+    ledger = _ledger(broker, topic)
+    assert len(ledger) == 2 and len({e.split(":")[0] for e in ledger}) == 2
+
+
+def test_stream_writer_idempotent_batches(spark, broker, tmp_path):
+    """A query restarted after its batch-0 commit is lost replays batch 0
+    with the same query id: it appends nothing, and the staged files of
+    the replay are deleted, not left as segments no manifest names."""
+    topic = "melt.sink"
+    src = _json_source(tmp_path / "src", topic,
+                       [f"s{i}" for i in range(10)])
+    ckpt = tmp_path / "ckpt"
+    _stream_into_broker(spark, broker, src, ckpt)
+    assert mb.count_topic(spark, broker, topic) == 10
+    ledger = _ledger(broker, topic)
+    for name in ("0", ".0.crc"):
+        os.remove(ckpt / "commits" / name)
+    _stream_into_broker(spark, broker, src, ckpt)
+    assert mb.count_topic(spark, broker, topic) == 10
+    assert _ledger(broker, topic) == ledger
+    for p in range(mb.topic_partitions(broker, topic)):
+        named = {s["file"] for s in
+                 mb._load_manifest(broker, topic, p)["segments"]}
+        on_disk = {f for f in os.listdir(mb._part_dir(broker, topic, p))
+                   if f.startswith("seg-")}
+        assert on_disk == named
+    assert not [d for d in os.listdir(broker) if d.startswith(".stage-")]
+
+
+def test_batch_write_adds_no_ledger_entry(spark, broker, tmp_path):
+    """Outside a stream write_messages records nothing in the ledger."""
+    topic = "melt.sinkb"
+    _stream_into_broker(spark, broker, _json_source(
+        tmp_path / "src", topic, ["x0", "x1"]), tmp_path / "ckpt")
+    ledger = _ledger(broker, topic)
+    assert len(ledger) == 1
+    mb.write_messages(_msgs(spark, [(topic, "x2", "x2")]), broker)
+    assert mb.count_topic(spark, broker, topic) == 3
+    assert _ledger(broker, topic) == ledger
 
 
 def _envelope(spark, root, topic, **kw):
@@ -248,6 +300,18 @@ def test_read_window_inside_a_segment(spark, broker):
     assert [r[2] for r in got] == [3, 4, 5, 6]
 
 
+def _put_segment(root, topic, rows, commit=True):
+    """Write one segment of (key, value) rows into partition 0 of a topic
+    and, unless commit is False, append it to the manifest."""
+    fname = f"seg-{uuid.uuid4().hex}.parquet"
+    keys, values = zip(*rows)
+    pq.write_table(pa.table({"k": keys, "v": values, "ts": [None] * len(rows)},
+                            schema=mb._ARROW_SEGMENT),
+                   os.path.join(mb._part_dir(root, topic, 0), fname))
+    if commit:
+        mb._commit_segments(root, [(topic, 0, fname, len(rows))])
+
+
 def test_partial_read_opens_only_overlapping_segments(spark, broker):
     """A window over a topic with many segments opens only the segments
     that overlap it. Every other file in the partition directory, and one
@@ -255,12 +319,9 @@ def test_partial_read_opens_only_overlapping_segments(spark, broker):
     Parquet; the read still returns exactly the window's records."""
     mb.create_topic(broker, "melt.many", partitions=1)
     for i in range(40):
-        msg = mb._write_segments(broker, 1, iter([
-            Row(topic="melt.many", key=f"m{j}", value=f"{i}:{j}")
-            for j in range(3)]))
-        mb._commit_segments(broker, [msg], None)
-    mb._write_segments(broker, 1, iter([   # written, never committed
-        Row(topic="melt.many", key="ghost", value="x")]))
+        _put_segment(broker, "melt.many",
+                     [(f"m{j}", f"{i}:{j}") for j in range(3)])
+    _put_segment(broker, "melt.many", [("ghost", "x")], commit=False)
     want = sorted(mb._scan_segments(broker, "melt.many", 0, 100, 107))
     man = mb._load_manifest(broker, "melt.many", 0)
     keep = {f for f, *_ in mb._overlaps(man, 100, 107)}

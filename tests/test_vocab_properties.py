@@ -162,13 +162,7 @@ def _bpe_reference(texts, rounds):
     return merges, {w: "|".join(s) for w, s in words.items()}
 
 
-@settings(max_examples=6, deadline=None,
-          suppress_health_check=[HealthCheck.too_slow])
-@given(corpus)
-def test_bpe_matches_python_reference(texts):
-    """Spark BPE training == the classic Python trainer on arbitrary
-    corpora: same merges in the same order, same final segmentations —
-    the fold/consume equivalence argument, checked empirically."""
+def _assert_bpe_matches_reference(texts):
     from melt_spark.functions.bpe import bpe_train
 
     merges_df, words_df = bpe_train(_docs(texts), rounds=2)
@@ -178,6 +172,26 @@ def test_bpe_matches_python_reference(texts):
     want_merges, want_words = _bpe_reference(texts, rounds=2)
     assert got_merges == want_merges
     assert got_words == want_words
+
+
+@settings(max_examples=6, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(corpus)
+def test_bpe_matches_python_reference(texts):
+    """Spark BPE training == the classic Python trainer on arbitrary
+    corpora: same merges in the same order, same final segmentations —
+    the fold/consume equivalence argument, checked empirically."""
+    _assert_bpe_matches_reference(texts)
+
+
+def test_bpe_matches_python_reference_fixed_corpus():
+    """The same equivalence on one fixed corpus of VOCAB words: a single
+    Spark run, cheap enough for the default profile. Round 1 breaks a
+    count tie ("al" and "ba" both occur 5 times) by s1 ASC."""
+    texts = ["bal bal mez hip bal", "mez hip gun bal kos",
+             "kos bal mez dot"]
+    assert all(w in VOCAB for t in texts for w in t.split())
+    _assert_bpe_matches_reference(texts)
 
 
 @settings(max_examples=6, deadline=None,

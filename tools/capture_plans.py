@@ -1,10 +1,10 @@
-"""Capture .explain('formatted') for bench queries into plans/r12/.
+"""Capture .explain('formatted') for bench queries into plans/<round>/.
 
-Usage: python tools/capture_plans_r12.py before|after [name ...]
+Usage: python tools/capture_plans.py <round> before|after [name ...]
 
-Writes plans/r12/<name>_<tag>.txt for every headliner (or the named
-subset) — the round-11 optimization evidence trail: the judge checks
-plan-shape claims in OPTIMIZATION_r12.md against these files.
+Writes plans/<round>/<name>_<tag>.txt (e.g. round r12) for every
+headliner (or the named subset): the plan-shape evidence that an
+OPTIMIZATION_<round>.md write-up cites.
 """
 
 from __future__ import annotations
@@ -18,19 +18,19 @@ SF_DIR = "/root/testdata/sf0.1"
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    only = set(sys.argv[2:])
+    rnd, tag = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[3:])
 
     from bench import BENCH_QUERIES
     from melt_spark.plans.registry import constituents, entries
     from melt_spark.session import get_spark
 
-    spark = get_spark("capture-plans-r12")
+    spark = get_spark(f"capture-plans-{rnd}")
     jvm = spark._jvm
     mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted")
 
-    out_dir = Path(__file__).resolve().parent.parent / "plans" / "r12"
+    out_dir = Path(__file__).resolve().parent.parent / "plans" / rnd
     out_dir.mkdir(parents=True, exist_ok=True)
 
     targets: list[tuple[str, object]] = list(BENCH_QUERIES)

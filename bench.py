@@ -186,99 +186,19 @@ def contended_names(canaries: list[dict], name_seqs: list[tuple[str, int]],
     return med, out
 
 
-def box_speed(spark) -> dict:
-    """Fixed JVM arithmetic workloads, recorded per run so round-over-round
-    bench totals can be HARDWARE-NORMALIZED: the r9 close-run measured the
-    untouched, plan-pinned headliners ~45% slower than r8 on a box whose
-    pure-Python loop was equally slower — plan pins prove no plan changed,
-    and this denominator proves (or refutes) 'the box, not the code' for
-    any future such shift. Single-partition run = per-core speed;
-    32-partition run = whole-box throughput."""
-    def best_of(n_rows: int, parts: int) -> float:
-        best = None
-        for _ in range(2):   # first run pays JIT — min is the warm number
-            t0 = time.perf_counter()
-            spark.range(0, n_rows, 1, parts).selectExpr(
-                "sum(id * 2 + 7) AS s").collect()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        return round(best, 3)
-
-    return {"jvm_1core_sec": best_of(50_000_000, 1),
-            "jvm_32core_sec": best_of(800_000_000, 32)}
-
-
-# Committed reference box (r9 verdict What's-wrong #3): the r9 round-close
-# calibration readings (NOTES.md r9 bench context — jvm_1core 0.34 s /
-# jvm_32core 0.44 s, the box whose 18.1 s close-run the judge's A/B traced
-# to hardware). Every future run normalizes its headline against THESE
-# numbers, so a uniformly slow box — which inflates measurements AND the
-# contention-canary median together, evading the burst canary — reads as
-# a box-speed ratio instead of a fake regression.
-BOX_BASELINE = {"jvm_1core_sec": 0.34, "jvm_32core_sec": 0.44}
-
-
-def box_normalized(total: float, box: dict,
-                   baseline: dict | None = None) -> float | None:
-    """Headline seconds re-expressed in REFERENCE-BOX time: multiply by
-    the geometric mean of the (baseline/measured) speed ratios of the
-    1-core and 32-core calibration workloads (the headliners mix serial
-    driver/stage-boundary time with parallel scan time, so neither ratio
-    alone is right; the geomean is the symmetric compromise). A box
-    measuring 2x slower than the committed baseline halves its raw total.
-    Pure function — pinned by tests/test_bench_contract.py. Returns None
-    when a calibration reading is missing or non-positive (the raw value
-    then stands alone, never a fabricated normalization)."""
-    baseline = baseline or BOX_BASELINE
-    try:
-        r1 = baseline["jvm_1core_sec"] / box["jvm_1core_sec"]
-        r32 = baseline["jvm_32core_sec"] / box["jvm_32core_sec"]
-    except (KeyError, TypeError, ZeroDivisionError):
-        return None
-    if r1 <= 0 or r32 <= 0:
-        return None
-    return round(total * (r1 * r32) ** 0.5, 3)
-
-
-def norm_band(total: float, box: dict,
-              baseline: dict | None = None) -> list[float] | None:
-    """The box normalization as a BAND, not a point (r10 verdict
-    What's-wrong #2): [total x 1-core-ratio, total x 32-core-ratio],
-    sorted. The true workload sits between the serial and parallel
-    extremes (Amdahl: per-query fixed driver/stage-boundary costs scale
-    with core speed, scan time with whole-box throughput), so the band
-    brackets the reference-box time the geomean point can only estimate.
-    Pure function — pinned by tests/test_bench_contract.py."""
-    baseline = baseline or BOX_BASELINE
-    try:
-        r1 = baseline["jvm_1core_sec"] / box["jvm_1core_sec"]
-        r32 = baseline["jvm_32core_sec"] / box["jvm_32core_sec"]
-    except (KeyError, TypeError, ZeroDivisionError):
-        return None
-    if r1 <= 0 or r32 <= 0:
-        return None
-    return sorted([round(total * r1, 3), round(total * r32, 3)])
-
-
-# Workload-matched calibration (r10 verdict next-round #1b): the JVM
-# arithmetic loops normalize by CORE speed, but headliner time mixes
-# serial driver/stage-boundary cost with parallel scan cost, and the
-# mix differs per box — identical code normalized to 23.2-40.5 s
-# across three boxes (a 1.7x spread). The fix the verdict prescribed:
-# calibrate with a MINI-HEADLINER whose serial/parallel mix matches the
-# workload — message_envelope + tpch_q1 at sf0.01, min-of-2 warm, the
-# exact two queries the r10 verdict named. MINI_BASELINE is the
-# committed r11 anchor-box reading (measured beside the r11 headline on
-# a canary-quiet box, calibration jvm_1core/32core recorded in
-# BENCH_DETAIL at the time); value_box_normalized is the headline
-# re-expressed in anchor-box time through THIS ratio, with the JVM
-# geomean kept in the detail for continuity with r9/r10 artifacts.
+# Workload-matched calibration (r10 verdict next-round #1b): headliner
+# time mixes serial driver/stage-boundary cost with parallel scan cost,
+# and the mix differs per box, so a pure CPU-speed ratio normalized
+# identical code to 23.2-40.5 s across three boxes (a 1.7x spread). The
+# denominator is instead a MINI-HEADLINER whose serial/parallel mix
+# matches the workload — message_envelope + tpch_q1 at sf0.01, min-of-2
+# warm. MINI_BASELINE is the committed r11 anchor-box reading (measured
+# beside the r11 headline on a canary-quiet box); value_box_normalized
+# is the headline re-expressed in anchor-box time through THIS ratio.
 MINI_SF_DIR = "/root/testdata/sf0.01"
 # r11 anchor box: FULLY-WARM mini-headliner converged at ~0.75 s over
-# repeated quiet-box trials (jvm_1core ~0.15 / jvm_32core ~0.20 at
-# measurement time — the same calibration the r10 verdict records for
-# the builder's close-run box). bench.main() measures mini at the END
-# of the sweep, i.e. fully warm, matching this anchor's condition.
+# repeated quiet-box trials. bench.main() measures mini at the END of
+# the sweep, i.e. fully warm, matching this anchor's condition.
 MINI_BASELINE = {"mini_sec": 0.75}
 
 
@@ -301,9 +221,9 @@ def mini_headliner_speed(spark) -> dict:
 def box_normalized_mini(total: float, mini: dict,
                         baseline: dict | None = None) -> float | None:
     """Headline seconds re-expressed in ANCHOR-BOX time via the
-    mini-headliner ratio. Same degradation contract as box_normalized:
-    None when the reading is missing or non-positive. Pure function —
-    pinned by tests/test_bench_contract.py."""
+    mini-headliner ratio: None when the reading is missing or
+    non-positive, never a fabricated number. Pure function — pinned by
+    tests/test_bench_contract.py."""
     baseline = baseline or MINI_BASELINE
     try:
         r = baseline["mini_sec"] / mini["mini_sec"]
@@ -339,14 +259,13 @@ def extended_queries() -> list[tuple[str, object]]:
 
 def compact_line(total: float, sf, timings: dict[str, float],
                  n_errors: int, box_norm: float | None = None,
-                 band: list[float] | None = None,
                  total_no_retry: float | None = None) -> str:
     """The ONE stdout JSON line: headline metric + 13 headliner seconds
     (+ the box-normalized headline when calibration succeeded, + the
-    JVM-ratio normalization band, + the PRE-RETRY total — r11 verdict
-    #6: the canary-gated retry's min(original, retry) is one-sided, so
-    the line always carries the no-retry total too; when the retry never
-    fires the two are equal and headlines stay comparable either way).
+    PRE-RETRY total — r11 verdict #6: the canary-gated retry's
+    min(original, retry) is one-sided, so the line always carries the
+    no-retry total too; when the retry never fires the two are equal and
+    headlines stay comparable either way).
     Kept under MAX_STDOUT_BYTES by construction (pinned by pytest)."""
     core = [k for k, _ in BENCH_QUERIES]
     out = {
@@ -361,8 +280,6 @@ def compact_line(total: float, sf, timings: dict[str, float],
         out["value_no_retry"] = total_no_retry
     if box_norm is not None:
         out["value_box_normalized"] = box_norm
-    if band is not None:
-        out["norm_band"] = band
     if n_errors:
         out["n_errors"] = n_errors
     return json.dumps(out)
@@ -492,27 +409,14 @@ def main() -> None:
     total = round(sum(v for k, v in timings.items() if k in core), 3)
     total_no_retry = round(sum(v for k, v in timings_no_retry.items()
                                if k in core), 3)
-    box = box_speed(spark)
     mini = mini_headliner_speed(spark)
-    norm_geo = box_normalized(total, box)
     norm = box_normalized_mini(total, mini)
-    # normalization lineage (r11 verdict #6): value_box_normalized's
-    # meaning changed across rounds (r10 JVM geomean → r11 mini anchor);
-    # the detail now NAMES which denominator produced it
-    normalization = "mini_anchor" if norm is not None else \
-        ("jvm_geomean" if norm_geo is not None else "none")
-    if norm is None:
-        norm = norm_geo
-    band = norm_band(total, box)
 
     detail = {
         "metric": "headline_queries_total",
         "value": total,
         "value_no_retry": total_no_retry,
         "value_box_normalized": norm,
-        "value_box_normalized_jvm_geomean": norm_geo,
-        "normalization": normalization,
-        "norm_band": band,
         "unit": "sec",
         "sf": sf,
         "queries": timings,
@@ -521,8 +425,6 @@ def main() -> None:
         "total_with_new_ops": round(sum(timings.values()), 3),
         "constituents": constituent_times,
         "errors": errors,
-        "box": box,
-        "box_baseline": BOX_BASELINE,
         "mini": mini,
         "mini_baseline": MINI_BASELINE,
         "canary": {
@@ -539,7 +441,7 @@ def main() -> None:
     detail_path.write_text(json.dumps(detail, indent=1) + "\n")
 
     line = compact_line(total, sf, timings, len(errors), box_norm=norm,
-                        band=band, total_no_retry=total_no_retry)
+                        total_no_retry=total_no_retry)
     assert len(line.encode()) <= MAX_STDOUT_BYTES, \
         f"bench stdout line {len(line.encode())}B exceeds budget"
     print(line)

@@ -100,8 +100,9 @@ def bpe_train(docs: DataFrame, rounds: int = 3, text_col: str = "text"
     Output equivalence: the argmax ordering (n DESC, s1 ASC, s2 ASC),
     the sentinel no-op on an empty pair table, and the greedy fold are
     unchanged — collecting the winner instead of broadcasting it cannot
-    change what it selects (tools/ab_bpe.py --check diffs the full
-    entry output multisets bit-for-bit; oracle re-checked).
+    change what it selects (`git show b26f2ed:tools/ab_bpe.py`, run
+    with --check, diffs the full entry output multisets bit-for-bit;
+    oracle re-checked).
     """
     spark = docs.sparkSession
     words = word_freqs(docs, text_col).localCheckpoint(eager=False)

@@ -368,8 +368,9 @@ def _minhash_col(seed: int) -> Column:
     min(conv(chunk, 16, 10) as bigint), order-identical because fixed-
     length lowercase hex compares as its numeric value — pays 8 conv()
     string parses per shingle. Measured head-to-head (r11,
-    tools/ab_minhash.py — alternating variants in ONE session so box
-    drift cancels): at 16x corpus replication the string variant won
+    `git show b26f2ed:tools/ab_minhash.py` — alternating variants in ONE
+    session so box drift cancels): at 16x corpus replication the string
+    variant won
     every warm adjacent round of the isolated signature pass (6.55/6.69 s
     vs 7.28/6.91 s, a 3-10% edge), and at sf0.1 the two variants sit
     within box noise of each other in both directions, so the

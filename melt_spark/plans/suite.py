@@ -1009,12 +1009,16 @@ def q_broker_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     nationkey%5==0, tombstones for nationkey%7==3. Bounded envelope read,
     then latest-state compaction on (partition, offset) — a key lives on
     one partition, so that order is total per key. The oracle states the
-    surviving (key, value) set directly from nation."""
+    surviving (key, value) set directly from nation. The broker lives
+    under the process-private plan-store root, removed at exit (the
+    returned frame reads it lazily)."""
     import tempfile
 
     from ..sources import mock_broker as mb
+    from .pipeline_suite import _plan_store_root
 
-    root = tempfile.mkdtemp(prefix="melt_broker_q_")
+    root = tempfile.mkdtemp(prefix="melt_broker_q_",
+                            dir=_plan_store_root())
     topic = "melt.main.nation"
     mb.create_topic(root, topic, partitions=3)
 
@@ -1060,14 +1064,17 @@ def q_stream_broker_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     query id and batch id makes a replayed batch append nothing twice),
     then the topic is read back bounded and compacted. The executed
     streaming analogue of q_broker_roundtrip's batch produce path (T3
-    producer side + S14/S15/T1)."""
+    producer side + S14/S15/T1). Its work directory lives under the
+    process-private plan-store root, removed at exit."""
     import shutil
     import tempfile
     import time
 
     from ..sources import mock_broker as mb
+    from .pipeline_suite import _plan_store_root
 
-    work = tempfile.mkdtemp(prefix="melt_stream_sync_")
+    work = tempfile.mkdtemp(prefix="melt_stream_sync_",
+                            dir=_plan_store_root())
     stage = os.path.join(work, "stage")
     broker = os.path.join(work, "broker")
     os.makedirs(stage)
@@ -1181,8 +1188,9 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     its 16× probe ratio was 11.87): floor(x·100 + 0.5) is exactly
     CAST(x AS DECIMAL(18,2)) for this data's 2-decimal doubles (probed
     bit-for-bit old-vs-new at sf0.001/0.01/0.1 and at 16× volume —
-    tools/ab_q1.py --check), the per-row measures become bigint
-    products (disc_price in 1e-4 units, charge in 1e-6 units, both
+    `git show b26f2ed:tools/ab_q1.py`, run with --check), the per-row
+    measures become bigint products (disc_price in 1e-4 units, charge
+    in 1e-6 units, both
     overflow-safe: |charge_6| < 2^37 per row, so 2^26 rows per
     partial-agg partition fit long with 2^63 headroom), and the four
     output rows convert long → DECIMAL(38,0) → /10^k (exact: the

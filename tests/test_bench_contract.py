@@ -18,12 +18,11 @@ import bench
 
 def test_compact_line_fits_budget_worst_case():
     # worst case: every headliner present with a wide timing value, sf a
-    # long string, errors present, normalization band present, and the
-    # r12 no-retry lineage total present
+    # long string, errors present, the box-normalized headline present,
+    # and the r12 no-retry lineage total present
     timings = {name: 12345.678 for name, _fn in bench.BENCH_QUERIES}
     line = bench.compact_line(99999.999, "0.001", timings, n_errors=99,
                               box_norm=88888.888,
-                              band=[77777.777, 99999.999],
                               total_no_retry=99999.999)
     n = len(line.encode())
     assert n <= bench.MAX_STDOUT_BYTES, f"{n}B > {bench.MAX_STDOUT_BYTES}B"
@@ -32,24 +31,22 @@ def test_compact_line_fits_budget_worst_case():
     assert parsed["value"] == 99999.999
     assert parsed["value_no_retry"] == 99999.999
     assert parsed["value_box_normalized"] == 88888.888
-    assert parsed["norm_band"] == [77777.777, 99999.999]
     assert set(parsed["queries"]) == {n for n, _ in bench.BENCH_QUERIES}
 
 
 def test_compact_line_and_detail_carry_retry_lineage():
     """r11 verdict #6: the canary-gated retry takes min(original, retry)
     — downward-biased by construction — so the compact line must always
-    carry the PRE-RETRY total beside the headline, and the detail must
-    name which denominator produced value_box_normalized."""
+    carry the PRE-RETRY total beside the headline, and so must the
+    detail."""
     timings = {name: 1.0 for name, _fn in bench.BENCH_QUERIES}
     line = bench.compact_line(13.0, 0.1, timings, n_errors=0,
                               total_no_retry=14.5)
     parsed = json.loads(line)
     assert parsed["value_no_retry"] == 14.5
     src = open(bench.__file__).read()
-    for key in ('"value_no_retry"', '"normalization"',
-                "timings_no_retry"):
-        assert key in src, f"bench lost retry/normalization lineage {key}"
+    for key in ('"value_no_retry"', "timings_no_retry"):
+        assert key in src, f"bench lost retry lineage {key}"
 
 
 def test_compact_line_is_single_line_json():
@@ -125,36 +122,12 @@ def test_detail_path_round_stamped(monkeypatch):
     assert bench.detail_name() == "BENCH_DETAIL.json"
 
 
-def test_box_normalized_pure_function():
-    """r9 verdict What's-wrong #3: a uniformly slow box inflated the r9
-    headline +60% and the burst canary (correctly) stayed silent — only a
-    COMMITTED box baseline lets the artifact self-normalize. Pins the
-    committed r9 close-run reference values, the geomean direction (a
-    slower box scales its raw total DOWN), and the missing-reading
-    degradation (None, never a fabricated number)."""
-    assert bench.BOX_BASELINE == {"jvm_1core_sec": 0.34,
-                                  "jvm_32core_sec": 0.44}
-    # reading the baseline box exactly -> identity
-    assert bench.box_normalized(10.0, dict(bench.BOX_BASELINE)) == 10.0
-    # a uniformly 2x-slower box halves its raw total
-    slow = {"jvm_1core_sec": 0.68, "jvm_32core_sec": 0.88}
-    assert bench.box_normalized(20.0, slow) == 10.0
-    # asymmetric ratios take the geometric mean: 2x and 8x -> 4x
-    skew = {"jvm_1core_sec": 0.68, "jvm_32core_sec": 3.52}
-    assert bench.box_normalized(40.0, skew) == 10.0
-    # missing / zero / malformed calibration -> None, raw value stands
-    assert bench.box_normalized(10.0, {}) is None
-    assert bench.box_normalized(10.0, {"jvm_1core_sec": 0.0,
-                                       "jvm_32core_sec": 0.44}) is None
-    assert bench.box_normalized(10.0, None) is None
-
-
 def test_detail_contract_carries_box_keys():
     """The detail artifact must carry BOTH the raw and the box-normalized
     headline plus the committed baseline (r9 verdict fix: 'assert in
     test_bench_contract.py that the detail carries both')."""
     src = open(bench.__file__).read()
-    for key in ('"value_box_normalized"', '"box_baseline"', '"box"'):
+    for key in ('"value"', '"value_box_normalized"', '"mini_baseline"'):
         assert key in src, f"detail artifact lost box key {key}"
 
 
@@ -178,28 +151,13 @@ def test_box_normalized_mini_pure_function():
     assert bench.box_normalized_mini(10.0, None) is None
 
 
-def test_norm_band_pure_function():
-    """The JVM-ratio normalization published as a BAND (r10 verdict
-    What's-wrong #2): [1-core-scaled, 32-core-scaled] sorted — the raw
-    total bracketed by the serial and parallel extremes instead of a
-    geomean point."""
-    base = {"jvm_1core_sec": 0.34, "jvm_32core_sec": 0.44}
-    # identical box -> degenerate band at the raw value
-    assert bench.norm_band(10.0, dict(base), base) == [10.0, 10.0]
-    # 2x slower serial, 1x parallel -> band [5, 10]
-    skew = {"jvm_1core_sec": 0.68, "jvm_32core_sec": 0.44}
-    assert bench.norm_band(10.0, skew, base) == [5.0, 10.0]
-    assert bench.norm_band(10.0, {}, base) is None
-
-
 def test_detail_contract_carries_retry_and_mini_keys():
     """r10 verdict next-round #1a: contended headliners re-run once after
     the sweep (canary-gated retry) and the detail records every reading
     plus both contended lists and the mini calibration."""
     src = open(bench.__file__).read()
     for key in ('"retries"', '"contended_initial"', '"mini"',
-                '"mini_baseline"', '"norm_band"',
-                '"value_box_normalized_jvm_geomean"'):
+                '"mini_baseline"'):
         assert key in src, f"detail artifact lost key {key}"
 
 

@@ -395,3 +395,23 @@ def test_unknown_staged_file_publishes_nothing(broker, tmp_path):
         mb._publish_stage(broker, str(tmp_path / "stage"),
                           {"melt.stray": 1}, 1)
     assert mb.end_offsets(broker, "melt.stray") == {0: 0}
+
+
+@pytest.mark.parametrize("entry", ["q_broker_roundtrip",
+                                   "q_stream_broker_sync"])
+def test_broker_entries_work_under_the_plan_store_root(spark, sf_dir, entry):
+    """The two broker entries return frames that read their broker lazily,
+    so its directory must outlive the call. It lives under the
+    process-private plan-store root, which is removed at exit, instead of
+    a bare temp directory that nothing ever removes."""
+    from melt_spark.plans import suite
+    from melt_spark.plans.pipeline_suite import _plan_store_root
+
+    df = getattr(suite, entry)(spark, sf_dir)
+    assert df.collect()
+    root = os.path.realpath(_plan_store_root())
+    files = [os.path.realpath(f.removeprefix("file:"))
+             for f in df.inputFiles()]
+    assert files
+    outside = [f for f in files if not f.startswith(root + os.sep)]
+    assert not outside, outside

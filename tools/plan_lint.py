@@ -188,15 +188,13 @@ def lint_plan(plan: str) -> list[str]:
 
 
 def lint_all(sf_dir: str = "/root/testdata/sf0.001") -> dict[str, list[str]]:
-    from melt_spark.plans.registry import constituents, entries
+    from melt_spark.plans.registry import all_named
     from melt_spark.session import get_spark
 
     spark = get_spark("plan-lint")
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted")
-    targets: dict[str, object] = {n: fn for n, (fn, _sql)
-                                  in constituents().items()}
-    targets.update(entries())
+    targets = all_named()
 
     # disable size-based broadcasts while planning: fixture-scale stats
     # make Catalyst broadcast whole fact tables (correct at 500 rows,

@@ -5,20 +5,21 @@ evidence: a well-partitioned op should scale near-linearly in rows (ratio
 overheads still dominate); anything super-linear indicates a quadratic
 candidate-pair blowup or a collapsed partition.
 
-Usage: python tools/scale_probe.py [N] [sf_dir]   (default 16 /root/testdata/sf0.1)
-Writes docs/SCALING.md and prints one JSON line.
+Usage: python tools/scale_probe.py [N] [sf_dir] [name ...]
+       (default 16 /root/testdata/sf0.1, every name in PROBES)
+Writes docs/SCALING.md (docs/SCALING_<N>x.md when N is not 16) and prints
+one JSON line. Each probe is timed by bench_some.measure, whose shuffle
+bytes come from Spark's status store with the UI off.
 """
 
 from __future__ import annotations
 
 import json
 import sys
-import time
 from pathlib import Path
 
+from bench_some import measure
 from pyspark.sql import functions as F
-
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def replicate(spark, sf_dir: str, out_dir: str, n: int) -> None:
@@ -284,17 +285,6 @@ def _graph_ann_coarse_query():
     return q
 
 
-def _constituent(module: str, fn_name: str):
-    """Probe a suite CONSTITUENT directly (pre-merge plan, so the probe
-    times the operator, not its tagged-union packaging)."""
-    def q(spark, sf_dir):
-        import importlib
-
-        m = importlib.import_module(f"melt_spark.plans.{module}")
-        return getattr(m, fn_name)(spark, sf_dir)
-    return q
-
-
 def _mw_skew_query():
     """Deliberately skewed Mann-Whitney key (r7 verdict next-round #3):
     ALL events collapse onto one test key, the worst case for exact
@@ -365,248 +355,42 @@ def _int8_query(overscan: int):
     return q
 
 
-_EXTRA_QUERIES = {"span_dedup_digest": _span_query("digest"),
-                  "int8_over2": _int8_query(2),
-                  "int8_over8": _int8_query(8),
-                  "corpus_gate":
-                      _constituent("pipeline_suite", "q_corpus_gate"),
-                  "domain_gate_hot": _domain_hot_query(),
-                  "ccnet_hot": _ccnet_hot_query(),
-                  "incremental_bpe":
-                      _constituent("pipeline_suite", "q_incremental_bpe"),
-                  "embedding_pca":
-                      _constituent("analytics_suite", "q_embedding_pca"),
-                  "abtt_ann":
-                      _constituent("analytics_suite", "q_abtt_ann"),
-                  "kn_perplexity":
-                      _constituent("pipeline_suite", "q_kn_perplexity"),
-                  "luhn_cards":
-                      _constituent("pipeline_suite", "q_luhn_cards"),
-                  "ann_int8_rerank":
-                      _constituent("pipeline_suite", "q_ann_int8_rerank"),
-                  "ccnet_assign":
-                      _constituent("pipeline_suite", "q_ccnet_assign"),
-                  "cluster_split":
-                      _constituent("pipeline_suite", "q_cluster_split"),
-                  "embedding_drift":
-                      _constituent("analytics_suite", "q_embedding_drift"),
-                  "pretoken_fertility":
-                      _constituent("pipeline_suite",
-                                   "q_pretoken_fertility"),
-                  "gopher_gate":
-                      _constituent("pipeline_suite", "q_gopher_gate"),
-                  "url_dedup":
-                      _constituent("pipeline_suite", "q_url_dedup"),
-                  "regex_pretokenize":
-                      _constituent("pipeline_suite",
-                                   "q_regex_pretokenize"),
-                  "ccnet_buckets":
-                      _constituent("pipeline_suite", "q_ccnet_buckets"),
-                  "span_dedup_text": _span_query("text"),
-                  "semantic_dedup": _semantic_query(None),
-                  "semantic_dedup_coarse": _semantic_query(16),
-                  "lm_perplexity":
-                      _constituent("pipeline_suite", "q_lm_perplexity"),
-                  "cms_user_counts":
-                      _constituent("analytics_suite", "q_cms_user_counts"),
-                  "gapfill_hourly":
-                      _constituent("analytics_suite", "q_gapfill_hourly"),
-                  "incremental_minhash":
-                      _constituent("pipeline_suite",
-                                   "q_incremental_minhash"),
-                  "dsir_topk":
-                      _constituent("pipeline_suite", "q_dsir_topk"),
-                  "ngram_novelty":
-                      _constituent("pipeline_suite", "q_ngram_novelty"),
-                  "bloom_filter":
-                      _constituent("analytics_suite", "q_bloom_filter"),
-                  "pq_adc":
-                      _constituent("pipeline_suite", "q_pq_adc"),
-                  "rep_ngrams":
-                      _constituent("pipeline_suite", "q_rep_ngrams"),
-                  "ivf_pq": _constituent("pipeline_suite", "q_ivf_pq"),
-                  "kcore": _constituent("analytics_suite", "q_kcore"),
-                  "kmv_overlap":
-                      _constituent("analytics_suite", "q_kmv_overlap"),
-                  "fuzzy_match":
-                      _constituent("analytics_suite", "q_fuzzy_match"),
-                  "cusum_monitor":
-                      _constituent("analytics_suite", "q_cusum_monitor"),
-                  "alignment_filter":
-                      _constituent("pipeline_suite", "q_alignment_filter"),
-                  "audio_windows":
-                      _constituent("pipeline_suite", "q_audio_windows"),
-                  "nb_classify":
-                      _constituent("pipeline_suite", "q_nb_classify"),
-                  "hits": _constituent("analytics_suite", "q_hits"),
-                  "containment":
-                      _constituent("pipeline_suite", "q_containment"),
-                  "kmeans_train":
-                      _constituent("pipeline_suite", "q_kmeans_train"),
-                  "greedy_coverage":
-                      _constituent("pipeline_suite", "q_greedy_coverage"),
-                  "ewma": _constituent("analytics_suite", "q_ewma"),
-                  "winnow": _constituent("pipeline_suite", "q_winnow"),
-                  "ppr": _constituent("analytics_suite", "q_ppr"),
-                  "canonical_docs":
-                      _constituent("pipeline_suite", "q_canonical_docs"),
-                  "skew_report":
-                      _constituent("analytics_suite", "q_skew_report"),
-                  "waterfill":
-                      _constituent("pipeline_suite", "q_waterfill"),
-                  "diversity":
-                      _constituent("pipeline_suite", "q_diversity"),
-                  "leakage":
-                      _constituent("pipeline_suite", "q_leakage"),
-                  "trimmed_mean":
-                      _constituent("analytics_suite", "q_trimmed_mean"),
-                  "lpa_communities":
-                      _constituent("analytics_suite", "q_lpa_communities"),
-                  "random_walks":
-                      _constituent("analytics_suite", "q_random_walks"),
-                  "knn_graph":
-                      _constituent("pipeline_suite", "q_knn_graph"),
-                  "graph_ann":
-                      _constituent("pipeline_suite", "q_graph_ann"),
-                  "nb_calibration":
-                      _constituent("pipeline_suite", "q_nb_calibration"),
-                  "ohlc_bars":
-                      _constituent("analytics_suite", "q_ohlc_bars"),
-                  "golden_records":
-                      _constituent("analytics_suite", "q_golden_records"),
-                  "theil_sen":
-                      _constituent("analytics_suite", "q_theil_sen"),
-                  "incremental_knn":
-                      _constituent("pipeline_suite", "q_incremental_knn"),
-                  "knn_graph_coarse": _knn_coarse_query(),
-                  "graph_ann_coarse": _graph_ann_coarse_query(),
-                  "adamic_adar":
-                      _constituent("analytics_suite", "q_adamic_adar"),
-                  "butterflies":
-                      _constituent("analytics_suite", "q_butterflies"),
-                  "exact_substring":
-                      _constituent("pipeline_suite", "q_exact_substring"),
-                  "exact_quantiles":
-                      _constituent("analytics_suite", "q_exact_quantiles"),
-                  "rfm_scores":
-                      _constituent("analytics_suite", "q_rfm_scores"),
-                  "hll_distinct":
-                      _constituent("analytics_suite", "q_hll_distinct"),
-                  "pareto_docs":
-                      _constituent("pipeline_suite", "q_pareto_docs"),
-                  "dbscan_customers":
-                      _constituent("analytics_suite",
-                                   "q_dbscan_customers"),
-                  "mann_whitney":
-                      _constituent("analytics_suite", "q_mann_whitney"),
-                  "benford_prices":
-                      _constituent("analytics_suite",
-                                   "q_benford_prices"),
-                  "kaplan_meier":
-                      _constituent("analytics_suite", "q_kaplan_meier"),
-                  "log_rank":
-                      _constituent("analytics_suite", "q_log_rank"),
-                  "chi2_weekday":
-                      _constituent("analytics_suite",
-                                   "q_chi2_weekday"),
-                  "mad_outliers":
-                      _constituent("analytics_suite",
-                                   "q_mad_outliers"),
-                  "modularity":
-                      _constituent("analytics_suite", "q_modularity"),
-                  "attribution":
-                      _constituent("analytics_suite",
-                                   "q_attribution"),
-                  "pruning_eval":
-                      _constituent("analytics_suite",
-                                   "q_pruning_eval"),
-                  "random_group_ci":
-                      _constituent("analytics_suite",
-                                   "q_random_group_ci"),
-                  "cuped":
-                      _constituent("analytics_suite", "q_cuped"),
-                  "target_encoding":
-                      _constituent("analytics_suite",
-                                   "q_target_encoding"),
-                  "fdr_battery":
-                      _constituent("analytics_suite", "q_fdr_battery"),
-                  "bpe_encode":
-                      _constituent("pipeline_suite", "q_bpe_encode"),
-                  "pack_bpe":
-                      _constituent("pipeline_suite", "q_pack_bpe"),
-                  "km_variants":
-                      _constituent("analytics_suite", "q_km_variants"),
-                  "domain_gate":
-                      _constituent("pipeline_suite", "q_domain_gate"),
-                  "mw_bucketed_skew": _mw_skew_query(),
-                  "welch_ttest":
-                      _constituent("analytics_suite", "q_welch_ttest"),
-                  "spearman_drift":
-                      _constituent("analytics_suite", "q_spearman_drift"),
-                  "kruskal_wallis":
-                      _constituent("analytics_suite", "q_kruskal_wallis"),
-                  "acf_daily":
-                      _constituent("analytics_suite", "q_acf_daily"),
-                  "msprt":
-                      _constituent("analytics_suite", "q_msprt"),
-                  "heaps_law":
-                      _constituent("pipeline_suite", "q_heaps_law"),
-                  "conformal_nb":
-                      _constituent("pipeline_suite", "q_conformal_nb"),
-                  "gini_spend":
-                      _constituent("analytics_suite", "q_gini_spend"),
-                  "cochran_armitage":
-                      _constituent("analytics_suite",
-                                   "q_cochran_armitage"),
-                  "srm_check":
-                      _constituent("analytics_suite", "q_srm_check"),
-                  "did": _constituent("analytics_suite", "q_did")}
+# Hand-built probes: alternative strategies, non-default knobs and
+# deliberately skewed inputs. Every other probe is a registry name. A
+# hand-built probe shadows a registry name of its own (semantic_dedup
+# probes the exact single-level assign at fixed knobs, beside _coarse).
+CUSTOM = {"span_dedup_digest": _span_query("digest"),
+          "span_dedup_text": _span_query("text"),
+          "semantic_dedup": _semantic_query(None),
+          "semantic_dedup_coarse": _semantic_query(16),
+          "knn_graph_coarse": _knn_coarse_query(),
+          "graph_ann_coarse": _graph_ann_coarse_query(),
+          "int8_over2": _int8_query(2),
+          "int8_over8": _int8_query(8),
+          "mw_bucketed_skew": _mw_skew_query(),
+          "domain_gate_hot": _domain_hot_query(),
+          "ccnet_hot": _ccnet_hot_query()}
 
 
-def _shuffle_state(spark):
-    """(max stage id seen, per-stage shuffle write bytes) from the UI REST
-    API — the public, version-stable way at these metrics. Returns (None,
-    {}) when the UI is off (probe sessions enable it)."""
-    import urllib.request
+def probe_plans() -> dict:
+    """name -> fn(spark, sf_dir): every registry name (a merged entry
+    shadows its same-named constituent), with CUSTOM over both."""
+    from melt_spark.plans.registry import all_named
 
-    base = spark.sparkContext.uiWebUrl
-    if not base:
-        return None, {}
-    app = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(
-                f"{base}/api/v1/applications/{app}/stages?status=complete",
-                timeout=10) as r:
-            stages = json.load(r)
-    except Exception:
-        return None, {}
-    return (max((s["stageId"] for s in stages), default=-1),
-            {s["stageId"]: s.get("shuffleWriteBytes", 0) for s in stages})
+    return {**all_named(), **CUSTOM}
 
 
 def time_queries(spark, sf_dir: str, names, runs: int = 1):
-    """{name: (best sec, shuffle write MB)} — shuffle bytes summed over the
-    stages of the FIRST (cold) run only, identified by stage id (stage
-    eviction of older queries can't skew a forward-only id window)."""
-    from melt_spark.plans.suite import spark_queries
-
-    qs = dict(spark_queries())
-    qs.update(_EXTRA_QUERIES)
+    """{name: (best sec, shuffle write MB)}: bench_some.measure's min over
+    `runs`, and the shuffle write bytes of the FIRST (cold) run, summed
+    over its construction and execution jobs."""
+    plans = probe_plans()
     out = {}
     for name in names:
-        best, shuffle_mb = None, None
-        for i in range(runs):
-            last_id, _ = _shuffle_state(spark)
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-            if i == 0 and last_id is not None:
-                _, per_stage = _shuffle_state(spark)
-                shuffle_mb = round(sum(
-                    b for sid, b in per_stage.items() if sid > last_id)
-                    / 1e6, 1)
-        out[name] = (round(best, 2), shuffle_mb)
+        m = measure(spark, plans[name], sf_dir, runs)
+        written = sum(m[span]["shuffle_write_bytes"]
+                      for span in ("construct", "exec"))
+        out[name] = (round(m["min"], 2), round(written / 1e6, 1))
         spark.catalog.clearCache()
     return out
 
@@ -641,9 +425,7 @@ def main() -> None:
     if missing:
         from melt_spark.session import get_spark
 
-        # UI on: the probe reads per-stage shuffle write bytes (REST API)
-        spark = get_spark("scale-probe",
-                          extra_conf={"spark.ui.enabled": "true"})
+        spark = get_spark("scale-probe")
         if not Path(big_dir, "documents.parquet").exists():
             replicate(spark, sf_dir, big_dir, n)
 
@@ -676,7 +458,8 @@ def main() -> None:
         f"cores, so ideal linear scaling shows ratio ≈ {n} once overheads",
         f"amortize; sub-{n} = overhead-dominated; super-linear = quadratic",
         "candidate blowup or a collapsed partition. Shuffle = total shuffle",
-        "WRITE bytes across the query's stages (UI REST API), cold run.",
+        ("WRITE bytes across the query's stages (Spark status store), "
+         "cold run."),
         "",
         f"| query | 1× sec | {n}× sec | ratio | 1× shuffle MB "
         f"| {n}× shuffle MB |",
@@ -821,7 +604,7 @@ def main() -> None:
         ab = json.loads(ab_path.read_text())
         lines += [
             "## clean_corpus r3-vs-r4 plan head-to-head "
-            "(tools/ab_clean_corpus.py)",
+            "(tools/ab_clean_corpus.py at commit b26f2ed)",
             "",
             "Same session, same constituents (pipeline_suite.q_clean_corpus",
             "only — no mixture_weights on either side), runs alternating",
